@@ -92,7 +92,9 @@ object Tables {
     * this instead of a `count()`: at 100 TB a probe must not cost a
     * corpus pass before the real work starts (guide §6 — the
     * statistics are already in the files). Returns None when the path
-    * isn't readable parquet (callers fall back to counting). */
+    * isn't readable parquet or holds no top-level part file
+    * (partitioned or suffix-less directories) — callers fall back to
+    * counting. */
   def parquetRowCount(spark: SparkSession, path: String): Option[Long] =
     try {
       val conf = spark.sparkContext.hadoopConfiguration
@@ -103,7 +105,10 @@ object Tables {
           fs.listStatus(p).map(_.getPath)
             .filter(_.getName.endsWith(".parquet"))
         else Array(p)
-      Some(files.map { f =>
+      // no top-level part file (a partitioned or suffix-less layout):
+      // the footers here don't cover the table, so let the caller count
+      if (files.isEmpty) None
+      else Some(files.map { f =>
         val r = org.apache.parquet.hadoop.ParquetFileReader.open(
           org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(f, conf))
         try r.getRecordCount finally r.close()

@@ -110,6 +110,13 @@ object CharKGramIndex {
   def load(spark: SparkSession, dir: String): DataFrame =
     spark.read.parquet(dir)
 
+  /** Every dir a chargram store serves from — the gram table (the
+    * store root itself) and its maintenance sidecars (the
+    * [[InvertedIndex.stampDirs]] contract). */
+  private[graft] def stampDirs(dir: String): Seq[String] =
+    dir +: Seq(VocabDfDir, DeletedDocsDir, AppliedOpsDir)
+      .map(n => s"$dir/$n")
+
   private val StagedDir = "_graft_cg_new"
   private val Marker = "_graft_cg_inflight"
 

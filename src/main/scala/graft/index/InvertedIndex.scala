@@ -406,6 +406,14 @@ object InvertedIndex {
     * for min/max pruning. */
   val WriteRowsPerFile: Long = 4L << 20
 
+  /** Every artifact dir a [[write]]-layout store serves from — the
+    * set a serving snapshot's [[graft.query.DirVersion]] stamp folds
+    * when the store carries no [[graft.StoreGen]] marker. */
+  private[graft] def stampDirs(dir: String): Seq[String] =
+    Seq("postings", "term_stats", "doc_map", "corpus_stats",
+      "postings_ranges", "doc_map_ranges", TombstonesDir)
+      .map(n => s"$dir/$n")
+
   def write(ix: Index, dir: String,
             rowsPerFile: Long = WriteRowsPerFile): Unit = {
     val spark = ix.docMap.sparkSession

@@ -298,6 +298,13 @@ object PositionalIndex {
       out.toSeq
     })
 
+  /** Every artifact dir a [[write]]-layout store serves from (the
+    * [[InvertedIndex.stampDirs]] contract). */
+  private[graft] def stampDirs(dir: String): Seq[String] =
+    Seq("pos_postings", "doc_map", "corpus_stats", "pos_postings_ranges",
+      "doc_map_ranges", TombstonesDir)
+      .map(n => s"$dir/$n")
+
   /** Durable layout, same conventions as [[InvertedIndex.write]]:
     * postings range-partitioned + sorted on term (a phrase query's
     * per-term literal filters prune to one file / row group each),

@@ -21,7 +21,10 @@ import org.apache.hadoop.fs.{FileSystem, Path}
   *    stamp moved (the warm no-mutation path pays nothing) and HOLD
   *    their current snapshot while the epoch lives — so every arm
   *    keeps serving the pre-request state no matter how many legs
-  *    have landed;
+  *    have landed. The holders: every server on the shared
+  *    [[graft.query.Snapshot]] ([[graft.query.Bm25Server]], the
+  *    point/phrase/RM3/wildcard servers and their `Loaded*` twins)
+  *    plus [[graft.query.IvfServer]];
   *  - [[end]] deletes the shared file — ONE atomic delete is the
   *    whole commit: every [[pending]] check across every store flips
   *    in the same instant, all arms rebuild to post-request state on
@@ -40,7 +43,11 @@ import org.apache.hadoop.fs.{FileSystem, Path}
   * A server holds its SNAPSHOT — a fresh server built mid-epoch has
   * no pre-request state to hold and serves current best-effort, so
   * coherence guarantees apply to warmed serving nodes (the case the
-  * epoch exists for). */
+  * epoch exists for). A held snapshot that reads part files by name
+  * ([[graft.query.LoadedWildcardServer]]'s routed plans) cannot
+  * outlive a leg that REPLACES those files (the chargram delete's
+  * file surgery) — the same limit as any read beside a commit; the
+  * tombstoning legs leave every held file in place. */
 object Epoch {
 
   /** Per-store pointer marker (`_`-prefixed: invisible to parquet

@@ -740,6 +740,15 @@ object IrSql {
       .orderBy("qid", "rank")
   }
 
+  /** Every artifact and maintenance-sidecar dir of a
+    * [[writeBm25Stats]] store that its serving snapshot reads (the
+    * [[graft.index.InvertedIndex.stampDirs]] contract). */
+  private[graft] def bm25StampDirs(storeDir: String): Seq[String] =
+    Seq("postings", "doclen", "stats", "corpus", TombstonesDir,
+      LazyTombstonesDir, TombCorpusDir, DocGenDir, SupCorpusDir,
+      StatsUpdDir)
+      .map(n => s"$storeDir/$n")
+
   /** INDEX-TIME artifacts for MaxScore retrieval, written as a durable
     * store (the side files a real index carries so query time never
     * rescans the corpus):

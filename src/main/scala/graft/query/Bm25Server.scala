@@ -122,13 +122,14 @@ private[query] case class RefMapQidsLookup(
   * ([[TemplatePool]]).
   *
   * STALENESS: the snapshot (cached join, driver dictionary, (tt, nd)
-  * literals) carries a VERSION STAMP of the store's four artifact
-  * dirs (per-dir parquet file names + sizes + mtimes + footer-tail
-  * CRCs — [[DirVersion]], the serving layer's shared stamp). Every
-  * [[search]] revalidates the stamp (driver-side metadata only, four
-  * listings) and REBUILDS the snapshot when the store moved under it
-  * — so [[graft.queries.IrSql.mergeBm25Stats]] /
-  * `compactBm25Store` / `repairBm25Stats` against a live server are
+  * literals) lives in the shared [[Snapshot]] holder under the
+  * store's VERSION STAMP ([[DirVersion]]: one read of the
+  * [[graft.StoreGen]] generation, or the per-file fold of every
+  * artifact dir when the marker is absent). Every [[search]]
+  * revalidates the stamp (driver-side metadata only) and REBUILDS the
+  * snapshot when the store moved under it — so
+  * [[graft.queries.IrSql.mergeBm25Stats]] / `compactBm25Store` /
+  * `repairBm25Stats` against a live server are
   * detected, never silently served stale. [[refresh]] stays the
   * explicit hammer for layouts where listings can lag (eventually
   * consistent object stores). As everywhere in the serving layer,
@@ -139,21 +140,8 @@ private[query] case class RefMapQidsLookup(
 final class Bm25Server(spark: SparkSession, storeDir: String,
                        topK: Int = 10) {
 
-  private val hfs = new org.apache.hadoop.fs.Path(storeDir)
-    .getFileSystem(spark.sparkContext.hadoopConfiguration)
-
-  /** Stamp of every artifact dir — file names, sizes, mtimes AND
-    * per-file footer-tail CRCs ([[DirVersion]]): a repair/rewrite
-    * that reuses part names within one mtime tick is still caught. */
-  private def storeVersion(): Long =
-    DirVersion.of(hfs, storeDir,
-      Seq("postings", "doclen", "stats", "corpus", "tombstones",
-        "tombstones_lazy", "tomb_corpus", "doc_gen", "sup_corpus",
-        "stats_upd")
-        .map(n => s"$storeDir/$n"))
-
   /** One immutable store snapshot: everything a query touches. */
-  private final class State(val version: Long) {
+  private final class State {
     // pending deletions AND superseded update generations drop at
     // SNAPSHOT build (the shared gen-aware live view — before the
     // cache; zero per-query cost); every maintenance dir rides in
@@ -331,54 +319,25 @@ final class Bm25Server(spark: SparkSession, storeDir: String,
     BatchTmpl(termsRef, dfRef, qidsRef, df)
   }
 
-  private val stateRef = new AtomicReference[State](
-    new State(storeVersion()))
+  private val snapshot = new Snapshot[State](
+    Snapshot.store(spark, storeDir, IrSql.bm25StampDirs(storeDir)),
+    () => new State, _.joined.unpersist(blocking = false))
 
-  stateRef.get.pool.withInstance(false)(_ => ()) // plan+codegen at ctor
-
-  /** The snapshot current against the store's on-disk version —
-    * rebuilds (once, double-checked) when the stamp moved. EXCEPT
-    * inside a read-coherence epoch ([[graft.ops.Epoch]] — checked
-    * only on this already-off-the-warm-path branch): a multi-store
-    * fan-out is mid-flight, so HOLD the pre-request snapshot until
-    * the epoch's single commit point makes every arm's new state
-    * visible in the same instant. */
-  private def current(): State = {
-    val st = stateRef.get
-    if (st.version == storeVersion()) st
-    else if (graft.ops.Epoch.pending(hfs, storeDir)) st
-    else this.synchronized {
-      val held = stateRef.get
-      val v = storeVersion()
-      if (held.version == v) held
-      else {
-        val fresh = new State(v)
-        stateRef.set(fresh)
-        held.joined.unpersist(blocking = false)
-        fresh
-      }
-    }
-  }
+  snapshot.current().pool.withInstance(false)(_ => ()) // plan+codegen at ctor
 
   /** Drop the snapshot and rebuild from the store NOW — the explicit
     * hammer for layouts where directory listings can lag a mutation
     * (eventually consistent object stores); routine staleness after
     * [[graft.queries.IrSql.mergeBm25Stats]] / `compactBm25Store` is
     * already caught per [[search]] by the version stamp. */
-  def refresh(): Unit = this.synchronized {
-    val held = stateRef.get
-    stateRef.set(new State(storeVersion()))
-    held.joined.unpersist(blocking = false)
-    ()
-  }
+  def refresh(): Unit = snapshot.refresh()
 
   /** Both reused physical plans, exposed so the spec can assert the
     * exchange-free invariant (an exchange here is the stale-result
     * trap the [[PointServer]] doc describes). */
   private[graft] def templatePlans
       : Seq[org.apache.spark.sql.execution.SparkPlan] = {
-    val st = current()
-    st.pool.withInstance(false)(t => Seq(
+    snapshot.current().pool.withInstance(false)(t => Seq(
       t.thetaDf.queryExecution.executedPlan,
       t.scoreDf.queryExecution.executedPlan))
   }
@@ -388,7 +347,7 @@ final class Bm25Server(spark: SparkSession, storeDir: String,
     * Unknown terms are ignored; a query with no known term returns
     * empty without running a job. */
   def search(terms: Seq[String]): Seq[(Long, Double)] = {
-    val st = current()
+    val st = snapshot.current()
     val known = terms.distinct.filter(st.stats.contains)
     if (known.isEmpty) return Seq.empty
     val byImpact = known.map(t => t -> st.impact(t))
@@ -396,21 +355,16 @@ final class Bm25Server(spark: SparkSession, storeDir: String,
     val dfm = new java.util.HashMap[UTF8String, java.lang.Long]
     known.foreach(t => dfm.put(UTF8String.fromString(t),
       java.lang.Long.valueOf(st.stats(t)._1)))
-    def setOf(ts: Seq[String]) = {
-      val s = new java.util.HashSet[UTF8String]
-      ts.foreach(t => s.add(UTF8String.fromString(t)))
-      s
-    }
     st.pool.withInstance(false) { t =>
       t.dfMap.set(dfm)
-      t.thetaTerms.set(setOf(Seq(byImpact.head._1)))
+      t.thetaTerms.set(PointServer.utf8Set(Seq(byImpact.head._1)))
       val thetaRows = t.thetaDf.collect()
       val theta =
         if (thetaRows.length < topK) Double.NegativeInfinity
         else thetaRows.last.getDouble(0)
       val ess = IrSql.maxScoreEssential(byImpact, theta)
-      t.scoreTerms.set(setOf(known))
-      t.essTerms.set(setOf(ess))
+      t.scoreTerms.set(PointServer.utf8Set(known))
+      t.essTerms.set(PointServer.utf8Set(ess))
       t.scoreDf.collect()
         .map(r => (r.getLong(0), r.getDouble(1))).toSeq
     }
@@ -430,7 +384,7 @@ final class Bm25Server(spark: SparkSession, storeDir: String,
     * yields no rows. */
   def searchBatch(queries: Seq[(Long, Seq[String])])
       : Seq[(Long, Long, Long, Double)] = {
-    val st = current()
+    val st = snapshot.current()
     val termQids = new java.util.HashMap[UTF8String, Array[Long]]()
     val dfm = new java.util.HashMap[UTF8String, java.lang.Long]
     val tset = new java.util.HashSet[UTF8String]
@@ -457,7 +411,7 @@ final class Bm25Server(spark: SparkSession, storeDir: String,
   /** The batch template's reused plan (spec hook: exchange-free). */
   private[graft] def batchTemplatePlan
       : org.apache.spark.sql.execution.SparkPlan =
-    current().batchPool.withInstance(())(
+    snapshot.current().batchPool.withInstance(())(
       _.df.queryExecution.executedPlan)
 
   /** [[search]] with the CANDIDATES restricted to `keep` — the served
@@ -474,14 +428,13 @@ final class Bm25Server(spark: SparkSession, storeDir: String,
   def searchFiltered(terms: Seq[String],
                      keep: java.util.HashSet[java.lang.Long])
       : Seq[(Long, Double)] = {
-    val st = current()
+    val st = snapshot.current()
     val known = terms.distinct.filter(st.stats.contains)
     if (known.isEmpty) return Seq.empty
     val dfm = new java.util.HashMap[UTF8String, java.lang.Long]
     known.foreach(t => dfm.put(UTF8String.fromString(t),
       java.lang.Long.valueOf(st.stats(t)._1)))
-    val set = new java.util.HashSet[UTF8String]
-    known.foreach(t => set.add(UTF8String.fromString(t)))
+    val set = PointServer.utf8Set(known)
     st.pool.withInstance(true) { t =>
       t.dfMap.set(dfm)
       t.keep.set(keep)

@@ -4,9 +4,12 @@ import org.apache.hadoop.fs.{FileSystem, Path}
 
 /** Directory-set VERSION STAMP for durable serving stores — the one
   * definition of "the store moved" shared by every stamped server
-  * ([[Bm25Server]], [[PointServer]]/[[PhraseServer]]/[[Rm3Server]]
-  * store-backed forms, [[LoadedPointServer]], [[LoadedPhraseServer]];
-  * the cell-granular vector stores keep [[CellVersion]], same family).
+  * through the [[Snapshot]] holder ([[Bm25Server]],
+  * [[PointServer]]/[[PhraseServer]]/[[Rm3Server]] store-backed forms,
+  * [[LoadedPointServer]], [[LoadedPhraseServer]], [[WildcardServer]],
+  * [[LoadedWildcardServer]]; each store defines its dir list once,
+  * next to its writer — `stampDirs`; the cell-granular vector stores
+  * keep [[CellVersion]], same family).
   *
   * Per directory, folds each parquet part file's NAME, SIZE, MTIME,
   * and a CRC32 of its LAST 64 bytes. The tail of a parquet file is

@@ -1,17 +1,12 @@
 package graft.query
 
-import java.util.concurrent.atomic.AtomicReference
-
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graft.Bridge
-import org.apache.spark.unsafe.types.UTF8String
+import org.apache.spark.sql.SparkSession
 import graft.index.PositionalIndex
 import graft.text.TextPipeline
 
 /** Routed prepared-plan phrase serving over a LOADED (pure-parquet)
   * positional index — [[LoadedPointServer]]'s zone-map pattern applied
-  * to [[PhraseServer]]'s exchange-free two-word template.
+  * to [[PhraseServer]]'s exchange-free phrase templates.
   *
   * [[PhraseServer]] is documented cached-only: its opaque
   * [[RefSetContains]] predicate defeats parquet pushdown, so over
@@ -22,7 +17,7 @@ import graft.text.TextPipeline
   *
   *  - [[PositionalIndex.write]] persists per-file term-range manifests
   *    (`pos_postings_ranges`); opening the server reads them once.
-  *  - A phrase's two terms route to their covering files by range
+  *  - A phrase's terms route to their covering files by range
   *    lookup — the prepared scan is file-bounded BY CONSTRUCTION, so
   *    the opaque predicate no longer needs pushdown.
   *  - Per file set, an LRU-cached template runs the same exchange-free
@@ -46,11 +41,10 @@ import graft.text.TextPipeline
   * query.
   *
   * STALENESS: the snapshot (range manifests, loaded frames, plan
-  * pools) lives in a versioned State revalidated per public call
-  * against a [[DirVersion]] stamp of the five positional artifact
-  * dirs — a [[PositionalIndex.merge]]-then-write of the same
-  * directory under a live server is detected and the manifests
-  * re-read (previously they were read ONCE at open, so a merged index
+  * pools) lives in the shared [[Snapshot]] holder, revalidated per
+  * public call against the store's [[DirVersion]] stamp — a
+  * [[PositionalIndex.merge]]-then-write of the same directory under a
+  * live server is detected and the manifests re-read (previously they were read ONCE at open, so a merged index
   * was silently routed with the pre-merge ranges — exactly the hazard
   * the q36_phrase_merged delta path arms). [[refresh]] stays the
   * explicit hammer for layouts where listings can lag.
@@ -59,177 +53,53 @@ import graft.text.TextPipeline
   * shape) [[TemplatePool]]s — each query borrows its own instance
   * for the set-refs-then-collect window. */
 final class LoadedPhraseServer(spark: SparkSession, dir: String,
-                               topK: Int = 10, maxPlans: Int = 64) {
-
-  private val hfs = new org.apache.hadoop.fs.Path(dir)
-    .getFileSystem(spark.sparkContext.hadoopConfiguration)
-
-  private def storeVersion(): Long =
-    DirVersion.of(hfs, dir,
-      Seq("pos_postings", "doc_map", "corpus_stats",
-        "pos_postings_ranges", "doc_map_ranges", "tombstones")
-        .map(n => s"$dir/$n"))
-
-  private def newRef() =
-    new AtomicReference[java.util.HashSet[UTF8String]](new java.util.HashSet)
-
-  private final case class PhraseTmpl(
-      both: AtomicReference[java.util.HashSet[UTF8String]],
-      slots: IndexedSeq[AtomicReference[java.util.HashSet[UTF8String]]],
-      df: DataFrame)
-  private final case class ResolveTmpl(
-      ref: AtomicReference[java.util.HashSet[java.lang.Long]], df: DataFrame)
-  private final case class NearTmpl(
-      both: AtomicReference[java.util.HashSet[UTF8String]],
-      slotA: AtomicReference[java.util.HashSet[UTF8String]],
-      slotB: AtomicReference[java.util.HashSet[UTF8String]],
-      df: DataFrame)
+                               topK: Int = 10) {
+  import PhraseServer.{NearTmpl, PhraseTmpl}
 
   /** One immutable snapshot of the on-disk index: loaded frames,
-    * routing manifests, plan pools (keyed by file names, which a
-    * rewrite changes). */
-  private final class State(val version: Long) {
+    * routing state, plan pools (keyed by file names, which a rewrite
+    * changes). */
+  private final class State {
     val pix: PositionalIndex.PIndex = PositionalIndex.load(spark, dir)
+    val routed = new Routing.Routed(spark, dir, "pos_postings_ranges",
+      pix.docMap.schema, PositionalIndex.readTombs(spark, dir))
 
-    val postRanges: Array[(String, String, String)] =
-      Routing.stringRanges(spark, s"$dir/pos_postings_ranges")
-    val docRanges: Array[(Long, Long, String)] =
-      Routing.longRanges(spark, s"$dir/doc_map_ranges")
-
-    // PENDING DELETIONS: the templates scan part files directly
-    // (bypassing load()'s anti-join), so the tombstoned docnos load
-    // into a driver set here and every template built under this
-    // State filters them out ([[PositionalIndex.deleteDocs]] keeps
-    // the set request-sized; the tombstones dir rides in the stamp,
-    // so a delete under a live server rebuilds the State)
-    val tombs: java.util.HashSet[java.lang.Long] = {
-      val s = new java.util.HashSet[java.lang.Long]()
-      PositionalIndex.readTombs(spark, dir).foreach(
-        _.collect().foreach(r => s.add(r.getLong(0))))
-      s
-    }
-
+    private def scan(files: Seq[String]) =
+      routed.scan(pix.postings.schema, files)
     val phrasePlans = new TemplatePool[(Seq[String], Int), PhraseTmpl](
-      { case (files, n) => buildPhrase(this, files, n) }, maxKeys = maxPlans)
-    val resolvePlans = new TemplatePool[Seq[String], ResolveTmpl](
-      fs => buildResolve(this, fs), maxKeys = maxPlans)
+      { case (files, n) => PhraseServer.phraseTmpl(scan(files), n, topK) })
     val nearPlans = new TemplatePool[(Seq[String], Int, Boolean), NearTmpl](
-      { case (files, w, o) => buildNear(this, files, w, o) },
-      maxKeys = maxPlans)
-  }
+      { case (files, w, o) =>
+        PhraseServer.nearTmpl(scan(files), w, o, topK) })
 
-  private def buildPhrase(st: State, files: Seq[String],
-                          n: Int): PhraseTmpl = {
-    val both = newRef()
-    val slots = IndexedSeq.fill(n)(newRef())
-    def in(ref: AtomicReference[java.util.HashSet[UTF8String]]) =
-      Bridge.column(RefSetContains(Bridge.expression(col("term")), ref))
-    val slotAggs = (0 until n).map { i =>
-      first(when(in(slots(i)), col("positions")), ignoreNulls = true)
-        .as(s"p$i")
+    /** The files holding every term, or None when some term is outside
+      * every file's range (it has no postings, so no doc can match —
+      * answer without running any job). */
+    def files(terms: Seq[String]): Option[Seq[String]] = {
+      val routes = terms.map(t => Routing.route(routed.postRanges, t))
+      if (routes.exists(_.isEmpty)) None
+      else Some(routes.flatten.distinct.sorted)
     }
-    val allPresent = (0 until n).map(i => col(s"p$i").isNotNull)
-      .reduce(_ && _)
-    val run = (1 until n).foldLeft(col("p0")) { (acc, i) =>
-      array_intersect(acc, transform(col(s"p$i"), x => x - i))
-    }
-    // explicit schema: no inference job when the plan is first built
-    val df = liveScan(st, files)
-      .filter(in(both)).coalesce(1)
-      .groupBy(col("docno"))
-      .agg(slotAggs.head, slotAggs.tail: _*)
-      .filter(allPresent)
-      .select(col("docno"), size(run).cast("long").as("phrase_tf"))
-      .filter(col("phrase_tf") > 0)
-      .orderBy(col("phrase_tf").desc, col("docno"))
-      .limit(topK)
-    df.queryExecution.executedPlan // plan + codegen now, not per query
-    PhraseTmpl(both, slots, df)
+
+    /** Route the ≤topK docnos to their map files and resolve to
+      * docids — (docid, tf) by tf desc, docid asc. */
+    def resolve(top: Seq[(Long, Long)]): Seq[(String, Long)] =
+      PhraseServer.byDocid(top, routed.resolve(top.map(_._1)))
   }
 
-  /** A postings-file scan minus the State's tombstoned docnos (the
-    * filter is added only when deletions are pending, so the common
-    * tombstone-free plan is unchanged). */
-  private def liveScan(st: State,
-                       files: Seq[String]): DataFrame = {
-    val scan = spark.read.schema(st.pix.postings.schema)
-      .parquet(files: _*)
-    if (st.tombs.isEmpty) scan
-    else scan.filter(!Bridge.column(RefLongSetContains(
-      Bridge.expression(col("docno")),
-      new AtomicReference(st.tombs))))
-  }
-
-  private def buildResolve(st: State, files: Seq[String]): ResolveTmpl = {
-    val ref = new AtomicReference[java.util.HashSet[java.lang.Long]](
-      new java.util.HashSet)
-    val inDocs =
-      Bridge.column(RefLongSetContains(Bridge.expression(col("docno")), ref))
-    val df = spark.read.schema(st.pix.docMap.schema).parquet(files: _*)
-      .filter(inDocs).coalesce(1)
-      .select(col("docno"), col("docid"))
-    df.queryExecution.executedPlan
-    ResolveTmpl(ref, df)
-  }
-
-  private def buildNear(st: State, files: Seq[String], window: Int,
-                        ordered: Boolean): NearTmpl = {
-    val both = newRef()
-    val slotA = newRef()
-    val slotB = newRef()
-    def in(ref: AtomicReference[java.util.HashSet[UTF8String]]) =
-      Bridge.column(RefSetContains(Bridge.expression(col("term")), ref))
-    val df = liveScan(st, files)
-      .filter(in(both)).coalesce(1)
-      .groupBy(col("docno"))
-      .agg(
-        first(when(in(slotA), col("positions")), ignoreNulls = true)
-          .as("p0"),
-        first(when(in(slotB), col("positions")), ignoreNulls = true)
-          .as("p1"))
-      .filter(col("p0").isNotNull && col("p1").isNotNull)
-      .select(col("docno"),
-        PositionalIndex.nearPairCount(col("p0"), col("p1"),
-          window, ordered).as("near_tf"))
-      .filter(col("near_tf") > 0)
-      .orderBy(col("near_tf").desc, col("docno"))
-      .limit(topK)
-    df.queryExecution.executedPlan
-    NearTmpl(both, slotA, slotB, df)
-  }
-
-  private val stateRef = new AtomicReference[State](
-    new State(storeVersion()))
-
-  /** The snapshot current against the on-disk version — rebuilds
-    * (once, double-checked) when the stamp moved. */
-  private def current(): State = {
-    val st = stateRef.get
-    if (st.version == storeVersion()) st
-    else this.synchronized {
-      val held = stateRef.get
-      val v = storeVersion()
-      if (held.version == v) held
-      else {
-        val fresh = new State(v)
-        stateRef.set(fresh)
-        fresh
-      }
-    }
-  }
+  private val snapshot = new Snapshot[State](
+    Snapshot.store(spark, dir, PositionalIndex.stampDirs(dir)),
+    () => new State, _ => ())
 
   /** Drop the snapshot and re-read the manifests NOW — the explicit
     * hammer for layouts where directory listings can lag a mutation;
     * routine staleness is already caught per query by the stamp. */
-  def refresh(): Unit = this.synchronized {
-    stateRef.set(new State(storeVersion()))
-    ()
-  }
+  def refresh(): Unit = snapshot.refresh()
 
   /** The loaded index, for callers that also want analytic plans (near/
     * nearOrdered/snippet — literal-filtered, parquet-pruned) over the
     * same artifacts. */
-  def index: PositionalIndex.PIndex = current().pix
+  def index: PositionalIndex.PIndex = snapshot.current().pix
 
   /** Top-k (docid, near_tf), tf desc then docid asc — the
     * [[PositionalIndex.nearTopK]] RANKED serving contract from pure
@@ -239,80 +109,33 @@ final class LoadedPhraseServer(spark: SparkSession, dir: String,
     * term pair's corpus frequency. */
   def near(termA: String, termB: String, window: Int,
            ordered: Boolean = false): Seq[(String, Long)] = {
-    val st = current()
-    val ta = TextPipeline.processContent(termA)
-    val tb = TextPipeline.processContent(termB)
-    require(ta.size == 1 && tb.size == 1,
-      s"near takes single non-stopword terms, got '$termA'/'$termB'")
-    val routed = Seq(ta.head, tb.head)
-      .map(t => Routing.route(st.postRanges, t))
-    if (routed.exists(_.isEmpty)) return Seq.empty
-    val files = routed.flatten.distinct.sorted
-    def set(ts: String*) = {
-      val s = new java.util.HashSet[UTF8String]()
-      ts.foreach(x => s.add(UTF8String.fromString(x)))
-      s
+    val st = snapshot.current()
+    val (a, b) = PhraseServer.nearTerms(termA, termB)
+    st.files(Seq(a, b)).fold(Seq.empty[(String, Long)]) { files =>
+      st.resolve(st.nearPlans.withInstance((files, window, ordered))(
+        _.top(a, b)))
     }
-    val top = st.nearPlans.withInstance((files, window, ordered)) { t =>
-      t.both.set(set(ta.head, tb.head))
-      t.slotA.set(set(ta.head))
-      t.slotB.set(set(tb.head))
-      t.df.collect().map(r => (r.getLong(0), r.getLong(1)))
-    }
-    resolve(st, top.toSeq)
   }
 
   /** Exposed for the exchange-free plan-walk assertion (see
     * [[PointServer.templatePlan]]). */
   private[graft] def templatePlan(files: Seq[String], n: Int = 2)
       : org.apache.spark.sql.execution.SparkPlan =
-    current().phrasePlans.withInstance((files, n))(
+    snapshot.current().phrasePlans.withInstance((files, n))(
       _.df.queryExecution.executedPlan)
-
-  /** Route the ≤topK docnos to their map files and resolve to docids,
-    * dropping unresolved rows (inner-join semantics). */
-  private def resolve(st: State,
-                      top: Seq[(Long, Long)]): Seq[(String, Long)] = {
-    if (top.isEmpty) return Seq.empty
-    val docFiles = top.map(_._1)
-      .flatMap(d => Routing.route(st.docRanges, d)).distinct.sorted
-    if (docFiles.isEmpty) return Seq.empty
-    val dset = new java.util.HashSet[java.lang.Long]()
-    top.foreach(x => dset.add(x._1))
-    val ids = st.resolvePlans.withInstance(docFiles) { rt =>
-      rt.ref.set(dset)
-      rt.df.collect().map(r => r.getLong(0) -> r.getString(1)).toMap
-    }
-    top.flatMap { case (d, tf) => ids.get(d).map(id => (id, tf)) }
-      .sortBy { case (docid, tf) => (-tf, docid) }
-  }
 
   /** Top-k (docid, phrase_tf), tf desc then docid asc — the
     * [[PhraseServer.phrase]] output contract, served from pure parquet
     * artifacts. */
   def phrase(phraseText: String): Seq[(String, Long)] = {
-    val st = current()
+    val st = snapshot.current()
     val terms = TextPipeline.processContent(phraseText)
     if (terms.isEmpty) return Seq.empty
     if (terms.size > PhraseServer.MaxSlots)
-      return PositionalIndex.phrase(st.pix, phraseText)
-        .limit(topK).collect()
-        .map(r => (r.getString(0), r.getLong(1))).toSeq
-    val routed = terms.map(t => Routing.route(st.postRanges, t))
-    // a term outside every file's range has no postings, so no doc can
-    // hold the phrase — answer without running any job
-    if (routed.exists(_.isEmpty)) return Seq.empty
-    val files = routed.flatten.distinct.sorted
-    def set(ts: String*) = {
-      val s = new java.util.HashSet[UTF8String]()
-      ts.foreach(x => s.add(UTF8String.fromString(x)))
-      s
+      return PhraseServer.freshPhrase(st.pix, phraseText, topK)
+    st.files(terms).fold(Seq.empty[(String, Long)]) { files =>
+      st.resolve(st.phrasePlans.withInstance((files, terms.size))(
+        _.top(terms)))
     }
-    val top = st.phrasePlans.withInstance((files, terms.size)) { t =>
-      t.both.set(set(terms: _*))
-      terms.indices.foreach(i => t.slots(i).set(set(terms(i))))
-      t.df.collect().map(r => (r.getLong(0), r.getLong(1)))
-    }
-    resolve(st, top.toSeq)
   }
 }

@@ -2,15 +2,11 @@ package graft.query
 
 import java.util.concurrent.atomic.AtomicReference
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, Predicate, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
-import org.apache.spark.sql.expressions.Window
-import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graft.Bridge
 import org.apache.spark.sql.types.LongType
-import org.apache.spark.unsafe.types.UTF8String
 
 /** [[RefSetContains]]' Long twin, for the docno resolve template. */
 private[query] case class RefLongSetContains(
@@ -72,8 +68,8 @@ private[query] case class RefLongSetContains(
   * [[QueryEngine.serveSearch]] on the same loaded index.
   *
   * STALENESS: the snapshot (zone-map manifests, nDocs, plan pools)
-  * lives in a versioned State revalidated per [[search]] against a
-  * [[DirVersion]] stamp of the five index artifact dirs — an
+  * lives in the shared [[Snapshot]] holder, revalidated per [[search]]
+  * against the store's [[DirVersion]] stamp — an
   * [[graft.index.InvertedIndex.merge]]-then-[[graft.index
   * .InvertedIndex.write]] of the SAME directory under a live server
   * is detected and the manifests re-read (the [[Bm25Server]]
@@ -86,164 +82,60 @@ private[query] case class RefLongSetContains(
   * [[TemplatePool]]s — each query borrows its own instance for the
   * set-refs-then-collect window. */
 final class LoadedPointServer(spark: SparkSession, dir: String,
-                              topK: Int = 10, maxPlans: Int = 64) {
-
-  private val hfs = new org.apache.hadoop.fs.Path(dir)
-    .getFileSystem(spark.sparkContext.hadoopConfiguration)
-
-  private def storeVersion(): Long =
-    DirVersion.of(hfs, dir,
-      Seq("postings", "doc_map", "corpus_stats", "postings_ranges",
-        "doc_map_ranges", "tombstones").map(n => s"$dir/$n"))
-
-  private final case class ScoreTmpl(
-      ref: AtomicReference[java.util.HashSet[UTF8String]], df: DataFrame)
-  private final case class ResolveTmpl(
-      ref: AtomicReference[java.util.HashSet[java.lang.Long]], df: DataFrame)
+                              topK: Int = 10) {
 
   /** One immutable snapshot of the on-disk index: loaded frames,
-    * routing manifests, and the plan pools keyed by their file names
-    * (a rewrite changes file names, so stale plans can't be reused
-    * across a State swap even by accident). */
-  private final class State(val version: Long) {
+    * routing state, and the score plans keyed by their file names (a
+    * rewrite changes file names, so stale plans can't be reused
+    * across a snapshot swap even by accident). */
+  private final class State {
     val ix: graft.index.InvertedIndex.Index =
       graft.index.InvertedIndex.load(spark, dir)
+    val routed = new Routing.Routed(spark, dir, "postings_ranges",
+      ix.docMap.schema, graft.index.InvertedIndex.readTombs(spark, dir))
+    val scorePlans = new TemplatePool[Seq[String], PointServer.ScoreTmpl](
+      files => PointServer.scoreTmpl(
+        routed.scan(ix.postings.schema, files), ix.nDocs, topK))
 
-    // write-time zone-map manifests → driver-side routing ([[Routing]])
-    val postRanges: Array[(String, String, String)] =
-      Routing.stringRanges(spark, s"$dir/postings_ranges")
-    val docRanges: Array[(Long, Long, String)] =
-      Routing.longRanges(spark, s"$dir/doc_map_ranges")
-
-    val scorePlans = new TemplatePool[Seq[String], ScoreTmpl](
-      fs => buildScore(this, fs), maxKeys = maxPlans)
-    val resolvePlans = new TemplatePool[Seq[String], ResolveTmpl](
-      fs => buildResolve(this, fs), maxKeys = maxPlans)
-
-    // PENDING DELETIONS: the templates scan part files directly
-    // (bypassing load()'s anti-join), so the tombstoned docnos load
-    // into a driver set and every template built under this State
-    // filters them out (the LoadedPhraseServer discipline; the
-    // tombstones dir rides in the stamp)
-    val tombs: java.util.HashSet[java.lang.Long] = {
-      val s = new java.util.HashSet[java.lang.Long]()
-      graft.index.InvertedIndex.readTombs(spark, dir).foreach(
-        _.collect().foreach(r => s.add(r.getLong(0))))
-      s
-    }
+    def files(terms: Seq[String]): Seq[String] =
+      terms.flatMap(t => Routing.route(routed.postRanges, t)).distinct.sorted
   }
 
-  private def buildScore(st: State, files: Seq[String]): ScoreTmpl = {
-    val ref =
-      new AtomicReference[java.util.HashSet[UTF8String]](new java.util.HashSet)
-    val inTerms =
-      Bridge.column(RefSetContains(Bridge.expression(col("kgram")), ref))
-    // explicit schema: no inference job when the plan is first built;
-    // pending deletions filter out at the scan (tombstone-free States
-    // keep the unfiltered plan)
-    val scan0 = spark.read.schema(st.ix.postings.schema)
-      .parquet(files: _*)
-    val scan =
-      if (st.tombs.isEmpty) scan0
-      else scan0.filter(!Bridge.column(RefLongSetContains(
-        Bridge.expression(col("docno")),
-        new AtomicReference(st.tombs))))
-    val df = scan
-      .filter(inTerms).coalesce(1)
-      .withColumn("df",
-        count(lit(1)).over(Window.partitionBy(col("kgram"))))
-      .groupBy(col("docno"))
-      .agg(sum((lit(1.0) + log(col("tf"))) *
-        log10(lit(st.ix.nDocs.toDouble) / col("df").cast("double"))).as("s0"))
-      .select(col("docno"), round(col("s0"), 4).as("score"))
-      .orderBy(col("score").desc, col("docno"))
-      .limit(topK)
-    df.queryExecution.executedPlan // plan + codegen now, not per query
-    ScoreTmpl(ref, df)
-  }
-
-  private def buildResolve(st: State, files: Seq[String]): ResolveTmpl = {
-    val ref = new AtomicReference[java.util.HashSet[java.lang.Long]](
-      new java.util.HashSet)
-    val inDocs =
-      Bridge.column(RefLongSetContains(Bridge.expression(col("docno")), ref))
-    val df = spark.read.schema(st.ix.docMap.schema).parquet(files: _*)
-      .filter(inDocs).coalesce(1)
-      .select(col("docno"), col("docid"))
-    df.queryExecution.executedPlan
-    ResolveTmpl(ref, df)
-  }
-
-  private val stateRef = new AtomicReference[State](
-    new State(storeVersion()))
-
-  /** The snapshot current against the on-disk version — rebuilds
-    * (once, double-checked) when the stamp moved. */
-  private def current(): State = {
-    val st = stateRef.get
-    if (st.version == storeVersion()) st
-    else this.synchronized {
-      val held = stateRef.get
-      val v = storeVersion()
-      if (held.version == v) held
-      else {
-        val fresh = new State(v)
-        stateRef.set(fresh)
-        fresh
-      }
-    }
-  }
+  private val snapshot = new Snapshot[State](
+    Snapshot.store(spark, dir, graft.index.InvertedIndex.stampDirs(dir)),
+    () => new State, _ => ())
 
   /** Drop the snapshot and re-read the manifests NOW — the explicit
     * hammer for layouts where directory listings can lag a mutation;
     * routine staleness is already caught per [[search]] by the
     * version stamp. */
-  def refresh(): Unit = this.synchronized {
-    stateRef.set(new State(storeVersion()))
-    ()
-  }
+  def refresh(): Unit = snapshot.refresh()
 
   /** The loaded index, for callers that also want analytic plans over
     * the same artifacts. */
-  def index: graft.index.InvertedIndex.Index = current().ix
+  def index: graft.index.InvertedIndex.Index = snapshot.current().ix
 
   /** The score template's executed plan for a term's file set (spec
     * hook: the exchange-free invariant that makes plan reuse safe). */
   private[graft] def templatePlan(query: String)
       : org.apache.spark.sql.execution.SparkPlan = {
-    val st = current()
-    val files = QueryEngine.requireArity(query)
-      .flatMap(t => Routing.route(st.postRanges, t)).distinct.sorted
-    st.scorePlans.withInstance(files)(_.df.queryExecution.executedPlan)
+    val st = snapshot.current()
+    st.scorePlans.withInstance(st.files(QueryEngine.requireArity(query)))(
+      _.df.queryExecution.executedPlan)
   }
 
   /** (docno, docid, score) rows, score desc then docno asc — the same
     * output contract as [[QueryEngine.serveSearch]] /
     * [[PointServer.search]]. */
   def search(query: String): Seq[(Long, String, Double)] = {
-    val st = current()
+    val st = snapshot.current()
     val terms = QueryEngine.requireArity(query)
     if (terms.isEmpty) return Seq.empty // stopword-only: no job at all
-    val files = terms.flatMap(t => Routing.route(st.postRanges, t))
-      .distinct.sorted
+    val files = st.files(terms)
     if (files.isEmpty) return Seq.empty // no term in any file's range
-    val set = new java.util.HashSet[UTF8String]()
-    terms.foreach(t => set.add(UTF8String.fromString(t)))
-    val top = st.scorePlans.withInstance(files) { s =>
-      s.ref.set(set)
-      s.df.collect().map(r => (r.getLong(0), r.getDouble(1)))
-    }
-    if (top.isEmpty) return Seq.empty
-    val docFiles = top.map(_._1).toSeq
-      .flatMap(d => Routing.route(st.docRanges, d)).distinct.sorted
-    if (docFiles.isEmpty) return Seq.empty
-    val dset = new java.util.HashSet[java.lang.Long]()
-    top.foreach(t => dset.add(t._1))
-    val ids = st.resolvePlans.withInstance(docFiles) { rt =>
-      rt.ref.set(dset)
-      rt.df.collect().map(r => r.getLong(0) -> r.getString(1)).toMap
-    }
+    val top = st.scorePlans.withInstance(files)(_.top(terms))
     // inner-join semantics: a docno the map cannot resolve is dropped
-    top.toSeq.flatMap { case (d, s) => ids.get(d).map(id => (d, id, s)) }
+    val ids = st.routed.resolve(top.map(_._1))
+    top.flatMap { case (d, s) => ids.get(d).map(id => (d, id, s)) }
   }
 }

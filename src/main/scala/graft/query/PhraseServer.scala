@@ -58,38 +58,20 @@ import graft.index.PositionalIndex.PIndex
   *
   * STALENESS: a server handed an in-memory [[PIndex]] serves that
   * SNAPSHOT (the struct is immutable; a merge builds a new PIndex).
-  * The store-backed form ([[PhraseServer.overStore]]) revalidates a
-  * [[DirVersion]] stamp of the written artifacts per query and
-  * rebuilds the snapshot when the directory moved — a
+  * The store-backed form ([[PhraseServer.overStore]]) revalidates the
+  * store's [[DirVersion]] stamp per query through the shared
+  * [[Snapshot]] holder and rebuilds when the directory moved — a
   * [[PositionalIndex.merge]]-then-write under a live server is
   * detected, never silently served stale. [[refresh]] is the explicit
   * hammer for listing-lagging layouts. */
 final class PhraseServer private (
-    pix0: PIndex, topK: Int, maxTemplateDocs: Long,
-    reload: Option[() => PIndex], version: Option[() => Long]) {
-  import PhraseServer.MaxSlots
+    source: Snapshot.Source[PIndex], topK: Int, maxTemplateDocs: Long) {
+  import PhraseServer.{MaxSlots, NearTmpl, PhraseTmpl}
 
   /** Snapshot-serving constructor over a caller-owned (cached) index. */
   def this(pix: PIndex, topK: Int = 10,
            maxTemplateDocs: Long = PhraseServer.MaxTemplateDocs) =
-    this(pix, topK, maxTemplateDocs, None, None)
-
-  private def newRef() =
-    new AtomicReference[java.util.HashSet[UTF8String]](new java.util.HashSet)
-
-  private final case class Tmpl(
-      both: AtomicReference[java.util.HashSet[UTF8String]],
-      slots: IndexedSeq[AtomicReference[java.util.HashSet[UTF8String]]],
-      df: DataFrame)
-
-  private final case class NearTmpl(
-      both: AtomicReference[java.util.HashSet[UTF8String]],
-      slotA: AtomicReference[java.util.HashSet[UTF8String]],
-      slotB: AtomicReference[java.util.HashSet[UTF8String]],
-      df: DataFrame)
-
-  private def in(ref: AtomicReference[java.util.HashSet[UTF8String]]): Column =
-    Bridge.column(RefSetContains(Bridge.expression(col("term")), ref))
+    this(Snapshot.fixed(pix), topK, maxTemplateDocs)
 
   // phrase length → POOLED templates (round 9): each query borrows
   // its own instance for the set-refs-then-collect window, so
@@ -99,103 +81,32 @@ final class PhraseServer private (
   // per-doc scoring is then identical to PositionalIndex.nearTopK's),
   // so templates key on (window, ordered). Interactive use touches a
   // handful of window values; each builds once, lazily.
-  private final class State(val version: Long, val pix: PIndex) {
+  private final class State(val pix: PIndex) {
     /** Whether prepared templates serve queries (corpus under the
       * guard); past the bound everything routes to the fresh plans. */
     val usesTemplates: Boolean = pix.nDocs <= maxTemplateDocs
-    val templates = new TemplatePool[Int, Tmpl](n => buildTmpl(pix, n))
+    val templates = new TemplatePool[Int, PhraseTmpl](
+      n => PhraseServer.phraseTmpl(pix.postings, n, topK))
     val nearTemplates = new TemplatePool[(Int, Boolean), NearTmpl](
-      { case (w, o) => buildNear(pix, w, o) })
+      { case (w, o) => PhraseServer.nearTmpl(pix.postings, w, o, topK) })
+
+    /** Fresh tiny literal-isin resolution (the PointServer
+      * rationale), then (docid, tf) by tf desc, docid asc. */
+    def resolve(top: Seq[(Long, Long)]): Seq[(String, Long)] =
+      PhraseServer.byDocid(top,
+        PointServer.resolveLiteral(pix.docMap, top.map(_._1)))
   }
 
-  private def buildTmpl(pix: PIndex, n: Int): Tmpl = {
-    val both = newRef()
-    val slots = IndexedSeq.fill(n)(newRef())
-    val slotAggs = (0 until n).map { i =>
-      first(when(in(slots(i)), col("positions")), ignoreNulls = true)
-        .as(s"p$i")
-    }
-    val allPresent = (0 until n).map(i => col(s"p$i").isNotNull)
-      .reduce(_ && _)
-    // left-fold shifted intersection: positions where term_0 starts a
-    // full n-term run — identical to PositionalIndex.phrase's fold
-    val run = (1 until n).foldLeft(col("p0")) { (acc, i) =>
-      array_intersect(acc, transform(col(s"p$i"), x => x - i))
-    }
-    val df = pix.postings.filter(in(both)).coalesce(1)
-      .groupBy(col("docno"))
-      .agg(slotAggs.head, slotAggs.tail: _*)
-      .filter(allPresent)
-      .select(col("docno"), size(run).cast("long").as("phrase_tf"))
-      .filter(col("phrase_tf") > 0)
-      .orderBy(col("phrase_tf").desc, col("docno"))
-      .limit(topK)
-    df.queryExecution.executedPlan // plan + codegen now, not per query
-    Tmpl(both, slots, df)
-  }
+  private val snapshot = new Snapshot[State](source.stamp,
+    () => new State(source.load()), st => source.release(st.pix))
 
-  private def buildNear(pix: PIndex, window: Int,
-                        ordered: Boolean): NearTmpl = {
-    val both = newRef()
-    val slotA = newRef()
-    val slotB = newRef()
-    val df = pix.postings.filter(in(both)).coalesce(1)
-      .groupBy(col("docno"))
-      .agg(
-        first(when(in(slotA), col("positions")), ignoreNulls = true)
-          .as("p0"),
-        first(when(in(slotB), col("positions")), ignoreNulls = true)
-          .as("p1"))
-      .filter(col("p0").isNotNull && col("p1").isNotNull)
-      .select(col("docno"),
-        PositionalIndex.nearPairCount(col("p0"), col("p1"),
-          window, ordered).as("near_tf"))
-      .filter(col("near_tf") > 0)
-      .orderBy(col("near_tf").desc, col("docno"))
-      .limit(topK)
-    df.queryExecution.executedPlan
-    NearTmpl(both, slotA, slotB, df)
-  }
-
-  private def storeVersion(): Long = version.fold(0L)(_())
-
-  private val stateRef = new AtomicReference[State](
-    new State(storeVersion(), pix0))
-
-  /** The snapshot current against the store version — rebuilds (once,
-    * double-checked) when the stamp moved; constant for the
-    * snapshot-serving form. */
-  private def current(): State = {
-    val st = stateRef.get
-    if (st.version == storeVersion()) st
-    else this.synchronized {
-      val held = stateRef.get
-      val v = storeVersion()
-      if (held.version == v) held
-      else {
-        val fresh = new State(v, reload.get())
-        stateRef.set(fresh)
-        held.pix.postings.unpersist(blocking = false)
-        held.pix.docMap.unpersist(blocking = false)
-        fresh
-      }
-    }
-  }
-
-  /** Drop the snapshot and reload from the store NOW (store-backed
-    * form only — a no-op snapshot rebuild otherwise). */
-  def refresh(): Unit = this.synchronized {
-    reload.foreach { r =>
-      val held = stateRef.get
-      stateRef.set(new State(storeVersion(), r()))
-      held.pix.postings.unpersist(blocking = false)
-      held.pix.docMap.unpersist(blocking = false)
-    }
-  }
+  /** Drop the snapshot and reload from the store NOW (a rebuild of
+    * the templates only, for the snapshot-serving form). */
+  def refresh(): Unit = snapshot.refresh()
 
   /** Whether prepared templates serve queries on the CURRENT snapshot
     * (corpus under the guard). Exposed for the guard spec. */
-  private[graft] def usesTemplates: Boolean = current().usesTemplates
+  private[graft] def usesTemplates: Boolean = snapshot.current().usesTemplates
 
   /** Top-k (docid, near_tf) for docs holding `termA` within `window`
     * tokens of `termB` (`ordered`: termB strictly after), near_tf =
@@ -209,77 +120,38 @@ final class PhraseServer private (
     * Safe for concurrent callers (pooled templates). */
   def near(termA: String, termB: String, window: Int,
            ordered: Boolean = false): Seq[(String, Long)] = {
-    val st = current()
-    val ta = graft.text.TextPipeline.processContent(termA)
-    val tb = graft.text.TextPipeline.processContent(termB)
-    require(ta.size == 1 && tb.size == 1,
-      s"near takes single non-stopword terms, got '$termA'/'$termB'")
-    def set(ts: String*) = {
-      val s = new java.util.HashSet[UTF8String]()
-      ts.foreach(t => s.add(UTF8String.fromString(t)))
-      s
-    }
+    val st = snapshot.current()
+    val (a, b) = PhraseServer.nearTerms(termA, termB)
     if (!st.usesTemplates)
       return PositionalIndex.nearTopK(st.pix, termA, termB, window,
           ordered, topK)
         .collect().map(r => (r.getString(0), r.getLong(1))).toSeq
-    val top = st.nearTemplates.withInstance((window, ordered)) { t =>
-      t.both.set(set(ta.head, tb.head))
-      t.slotA.set(set(ta.head))
-      t.slotB.set(set(tb.head))
-      t.df.collect().map(r => (r.getLong(0), r.getLong(1)))
-    }
-    resolve(st, top.toSeq)
+    st.resolve(st.nearTemplates.withInstance((window, ordered))(_.top(a, b)))
   }
 
   /** Exposed for the exchange-free plan-walk assertion (see
     * [[PointServer.templatePlan]]). */
   private[graft] def templatePlan(n: Int = 2)
       : org.apache.spark.sql.execution.SparkPlan =
-    current().templates.withInstance(n)(_.df.queryExecution.executedPlan)
+    snapshot.current().templates.withInstance(n)(
+      _.df.queryExecution.executedPlan)
 
   /** The proximity template's plan, for the same assertion. */
   private[graft] def nearTemplatePlan(window: Int, ordered: Boolean)
       : org.apache.spark.sql.execution.SparkPlan =
-    current().nearTemplates.withInstance((window, ordered))(
+    snapshot.current().nearTemplates.withInstance((window, ordered))(
       _.df.queryExecution.executedPlan)
-
-  /** Fresh tiny literal-isin resolution (the PointServer rationale),
-    * then (docid, tf) by tf desc, docid asc. */
-  private def resolve(st: State,
-                      top: Seq[(Long, Long)]): Seq[(String, Long)] = {
-    if (top.isEmpty) return Seq.empty
-    val ids = st.pix.docMap
-      .filter(col("docno").isin(top.map(_._1): _*))
-      .select(col("docno"), col("docid"))
-      .collect()
-      .map(r => r.getLong(0) -> r.getString(1)).toMap
-    top.flatMap { case (docno, tf) => ids.get(docno).map((_, tf)) }
-      .sortBy { case (docid, tf) => (-tf, docid) }
-  }
 
   /** Top-k (docid, phrase_tf), tf desc then docid asc — the same
     * ordering contract as [[PositionalIndex.phrase]] limited to topK.
     * Safe for concurrent callers (pooled templates). */
   def phrase(phraseText: String): Seq[(String, Long)] = {
-    val st = current()
+    val st = snapshot.current()
     val terms = graft.text.TextPipeline.processContent(phraseText)
     if (terms.isEmpty) return Seq.empty
     if (terms.size > MaxSlots || !st.usesTemplates)
-      return PositionalIndex.phrase(st.pix, phraseText)
-        .limit(topK).collect()
-        .map(r => (r.getString(0), r.getLong(1))).toSeq
-    def set(ts: String*) = {
-      val s = new java.util.HashSet[UTF8String]()
-      ts.foreach(t => s.add(UTF8String.fromString(t)))
-      s
-    }
-    val top = st.templates.withInstance(terms.size) { t =>
-      t.both.set(set(terms: _*))
-      terms.indices.foreach(i => t.slots(i).set(set(terms(i))))
-      t.df.collect().map(r => (r.getLong(0), r.getLong(1)))
-    }
-    resolve(st, top.toSeq)
+      return PhraseServer.freshPhrase(st.pix, phraseText, topK)
+    st.resolve(st.templates.withInstance(terms.size)(_.top(terms)))
   }
 }
 
@@ -306,21 +178,127 @@ object PhraseServer {
     * merge/rewrite of `dir` under the live server rebuilds the
     * snapshot before the next query runs. */
   def overStore(spark: SparkSession, dir: String, topK: Int = 10,
-                maxTemplateDocs: Long = MaxTemplateDocs): PhraseServer = {
-    val hfs = new org.apache.hadoop.fs.Path(dir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    def stamp(): Long = DirVersion.of(hfs, dir,
-      Seq("pos_postings", "doc_map", "corpus_stats", "tombstones")
-        .map(n => s"$dir/$n"))
-    def loadCached(): PIndex = {
-      val pix = PositionalIndex.load(spark, dir)
-      pix.postings.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      pix.docMap.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      pix.postings.count() // materialize at (re)build, not first query
-      pix.docMap.count()
-      pix
+                maxTemplateDocs: Long = MaxTemplateDocs): PhraseServer =
+    new PhraseServer(
+      new Snapshot.Source[PIndex](
+        Snapshot.store(spark, dir, PositionalIndex.stampDirs(dir)),
+        () => {
+          val pix = PositionalIndex.load(spark, dir)
+          PointServer.cache(pix.postings, pix.docMap)
+          pix
+        },
+        pix => PointServer.uncache(pix.postings, pix.docMap)),
+      topK, maxTemplateDocs)
+
+  /** A prepared phrase plan of `n` slots and the term cells it reads. */
+  private[query] final case class PhraseTmpl(
+      both: AtomicReference[java.util.HashSet[UTF8String]],
+      slots: IndexedSeq[AtomicReference[java.util.HashSet[UTF8String]]],
+      df: DataFrame) {
+    /** (docno, phrase_tf) top rows for the analyzed phrase `terms`. */
+    def top(terms: Seq[String]): Seq[(Long, Long)] = {
+      both.set(PointServer.utf8Set(terms))
+      terms.indices.foreach(i => slots(i).set(PointServer.utf8Set(Seq(terms(i)))))
+      df.collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
     }
-    new PhraseServer(loadCached(), topK, maxTemplateDocs,
-      Some(() => loadCached()), Some(() => stamp()))
   }
+
+  /** A prepared proximity plan and the term cells it reads. */
+  private[query] final case class NearTmpl(
+      both: AtomicReference[java.util.HashSet[UTF8String]],
+      slotA: AtomicReference[java.util.HashSet[UTF8String]],
+      slotB: AtomicReference[java.util.HashSet[UTF8String]],
+      df: DataFrame) {
+    /** (docno, near_tf) top rows for the analyzed term pair. */
+    def top(a: String, b: String): Seq[(Long, Long)] = {
+      both.set(PointServer.utf8Set(Seq(a, b)))
+      slotA.set(PointServer.utf8Set(Seq(a)))
+      slotB.set(PointServer.utf8Set(Seq(b)))
+      df.collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
+    }
+  }
+
+  private def in(ref: AtomicReference[java.util.HashSet[UTF8String]]): Column =
+    Bridge.column(RefSetContains(Bridge.expression(col("term")), ref))
+
+  /** The exchange-free `n`-word phrase plan over a positional postings
+    * `scan` (cached frame or routed part files): ONE scan filtered to
+    * the phrase's term set, one conditional slot aggregate per word,
+    * the left-fold shifted intersection — see the class doc. */
+  private[query] def phraseTmpl(scan: DataFrame, n: Int,
+                                topK: Int): PhraseTmpl = {
+    val both = PointServer.termCell()
+    val slots = IndexedSeq.fill(n)(PointServer.termCell())
+    val slotAggs = (0 until n).map { i =>
+      first(when(in(slots(i)), col("positions")), ignoreNulls = true)
+        .as(s"p$i")
+    }
+    val allPresent = (0 until n).map(i => col(s"p$i").isNotNull)
+      .reduce(_ && _)
+    // left-fold shifted intersection: positions where term_0 starts a
+    // full n-term run — identical to PositionalIndex.phrase's fold
+    val run = (1 until n).foldLeft(col("p0")) { (acc, i) =>
+      array_intersect(acc, transform(col(s"p$i"), x => x - i))
+    }
+    val df = scan.filter(in(both)).coalesce(1)
+      .groupBy(col("docno"))
+      .agg(slotAggs.head, slotAggs.tail: _*)
+      .filter(allPresent)
+      .select(col("docno"), size(run).cast("long").as("phrase_tf"))
+      .filter(col("phrase_tf") > 0)
+      .orderBy(col("phrase_tf").desc, col("docno"))
+      .limit(topK)
+    df.queryExecution.executedPlan // plan + codegen now, not per query
+    PhraseTmpl(both, slots, df)
+  }
+
+  /** The exchange-free proximity plan (the two-slot aggregate with the
+    * window baked in as a literal). */
+  private[query] def nearTmpl(scan: DataFrame, window: Int,
+                              ordered: Boolean, topK: Int): NearTmpl = {
+    val both = PointServer.termCell()
+    val slotA = PointServer.termCell()
+    val slotB = PointServer.termCell()
+    val df = scan.filter(in(both)).coalesce(1)
+      .groupBy(col("docno"))
+      .agg(
+        first(when(in(slotA), col("positions")), ignoreNulls = true)
+          .as("p0"),
+        first(when(in(slotB), col("positions")), ignoreNulls = true)
+          .as("p1"))
+      .filter(col("p0").isNotNull && col("p1").isNotNull)
+      .select(col("docno"),
+        PositionalIndex.nearPairCount(col("p0"), col("p1"),
+          window, ordered).as("near_tf"))
+      .filter(col("near_tf") > 0)
+      .orderBy(col("near_tf").desc, col("docno"))
+      .limit(topK)
+    df.queryExecution.executedPlan
+    NearTmpl(both, slotA, slotB, df)
+  }
+
+  /** The analyzed (termA, termB) of a near query — single non-stopword
+    * terms only. */
+  private[query] def nearTerms(termA: String,
+                               termB: String): (String, String) = {
+    val ta = graft.text.TextPipeline.processContent(termA)
+    val tb = graft.text.TextPipeline.processContent(termB)
+    require(ta.size == 1 && tb.size == 1,
+      s"near takes single non-stopword terms, got '$termA'/'$termB'")
+    (ta.head, tb.head)
+  }
+
+  /** The fresh-plan phrase path past the template bounds. */
+  private[query] def freshPhrase(pix: PIndex, phraseText: String,
+                                 topK: Int): Seq[(String, Long)] =
+    PositionalIndex.phrase(pix, phraseText)
+      .limit(topK).collect()
+      .map(r => (r.getString(0), r.getLong(1))).toSeq
+
+  /** (docid, tf) rows by tf desc, docid asc, unresolved docnos dropped
+    * (inner-join semantics). */
+  private[query] def byDocid(top: Seq[(Long, Long)],
+                             ids: Map[Long, String]): Seq[(String, Long)] =
+    top.flatMap { case (docno, tf) => ids.get(docno).map((_, tf)) }
+      .sortBy { case (docid, tf) => (-tf, docid) }
 }

@@ -2,7 +2,7 @@ package graft.query
 
 import java.util.concurrent.atomic.AtomicReference
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, Predicate, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
@@ -94,93 +94,41 @@ private[query] case class RefSetContains(
   * and revalidates a [[DirVersion]] stamp per [[search]], rebuilding
   * the snapshot (and its templates) when the directory moved — so an
   * [[InvertedIndex.merge]]-then-write under a live server is
-  * detected, never silently served stale ([[Bm25Server]]'s
-  * discipline). [[refresh]] is the explicit hammer for layouts where
-  * listings can lag. */
+  * detected, never silently served stale (the [[Snapshot]] holder
+  * every stamped server shares). [[refresh]] is the explicit hammer
+  * for layouts where listings can lag. */
 final class PointServer private (
-    ix0: Index, topK: Int,
-    reload: Option[() => Index],
-    version: Option[() => Long]) {
+    source: Snapshot.Source[Index], topK: Int) {
 
   /** Snapshot-serving constructor over a caller-owned (cached) index. */
-  def this(ix: Index, topK: Int = 10) = this(ix, topK, None, None)
-
-  private final case class Tmpl(
-      ref: AtomicReference[java.util.HashSet[UTF8String]], df: DataFrame)
-
-  private def buildTmpl(ix: Index): Tmpl = {
-    val termsRef = new AtomicReference[java.util.HashSet[UTF8String]](
-      new java.util.HashSet)
-    val inTerms =
-      Bridge.column(RefSetContains(Bridge.expression(col("kgram")), termsRef))
-    val df = ix.postings.filter(inTerms).coalesce(1)
-      .withColumn("df",
-        count(lit(1)).over(Window.partitionBy(col("kgram"))))
-      .groupBy(col("docno"))
-      .agg(sum((lit(1.0) + log(col("tf"))) *
-        log10(lit(ix.nDocs.toDouble) / col("df").cast("double"))).as("s0"))
-      .select(col("docno"), round(col("s0"), 4).as("score"))
-      .orderBy(col("score").desc, col("docno"))
-      .limit(topK)
-    // force planning + codegen at build, not on the instance's first query
-    df.queryExecution.executedPlan
-    Tmpl(termsRef, df)
-  }
+  def this(ix: Index, topK: Int = 10) = this(Snapshot.fixed(ix), topK)
 
   // CONCURRENCY (round 9): score templates live in a pool — each
   // search() borrows its own instance for the set-refs-then-collect
   // window, so concurrent callers can't race on a shared reference
   // cell (previously a class-wide `synchronized`, one in-flight query
   // per server). Single shape → single key.
-  private final class State(val version: Long, val ix: Index) {
-    val pool = new TemplatePool[Unit, Tmpl](_ => buildTmpl(ix),
+  private final class State(val ix: Index) {
+    val pool = new TemplatePool[Unit, PointServer.ScoreTmpl](
+      _ => PointServer.scoreTmpl(ix.postings, ix.nDocs, topK),
       maxKeys = 1)
   }
 
-  private def storeVersion(): Long = version.fold(0L)(_())
+  private val snapshot = new Snapshot[State](source.stamp,
+    () => new State(source.load()), st => source.release(st.ix))
 
-  private val stateRef = new AtomicReference[State](
-    new State(storeVersion(), ix0))
+  snapshot.current().pool.withInstance(())(_ => ()) // plan+codegen at ctor
 
-  stateRef.get.pool.withInstance(())(_ => ()) // plan+codegen at ctor
-
-  /** The snapshot current against the store version — rebuilds (once,
-    * double-checked) when the stamp moved; constant for the
-    * snapshot-serving form. */
-  private def current(): State = {
-    val st = stateRef.get
-    if (st.version == storeVersion()) st
-    else this.synchronized {
-      val held = stateRef.get
-      val v = storeVersion()
-      if (held.version == v) held
-      else {
-        val fresh = new State(v, reload.get())
-        stateRef.set(fresh)
-        held.ix.postings.unpersist(blocking = false)
-        held.ix.docMap.unpersist(blocking = false)
-        fresh
-      }
-    }
-  }
-
-  /** Drop the snapshot and reload from the store NOW (store-backed
-    * form only — a no-op snapshot rebuild otherwise). */
-  def refresh(): Unit = this.synchronized {
-    reload.foreach { r =>
-      val held = stateRef.get
-      stateRef.set(new State(storeVersion(), r()))
-      held.ix.postings.unpersist(blocking = false)
-      held.ix.docMap.unpersist(blocking = false)
-    }
-  }
+  /** Drop the snapshot and reload from the store NOW (a rebuild of
+    * the templates only, for the snapshot-serving form). */
+  def refresh(): Unit = snapshot.refresh()
 
   /** The reused physical plan, exposed so specs can assert the
     * exchange-free invariant under any session conf (AQE, partition
     * counts) — an exchange sneaking in here is the stale-result trap
     * the class doc describes. */
   private[graft] def templatePlan: org.apache.spark.sql.execution.SparkPlan =
-    current().pool.withInstance(())(_.df.queryExecution.executedPlan)
+    snapshot.current().pool.withInstance(())(_.df.queryExecution.executedPlan)
 
   /** (docno, docid, score) rows, score desc then docno asc — the same
     * output (and arity contract) as [[QueryEngine.serveSearch]].
@@ -196,24 +144,12 @@ final class PointServer private (
     * contract, not the plan's). Same output and ordering. */
   private[query] def searchTerms(terms: Seq[String])
       : Seq[(Long, String, Double)] = {
-    val st = current()
+    val st = snapshot.current()
     if (terms.isEmpty) return Seq.empty // stopword-only: no job at all
-    val set = new java.util.HashSet[UTF8String]()
-    terms.foreach(t => set.add(UTF8String.fromString(t)))
-    val top = st.pool.withInstance(()) { t =>
-      t.ref.set(set)
-      t.df.collect().map(r => (r.getLong(0), r.getDouble(1)))
-    }
-    if (top.isEmpty) return Seq.empty
-    // fresh tiny plan per query — literal isin keeps stat/row-group
-    // pruning (see class doc); ≤ topK rows, planning cost is noise
-    val ids = st.ix.docMap
-      .filter(col("docno").isin(top.map(_._1).toSeq: _*))
-      .select(col("docno"), col("docid"))
-      .collect()
-      .map(r => r.getLong(0) -> r.getString(1)).toMap
+    val top = st.pool.withInstance(())(_.top(terms))
     // inner-join semantics: a docno the map cannot resolve is dropped
-    top.toSeq.flatMap { case (d, s) => ids.get(d).map(id => (d, id, s)) }
+    val ids = PointServer.resolveLiteral(st.ix.docMap, top.map(_._1))
+    top.flatMap { case (d, s) => ids.get(d).map(id => (d, id, s)) }
   }
 }
 
@@ -225,21 +161,97 @@ object PointServer {
     * staleness revalidation — a merge/rewrite of `dir` under the live
     * server rebuilds the snapshot before the next query runs. */
   def overStore(spark: SparkSession, dir: String,
-                topK: Int = 10): PointServer = {
-    val hfs = new org.apache.hadoop.fs.Path(dir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    def stamp(): Long = DirVersion.of(hfs, dir,
-      Seq("postings", "term_stats", "doc_map", "corpus_stats",
-        "tombstones").map(n => s"$dir/$n"))
-    def loadCached(): Index = {
-      val ix = InvertedIndex.load(spark, dir)
-      ix.postings.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      ix.docMap.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      ix.postings.count() // materialize at (re)build, not first query
-      ix.docMap.count()
-      ix
-    }
-    new PointServer(loadCached(), topK,
-      Some(() => loadCached()), Some(() => stamp()))
+                topK: Int = 10): PointServer =
+    new PointServer(cachedStore(spark, dir), topK)
+
+  /** A written inverted store, loaded and CACHED per stamp (postings
+    * and doc_map materialized at (re)build, not on the first query)
+    * and released when the snapshot is replaced — the source behind
+    * this server's and [[Rm3Server]]'s store-backed forms. */
+  private[query] def cachedStore(spark: SparkSession,
+                                 dir: String): Snapshot.Source[Index] =
+    new Snapshot.Source(
+      Snapshot.store(spark, dir, InvertedIndex.stampDirs(dir)),
+      () => {
+        val ix = InvertedIndex.load(spark, dir)
+        cache(ix.postings, ix.docMap)
+        ix
+      },
+      ix => uncache(ix.postings, ix.docMap))
+
+  private[query] def cache(dfs: DataFrame*): Unit = {
+    dfs.foreach(_.persist(
+      org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+    dfs.foreach(_.count())
   }
+
+  private[query] def uncache(dfs: DataFrame*): Unit =
+    dfs.foreach(_.unpersist(blocking = false))
+
+  /** A fresh driver-side term set for a [[RefSetContains]] cell. */
+  private[query] def utf8Set(ts: Iterable[String])
+      : java.util.HashSet[UTF8String] = {
+    val s = new java.util.HashSet[UTF8String]()
+    ts.foreach(t => s.add(UTF8String.fromString(t)))
+    s
+  }
+
+  private[query] def termCell()
+      : AtomicReference[java.util.HashSet[UTF8String]] =
+    new AtomicReference(new java.util.HashSet[UTF8String])
+
+  /** The exchange-free tf-idf score skeleton over `postings`: term-set
+    * filter (`terms`) → single task → window df → per-doc
+    * Σ weight·(1+ln tf)·log10(N/df) → top-`limitN`. `weight` (absent:
+    * 1) is RM3's per-term blend; shared by the cached and loaded point
+    * templates and all of [[Rm3Server]]'s score passes. */
+  private[query] def scorePlan(postings: DataFrame, nDocs: Long,
+      terms: AtomicReference[java.util.HashSet[UTF8String]],
+      limitN: Int, weight: Option[Column] = None): DataFrame = {
+    val tf = lit(1.0) + log(col("tf"))
+    postings
+      .filter(Bridge.column(RefSetContains(
+        Bridge.expression(col("kgram")), terms)))
+      .coalesce(1)
+      .withColumn("df",
+        count(lit(1)).over(Window.partitionBy(col("kgram"))))
+      .groupBy(col("docno"))
+      .agg(sum(weight.fold(tf)(_ * tf) *
+        log10(lit(nDocs.toDouble) / col("df").cast("double"))).as("s0"))
+      .select(col("docno"), round(col("s0"), 4).as("score"))
+      .orderBy(col("score").desc, col("docno"))
+      .limit(limitN)
+  }
+
+  /** A prepared point score plan and the term cell it reads. */
+  private[query] final case class ScoreTmpl(
+      ref: AtomicReference[java.util.HashSet[UTF8String]], df: DataFrame) {
+    /** (docno, score) top rows for `terms`. */
+    def top(terms: Seq[String]): Seq[(Long, Double)] = {
+      ref.set(utf8Set(terms))
+      df.collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
+    }
+  }
+
+  private[query] def scoreTmpl(postings: DataFrame, nDocs: Long,
+                               topK: Int): ScoreTmpl = {
+    val ref = termCell()
+    val df = scorePlan(postings, nDocs, ref, topK)
+    // force planning + codegen at build, not on the instance's first query
+    df.queryExecution.executedPlan
+    ScoreTmpl(ref, df)
+  }
+
+  /** docno → docid for ≤ topK result docnos through a fresh tiny
+    * literal-`isin` plan (the class-doc resolve rationale: literals
+    * keep stat/row-group pruning; planning ≤ topK rows is noise).
+    * Unresolvable docnos are absent — inner-join semantics. */
+  private[query] def resolveLiteral(docMap: DataFrame,
+                                    docnos: Seq[Long]): Map[Long, String] =
+    if (docnos.isEmpty) Map.empty
+    else docMap
+      .filter(col("docno").isin(docnos: _*))
+      .select(col("docno"), col("docid"))
+      .collect()
+      .map(r => r.getLong(0) -> r.getString(1)).toMap
 }

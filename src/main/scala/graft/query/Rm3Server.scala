@@ -92,8 +92,8 @@ private[query] case class RefLongDoubleLookup(
   * instance, borrowed for the query's whole three-stage window
   * ([[TemplatePool]] — concurrent callers each get their own). */
 final class Rm3Server private (
-    ix0: Index, topK: Int, fbDocs: Int, fbTerms: Int, lambda: Double,
-    reload: Option[() => Index], version: Option[() => Long]) {
+    source: Snapshot.Source[Index], topK: Int, fbDocs: Int, fbTerms: Int,
+    lambda: Double) {
 
   /** Snapshot-serving constructor over a caller-owned (cached) index
     * — the struct is immutable, so there is nothing to go stale
@@ -101,7 +101,7 @@ final class Rm3Server private (
     * mutation is real and stamped). */
   def this(ix: Index, topK: Int = 10, fbDocs: Int = 5,
            fbTerms: Int = 10, lambda: Double = 0.5) =
-    this(ix, topK, fbDocs, fbTerms, lambda, None, None)
+    this(Snapshot.fixed(ix), topK, fbDocs, fbTerms, lambda)
 
   private final case class Tmpl(
       qRef: AtomicReference[java.util.HashSet[UTF8String]],
@@ -115,30 +115,9 @@ final class Rm3Server private (
         java.util.HashMap[UTF8String, java.lang.Double]],
       fin: DataFrame)
 
-  /** The shared exchange-free score skeleton: term-set filter →
-    * single task → window df → per-doc weighted tf-idf → top-`limitN`.
-    * `weight` is 1 for pass 1, the RM3 blend lookup for the final
-    * pass. */
-  private def scorePlan(ix: Index,
-      termRef: AtomicReference[java.util.HashSet[UTF8String]],
-      weight: org.apache.spark.sql.Column, limitN: Int): DataFrame =
-    ix.postings
-      .filter(Bridge.column(RefSetContains(
-        Bridge.expression(col("kgram")), termRef)))
-      .coalesce(1)
-      .withColumn("df",
-        count(lit(1)).over(Window.partitionBy(col("kgram"))))
-      .groupBy(col("docno"))
-      .agg(sum(weight * (lit(1.0) + log(col("tf"))) *
-        log10(lit(ix.nDocs.toDouble) / col("df").cast("double"))).as("s0"))
-      .select(col("docno"), round(col("s0"), 4).as("score"))
-      .orderBy(col("score").desc, col("docno"))
-      .limit(limitN)
-
   private def buildTmpl(ix: Index): Tmpl = {
-    val qRef = new AtomicReference[java.util.HashSet[UTF8String]](
-      new java.util.HashSet)
-    val pass1 = scorePlan(ix, qRef, lit(1.0), fbDocs)
+    val qRef = PointServer.termCell()
+    val pass1 = PointServer.scorePlan(ix.postings, ix.nDocs, qRef, fbDocs)
     val fbDocRef = new AtomicReference[java.util.HashSet[java.lang.Long]](
       new java.util.HashSet)
     val fbScoreRef = new AtomicReference[
@@ -159,14 +138,13 @@ final class Rm3Server private (
         .as("rm0"))
       .orderBy(col("rm0").desc, col("kgram"))
       .limit(fbTerms)
-    val wTermRef = new AtomicReference[java.util.HashSet[UTF8String]](
-      new java.util.HashSet)
+    val wTermRef = PointServer.termCell()
     val wRef = new AtomicReference[
       java.util.HashMap[UTF8String, java.lang.Double]](
       new java.util.HashMap)
-    val fin = scorePlan(ix, wTermRef,
-      Bridge.column(RefStringDoubleLookup(
-        Bridge.expression(col("kgram")), wRef)), topK)
+    val fin = PointServer.scorePlan(ix.postings, ix.nDocs, wTermRef, topK,
+      Some(Bridge.column(RefStringDoubleLookup(
+        Bridge.expression(col("kgram")), wRef))))
     // force planning + codegen at build, not on the first query
     pass1.queryExecution.executedPlan
     fb.queryExecution.executedPlan
@@ -174,70 +152,35 @@ final class Rm3Server private (
     Tmpl(qRef, pass1, fbDocRef, fbScoreRef, fb, wTermRef, wRef, fin)
   }
 
-  private final class State(val version: Long, val ix: Index) {
+  private final class State(val ix: Index) {
     val pool = new TemplatePool[Unit, Tmpl](_ => buildTmpl(ix),
       maxKeys = 1)
   }
 
-  private def storeVersion(): Long = version.fold(0L)(_())
+  private val snapshot = new Snapshot[State](source.stamp,
+    () => new State(source.load()), st => source.release(st.ix))
 
-  private val stateRef = new AtomicReference[State](
-    new State(storeVersion(), ix0))
+  snapshot.current().pool.withInstance(())(_ => ()) // plan+codegen at ctor
 
-  stateRef.get.pool.withInstance(())(_ => ()) // plan+codegen at ctor
-
-  /** The snapshot current against the store version — rebuilds (once,
-    * double-checked) when the [[DirVersion]] stamp moved; constant
-    * for the snapshot-serving form. */
-  private def current(): State = {
-    val st = stateRef.get
-    if (st.version == storeVersion()) st
-    else this.synchronized {
-      val held = stateRef.get
-      val v = storeVersion()
-      if (held.version == v) held
-      else {
-        val fresh = new State(v, reload.get())
-        stateRef.set(fresh)
-        held.ix.postings.unpersist(blocking = false)
-        held.ix.docMap.unpersist(blocking = false)
-        fresh
-      }
-    }
-  }
-
-  /** Drop the snapshot and reload from the store NOW (store-backed
-    * form only — a no-op snapshot rebuild otherwise). */
-  def refresh(): Unit = this.synchronized {
-    reload.foreach { r =>
-      val held = stateRef.get
-      stateRef.set(new State(storeVersion(), r()))
-      held.ix.postings.unpersist(blocking = false)
-      held.ix.docMap.unpersist(blocking = false)
-    }
-  }
+  /** Drop the snapshot and reload from the store NOW (a rebuild of
+    * the templates only, for the snapshot-serving form). */
+  def refresh(): Unit = snapshot.refresh()
 
   /** The three reused physical plans (spec hook: the exchange-free
     * invariant that makes re-execution safe). */
   private[graft] def templatePlans: Seq[org.apache.spark.sql.execution.SparkPlan] =
-    current().pool.withInstance(())(t => Seq(t.pass1, t.fb, t.fin)
+    snapshot.current().pool.withInstance(())(t => Seq(t.pass1, t.fb, t.fin)
       .map(_.queryExecution.executedPlan))
-
-  private def utf8Set(ts: Iterable[String]) = {
-    val s = new java.util.HashSet[UTF8String]()
-    ts.foreach(t => s.add(UTF8String.fromString(t)))
-    s
-  }
 
   /** (docno, docid, score) rows, (score desc, docno asc) — the same
     * output contract as [[QueryEngine.rm3Search]], from the prepared
     * plans. Safe for concurrent callers. */
   def search(query: String): Seq[(Long, String, Double)] = {
-    val st = current()
+    val st = snapshot.current()
     val qTerms = QueryEngine.requireArity(query).distinct
     if (qTerms.isEmpty) return Seq.empty
     val top = st.pool.withInstance(()) { t =>
-      t.qRef.set(utf8Set(qTerms))
+      t.qRef.set(PointServer.utf8Set(qTerms))
       val fbRows = t.pass1.collect()
         .map(r => (r.getLong(0), r.getDouble(1)))
       if (fbRows.isEmpty) Seq.empty[(Long, Double)]
@@ -252,19 +195,13 @@ final class Rm3Server private (
         val wm = new java.util.HashMap[UTF8String, java.lang.Double]()
         weights.foreach { case (k, w) =>
           wm.put(UTF8String.fromString(k), w) }
-        t.wTermRef.set(utf8Set(weights.map(_._1)))
+        t.wTermRef.set(PointServer.utf8Set(weights.map(_._1)))
         t.wRef.set(wm)
         t.fin.collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
       }
     }
-    if (top.isEmpty) return Seq.empty
-    // fresh tiny plan per query — literal isin keeps stat/row-group
-    // pruning (the PointServer resolve rationale); ≤ topK rows
-    val ids = st.ix.docMap
-      .filter(col("docno").isin(top.map(_._1): _*))
-      .select(col("docno"), col("docid"))
-      .collect()
-      .map(r => r.getLong(0) -> r.getString(1)).toMap
+    // fresh tiny literal-isin resolve (the PointServer rationale)
+    val ids = PointServer.resolveLiteral(st.ix.docMap, top.map(_._1))
     top.flatMap { case (d, s) => ids.get(d).map(id => (d, id, s)) }
   }
 }
@@ -279,21 +216,7 @@ object Rm3Server {
     * query runs. */
   def overStore(spark: org.apache.spark.sql.SparkSession, dir: String,
                 topK: Int = 10, fbDocs: Int = 5, fbTerms: Int = 10,
-                lambda: Double = 0.5): Rm3Server = {
-    val hfs = new org.apache.hadoop.fs.Path(dir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    def stamp(): Long = DirVersion.of(hfs, dir,
-      Seq("postings", "term_stats", "doc_map", "corpus_stats",
-        "tombstones").map(n => s"$dir/$n"))
-    def loadCached(): Index = {
-      val ix = graft.index.InvertedIndex.load(spark, dir)
-      ix.postings.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      ix.docMap.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      ix.postings.count() // materialize at (re)build, not first query
-      ix.docMap.count()
-      ix
-    }
-    new Rm3Server(loadCached(), topK, fbDocs, fbTerms, lambda,
-      Some(() => loadCached()), Some(() => stamp()))
-  }
+                lambda: Double = 0.5): Rm3Server =
+    new Rm3Server(PointServer.cachedStore(spark, dir), topK, fbDocs,
+      fbTerms, lambda)
 }

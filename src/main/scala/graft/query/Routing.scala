@@ -1,10 +1,15 @@
 package graft.query
 
-import org.apache.spark.sql.SparkSession
+import java.util.concurrent.atomic.AtomicReference
+
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.Bridge
+import org.apache.spark.sql.types.StructType
 
 /** Driver-side zone-map routing shared by the loaded-artifact servers
-  * ([[LoadedPointServer]], [[LoadedPhraseServer]]): read a write-time
+  * ([[LoadedPointServer]], [[LoadedPhraseServer]],
+  * [[LoadedWildcardServer]]): read a write-time
   * range manifest once (O(files) driver state), then map a point key to
   * its covering file(s) — normally exactly one, since range
   * partitioning gives disjoint ranges. Linear scans over the manifest
@@ -36,13 +41,73 @@ private[query] object Routing {
   def route(ranges: Array[(Long, Long, String)], key: Long): Seq[String] =
     ranges.iterator.filter(r => r._1 <= key && key <= r._2).map(_._3).toSeq
 
-  /** Access-ordered LRU with eldest eviction, for prepared plans keyed
-    * by file set (and, for phrase templates, phrase length): hot keys
-    * keep their plans, cold ones rebuild on next touch. */
-  def lru[K, V](maxPlans: Int): java.util.LinkedHashMap[K, V] =
-    new java.util.LinkedHashMap[K, V](16, 0.75f, true) {
-      override def removeEldestEntry(
-          e: java.util.Map.Entry[K, V]): Boolean =
-        size() > maxPlans
+  private final case class ResolveTmpl(
+      ref: AtomicReference[java.util.HashSet[java.lang.Long]],
+      df: DataFrame)
+
+  /** The driver-side routing state of ONE loaded-store snapshot,
+    * shared by [[LoadedPointServer]] and [[LoadedPhraseServer]]: the
+    * postings zone map (`postingsRanges` under `dir`), the doc_map
+    * zone map with its pooled per-file-set resolve plans, and the
+    * store's pending deletions as a driver set. */
+  final class Routed(spark: SparkSession, dir: String,
+                     postingsRanges: String, docMapSchema: StructType,
+                     tombstones: Option[DataFrame]) {
+
+    val postRanges: Array[(String, String, String)] =
+      stringRanges(spark, s"$dir/$postingsRanges")
+    private val docRanges: Array[(Long, Long, String)] =
+      longRanges(spark, s"$dir/doc_map_ranges")
+
+    /** PENDING DELETIONS: the templates scan part files directly
+      * (bypassing load()'s anti-join), so the tombstoned docnos load
+      * into a driver set and every [[scan]] of this snapshot filters
+      * them out (the store's delete keeps the set request-sized; the
+      * tombstones dir rides in the stamp, so a delete under a live
+      * server rebuilds the snapshot). */
+    private val tombs: java.util.HashSet[java.lang.Long] = {
+      val s = new java.util.HashSet[java.lang.Long]()
+      tombstones.foreach(_.collect().foreach(r => s.add(r.getLong(0))))
+      s
     }
+
+    private val resolvePlans = new TemplatePool[Seq[String], ResolveTmpl](
+      { files =>
+        val ref = new AtomicReference(new java.util.HashSet[java.lang.Long])
+        val df = spark.read.schema(docMapSchema).parquet(files: _*)
+          .filter(Bridge.column(RefLongSetContains(
+            Bridge.expression(col("docno")), ref)))
+          .coalesce(1)
+          .select(col("docno"), col("docid"))
+        df.queryExecution.executedPlan
+        ResolveTmpl(ref, df)
+      })
+
+    /** A postings part-file scan (explicit schema: no inference job
+      * when a plan is first built) minus the tombstoned docnos — the
+      * filter is added only when deletions are pending, so the common
+      * tombstone-free plan is unchanged. */
+    def scan(schema: StructType, files: Seq[String]): DataFrame = {
+      val raw = spark.read.schema(schema).parquet(files: _*)
+      if (tombs.isEmpty) raw
+      else raw.filter(!Bridge.column(RefLongSetContains(
+        Bridge.expression(col("docno")), new AtomicReference(tombs))))
+    }
+
+    /** docno → docid for ≤ topK result docnos: route them through the
+      * doc_map zone map and run the pooled resolve plan of that file
+      * set. Unresolvable docnos are absent — inner-join semantics. */
+    def resolve(docnos: Seq[Long]): Map[Long, String] = {
+      val files = docnos.flatMap(d => route(docRanges, d)).distinct.sorted
+      if (files.isEmpty) Map.empty
+      else {
+        val set = new java.util.HashSet[java.lang.Long]()
+        docnos.foreach(d => set.add(d))
+        resolvePlans.withInstance(files) { rt =>
+          rt.ref.set(set)
+          rt.df.collect().map(r => r.getLong(0) -> r.getString(1)).toMap
+        }
+      }
+    }
+  }
 }

@@ -2,7 +2,7 @@ package graft.query
 
 import java.util.concurrent.atomic.AtomicReference
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.Bridge
 import org.apache.spark.unsafe.types.UTF8String
@@ -39,137 +39,130 @@ import graft.index.CharKGramIndex
   *
   * STALENESS: the chargram store now mutates in place
   * ([[CharKGramIndex.mergeIntoStore]]/`deleteDocs`/`updateDocs`), so
-  * the snapshot carries the store's [[DirVersion]] stamp — O(1) via
-  * the [[graft.StoreGen]] generation its commit protocol bumps — and
-  * every call revalidates it: a vocabulary update under a live server
-  * is served exactly, never stale. Run mutations behind the quiesce
-  * for cutover-exact semantics, as everywhere in the serving layer. */
+  * the snapshot lives in the shared [[Snapshot]] holder under the
+  * store's [[DirVersion]] stamp — O(1) via the [[graft.StoreGen]]
+  * generation its commit protocol bumps — and every call revalidates
+  * it: a vocabulary update under a live server is served exactly,
+  * never stale. Run mutations behind the quiesce for cutover-exact
+  * semantics, as everywhere in the serving layer. */
 final class WildcardServer(spark: SparkSession, cgDir: String,
-                           point: Option[PointServer] = None,
-                           defaultK: Int = 3) {
+                           point: Option[PointServer] = None) {
+  import WildcardServer.Tmpl
 
-  private val hfs = new org.apache.hadoop.fs.Path(cgDir)
-    .getFileSystem(spark.sparkContext.hadoopConfiguration)
-
-  private def storeVersion(): Long =
-    DirVersion.of(hfs, cgDir,
-      Seq(cgDir, s"$cgDir/${CharKGramIndex.VocabDfDir}",
-        s"$cgDir/${CharKGramIndex.DeletedDocsDir}",
-        s"$cgDir/${CharKGramIndex.AppliedOpsDir}"))
-
-  private final case class Tmpl(
-      ref: AtomicReference[java.util.HashSet[UTF8String]],
-      df: org.apache.spark.sql.DataFrame)
-
-  private final class State(val version: Long) {
+  private final class State {
     val pairs = CharKGramIndex.load(spark, cgDir)
       .select(col("gram"), explode(col("terms")).as("term"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     pairs.count() // materialize at (re)build, not first query
 
     /** The store's gram length, from the data (empty store → the
-      * constructor default; every lookup is then empty anyway). */
+      * default; every lookup is then empty anyway). */
     val k: Int = pairs.select(length(col("gram")))
       .limit(1).collect().headOption.map(_.getInt(0))
-      .getOrElse(defaultK)
+      .getOrElse(WildcardServer.DefaultK)
 
     /** Driver vocabulary for the all-short-segment fallback — built
       * on first need only. */
     lazy val vocab: Array[String] = pairs.select(col("term"))
       .distinct().collect().map(_.getString(0)).sorted
 
-    val pool = new TemplatePool[Unit, Tmpl](_ => buildTmpl(this),
-      maxKeys = 1)
+    val pool = new TemplatePool[Unit, Tmpl](
+      _ => WildcardServer.tmpl(pairs.filter(_)), maxKeys = 1)
   }
 
-  private def buildTmpl(st: State): Tmpl = {
-    val ref = new AtomicReference[java.util.HashSet[UTF8String]](
-      new java.util.HashSet)
-    val inGrams = Bridge.column(
-      RefSetContains(Bridge.expression(col("gram")), ref))
-    val df = st.pairs.filter(inGrams).coalesce(1)
-      .groupBy(col("term")).agg(count(lit(1)).as("ng"))
-    df.queryExecution.executedPlan // plan + codegen at build
-    Tmpl(ref, df)
-  }
+  private val snapshot = new Snapshot[State](
+    Snapshot.store(spark, cgDir, CharKGramIndex.stampDirs(cgDir)),
+    () => new State, _.pairs.unpersist(blocking = false))
 
-  private val stateRef = new AtomicReference[State](
-    new State(storeVersion()))
-
-  stateRef.get.pool.withInstance(())(_ => ()) // plan+codegen at ctor
-
-  private def current(): State = {
-    val st = stateRef.get
-    if (st.version == storeVersion()) st
-    else this.synchronized {
-      val held = stateRef.get
-      val v = storeVersion()
-      if (held.version == v) held
-      else {
-        val fresh = new State(v)
-        stateRef.set(fresh)
-        held.pairs.unpersist(blocking = false)
-        fresh
-      }
-    }
-  }
+  snapshot.current().pool.withInstance(())(_ => ()) // plan+codegen at ctor
 
   /** Drop the snapshot and rebuild NOW (the explicit hammer for
     * eventually consistent listings; routine staleness is caught per
     * call by the version stamp). */
-  def refresh(): Unit = this.synchronized {
-    val held = stateRef.get
-    stateRef.set(new State(storeVersion()))
-    held.pairs.unpersist(blocking = false)
-    ()
-  }
+  def refresh(): Unit = snapshot.refresh()
 
   /** The reused physical plan (spec hook: exchange-free). */
   private[graft] def templatePlan
       : org.apache.spark.sql.execution.SparkPlan =
-    current().pool.withInstance(())(_.df.queryExecution.executedPlan)
+    snapshot.current().pool.withInstance(())(_.df.queryExecution.executedPlan)
 
   /** The pattern's matching vocabulary terms, ascending — identical
     * to [[QueryEngine.wildcardTerms]] over the same store. */
   def lookup(pattern: String): Seq[String] = {
     require(pattern.contains("*"), "pattern needs at least one *")
-    val st = current()
-    val pat = pattern.toLowerCase(java.util.Locale.ROOT)
-    val re = java.util.regex.Pattern
-      .compile(QueryEngine.wildcardRegex(pat))
-    val padded = s"$$$pat$$"
-    val segGrams = padded.split("\\*", -1).toSeq
-      .flatMap(seg =>
-        (0 to seg.length - st.k).map(i => seg.substring(i, i + st.k)))
-      .distinct
-    if (segGrams.isEmpty)
+    val st = snapshot.current()
+    val p = new WildcardServer.Pattern(pattern, st.k)
+    if (p.grams.isEmpty)
       // all segments shorter than k: no gram narrows — the driver
       // dictionary verifies alone (zero jobs)
-      st.vocab.filter(t => re.matcher(t).matches()).toSeq
-    else {
-      val set = new java.util.HashSet[UTF8String]()
-      segGrams.foreach(g => set.add(UTF8String.fromString(g)))
-      st.pool.withInstance(()) { t =>
-        t.ref.set(set)
-        t.df.collect()
-          .filter(r => r.getLong(1) == segGrams.size &&
-            re.matcher(r.getString(0)).matches())
-          .map(_.getString(0)).sorted.toSeq
-      }
-    }
+      st.vocab.filter(p.matches).toSeq
+    else st.pool.withInstance(())(_.lookup(p))
   }
 
   /** Served wildcard RETRIEVAL: expand, re-analyze with the indexing
     * pipeline, score through the held [[PointServer]]'s pooled
     * template — (docno, docid, score) rows equal to
     * [[QueryEngine.wildcardSearch]] on the same index + store. */
-  def search(pattern: String): Seq[(Long, String, Double)] = {
+  def search(pattern: String): Seq[(Long, String, Double)] =
+    WildcardServer.retrieve(point, lookup(pattern))
+}
+
+object WildcardServer {
+
+  /** Gram length of an EMPTY store, whose every lookup is empty. */
+  private[query] val DefaultK = 3
+
+  /** A lowercased pattern's anchored verify regex and the distinct
+    * length-`k` grams of its `$`-padded literal segments. */
+  private[query] final class Pattern(pattern: String, k: Int) {
+    private val pat = pattern.toLowerCase(java.util.Locale.ROOT)
+    private val re = java.util.regex.Pattern
+      .compile(QueryEngine.wildcardRegex(pat))
+    val grams: Seq[String] = s"$$$pat$$".split("\\*", -1).toSeq
+      .flatMap(seg =>
+        (0 to seg.length - k).map(i => seg.substring(i, i + k)))
+      .distinct
+
+    def matches(term: String): Boolean = re.matcher(term).matches()
+  }
+
+  /** A prepared gram-count plan — (term, matched grams) over the
+    * driver-updated gram set, exchange-free — and its gram cell. */
+  private[query] final case class Tmpl(
+      ref: AtomicReference[java.util.HashSet[UTF8String]], df: DataFrame) {
+    /** Candidates holding EVERY gram of `p` that pass its verify. */
+    def lookup(p: Pattern): Seq[String] = {
+      ref.set(PointServer.utf8Set(p.grams))
+      df.collect()
+        .filter(r => r.getLong(1) == p.grams.size && p.matches(r.getString(0)))
+        .map(_.getString(0)).sorted.toSeq
+    }
+  }
+
+  /** Count matched grams per term: `terms` turns the gram-set
+    * predicate into the candidate `term` rows (a filtered cached pair
+    * scan, or a routed file scan exploded after its filter). */
+  private[query] def tmpl(terms: Column => DataFrame): Tmpl = {
+    val ref = PointServer.termCell()
+    val df = terms(Bridge.column(
+        RefSetContains(Bridge.expression(col("gram")), ref)))
+      .coalesce(1)
+      .groupBy(col("term")).agg(count(lit(1)).as("ng"))
+    df.queryExecution.executedPlan // plan + codegen at build
+    Tmpl(ref, df)
+  }
+
+  /** The retrieval tail shared by both wildcard servers: re-analyze
+    * the expansion with the indexing pipeline and score it through
+    * the held [[PointServer]]'s pooled template. */
+  private[query] def retrieve(point: Option[PointServer],
+                              expansion: => Seq[String])
+      : Seq[(Long, String, Double)] = {
     val ps = point.getOrElse(throw new IllegalStateException(
       "wildcard retrieval needs the PointServer scoring arm — " +
         "construct with point = Some(...)"))
-    val stems = lookup(pattern)
-      .flatMap(graft.text.TextPipeline.processContent).distinct
-    ps.searchTerms(stems)
+    ps.searchTerms(
+      expansion.flatMap(graft.text.TextPipeline.processContent).distinct)
   }
 }
 
@@ -197,28 +190,15 @@ final class WildcardServer(spark: SparkSession, cgDir: String,
   * scan PER CALL — the deliberate price of not holding the
   * dictionary.
   *
-  * STALENESS: the same [[DirVersion]]/[[graft.StoreGen]] stamp
-  * discipline as every loaded server, revalidated per call — a
+  * STALENESS: the same [[Snapshot]] holder and
+  * [[DirVersion]]/[[graft.StoreGen]] stamp as every loaded server,
+  * revalidated per call — a
   * `mergeIntoStore`/`deleteDocs`/`updateDocs` under a live server
   * re-derives the ranges and re-routes on the very next lookup. */
 final class LoadedWildcardServer(spark: SparkSession, cgDir: String,
-                                 point: Option[PointServer] = None,
-                                 defaultK: Int = 3) {
+                                 point: Option[PointServer] = None) {
 
-  private val hfs = new org.apache.hadoop.fs.Path(cgDir)
-    .getFileSystem(spark.sparkContext.hadoopConfiguration)
-
-  private def storeVersion(): Long =
-    DirVersion.of(hfs, cgDir,
-      Seq(cgDir, s"$cgDir/${CharKGramIndex.VocabDfDir}",
-        s"$cgDir/${CharKGramIndex.DeletedDocsDir}",
-        s"$cgDir/${CharKGramIndex.AppliedOpsDir}"))
-
-  private final case class Tmpl(
-      ref: AtomicReference[java.util.HashSet[UTF8String]],
-      df: org.apache.spark.sql.DataFrame)
-
-  private final class State(val version: Long) {
+  private final class State {
     /** Sorted (lo, hi, file) gram ranges — O(files) driver state. */
     val ranges: Array[(String, String, String)] =
       CharKGramIndex.load(spark, cgDir)
@@ -230,63 +210,32 @@ final class LoadedWildcardServer(spark: SparkSession, cgDir: String,
         .sortBy(_._1)
 
     /** Gram length from the range endpoints (grams are fixed-width
-      * `$`-padded windows); empty store → the constructor default. */
-    val k: Int = ranges.headOption.map(_._1.length).getOrElse(defaultK)
+      * `$`-padded windows); empty store → the default. */
+    val k: Int = ranges.headOption.map(_._1.length)
+      .getOrElse(WildcardServer.DefaultK)
 
-    val pool = new TemplatePool[Seq[String], Tmpl](buildTmpl,
+    val pool = new TemplatePool[Seq[String], WildcardServer.Tmpl](
+      files => WildcardServer.tmpl(inGrams => spark.read.parquet(files: _*)
+        .filter(inGrams).select(explode(col("terms")).as("term"))),
       maxKeys = 32)
+
+    def files(p: WildcardServer.Pattern): Seq[String] =
+      p.grams.flatMap(g => Routing.route(ranges, g)).distinct.sorted
   }
 
-  private def buildTmpl(files: Seq[String]): Tmpl = {
-    val ref = new AtomicReference[java.util.HashSet[UTF8String]](
-      new java.util.HashSet)
-    val inGrams = Bridge.column(
-      RefSetContains(Bridge.expression(col("gram")), ref))
-    val df = spark.read.parquet(files: _*)
-      .filter(inGrams)
-      .select(explode(col("terms")).as("term"))
-      .coalesce(1)
-      .groupBy(col("term")).agg(count(lit(1)).as("ng"))
-    df.queryExecution.executedPlan // plan + codegen at build
-    Tmpl(ref, df)
-  }
-
-  private val stateRef = new AtomicReference[State](
-    new State(storeVersion()))
-
-  private def current(): State = {
-    val st = stateRef.get
-    if (st.version == storeVersion()) st
-    else this.synchronized {
-      val held = stateRef.get
-      val v = storeVersion()
-      if (held.version == v) held
-      else {
-        val fresh = new State(v)
-        stateRef.set(fresh)
-        fresh
-      }
-    }
-  }
+  private val snapshot = new Snapshot[State](
+    Snapshot.store(spark, cgDir, CharKGramIndex.stampDirs(cgDir)),
+    () => new State, _ => ())
 
   /** Drop the snapshot and re-derive the ranges NOW (the explicit
     * hammer for eventually consistent listings). */
-  def refresh(): Unit = this.synchronized {
-    stateRef.set(new State(storeVersion()))
-    ()
-  }
+  def refresh(): Unit = snapshot.refresh()
 
   /** The part files the pattern's lookup would scan (spec hook for
     * the routed-prune claim). */
   private[graft] def routedFiles(pattern: String): Seq[String] = {
-    val st = current()
-    val pat = pattern.toLowerCase(java.util.Locale.ROOT)
-    val padded = s"$$$pat$$"
-    padded.split("\\*", -1).toSeq
-      .flatMap(seg =>
-        (0 to seg.length - st.k).map(i => seg.substring(i, i + st.k)))
-      .distinct
-      .flatMap(g => Routing.route(st.ranges, g)).distinct.sorted
+    val st = snapshot.current()
+    st.files(new WildcardServer.Pattern(pattern, st.k))
   }
 
   /** The pattern's matching vocabulary terms, ascending — identical
@@ -294,48 +243,24 @@ final class LoadedWildcardServer(spark: SparkSession, cgDir: String,
     * over the same store. */
   def lookup(pattern: String): Seq[String] = {
     require(pattern.contains("*"), "pattern needs at least one *")
-    val st = current()
-    val pat = pattern.toLowerCase(java.util.Locale.ROOT)
-    val re = java.util.regex.Pattern
-      .compile(QueryEngine.wildcardRegex(pat))
-    val padded = s"$$$pat$$"
-    val segGrams = padded.split("\\*", -1).toSeq
-      .flatMap(seg =>
-        (0 to seg.length - st.k).map(i => seg.substring(i, i + st.k)))
-      .distinct
-    if (segGrams.isEmpty)
+    val st = snapshot.current()
+    val p = new WildcardServer.Pattern(pattern, st.k)
+    if (p.grams.isEmpty)
       // all segments shorter than k: nothing narrows — the un-cached
       // arm pays a full distinct-vocabulary scan per call
       CharKGramIndex.load(spark, cgDir)
         .select(explode(col("terms")).as("term")).distinct()
         .collect().map(_.getString(0))
-        .filter(t => re.matcher(t).matches()).sorted.toSeq
+        .filter(p.matches).sorted.toSeq
     else {
-      val files = segGrams
-        .flatMap(g => Routing.route(st.ranges, g)).distinct.sorted
+      val files = st.files(p)
       if (files.isEmpty) Seq.empty // no file covers any gram
-      else {
-        val set = new java.util.HashSet[UTF8String]()
-        segGrams.foreach(g => set.add(UTF8String.fromString(g)))
-        st.pool.withInstance(files) { t =>
-          t.ref.set(set)
-          t.df.collect()
-            .filter(r => r.getLong(1) == segGrams.size &&
-              re.matcher(r.getString(0)).matches())
-            .map(_.getString(0)).sorted.toSeq
-        }
-      }
+      else st.pool.withInstance(files)(_.lookup(p))
     }
   }
 
   /** Served wildcard RETRIEVAL over the routed lookup — same scoring
     * tail as [[WildcardServer.search]]. */
-  def search(pattern: String): Seq[(Long, String, Double)] = {
-    val ps = point.getOrElse(throw new IllegalStateException(
-      "wildcard retrieval needs the PointServer scoring arm — " +
-        "construct with point = Some(...)"))
-    val stems = lookup(pattern)
-      .flatMap(graft.text.TextPipeline.processContent).distinct
-    ps.searchTerms(stems)
-  }
+  def search(pattern: String): Seq[(Long, String, Double)] =
+    WildcardServer.retrieve(point, lookup(pattern))
 }

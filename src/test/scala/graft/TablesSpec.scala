@@ -120,5 +120,11 @@ class TablesSpec extends SparkSpec {
     assert(Tables.parquetRowCount(spark, dir) === Some(1000L))
     // missing path falls back to None (callers then count())
     assert(Tables.parquetRowCount(spark, dir + "/nope") === None)
+    // a PARTITIONED directory has no top-level part file: None, not
+    // Some(0) — the footers at the top cover none of its rows
+    val parted = Files.createTempDirectory("prc_parted").toString
+    spark.range(0, 1000).selectExpr("id", "id % 3 as p")
+      .write.mode("overwrite").partitionBy("p").parquet(parted)
+    assert(Tables.parquetRowCount(spark, parted) === None)
   }
 }

@@ -163,6 +163,54 @@ class Bm25GenUpdateSpec extends SparkSpec {
     advanced("compact")
   }
 
+  test("the O(1) staleness generation on the INVERTED and POSITIONAL " +
+    "stores: write (fresh and rebuild), appendToStore, deleteDocs and " +
+    "compactDeletes each advance it — the precondition for every " +
+    "serving snapshot's one-read stamp") {
+    import spark.implicits._
+    import graft.index.{InvertedIndex, PositionalIndex}
+    val corpus = IrEngine.corpus(spark, dir)
+    val delta = Seq(("Dzz001", "merge stream zzqgenappend"))
+      .toDF("docid", "content")
+    val victim = corpus.select(col("docid")).orderBy(col("docid"))
+      .head().getString(0)
+    def advances(store: String)(ops: (String, () => Unit)*): Unit = {
+      val root = new org.apache.hadoop.fs.Path(store)
+      ops.foreach { case (what, op) =>
+        val before = graft.StoreGen.read(fs, root)
+        op()
+        val after = graft.StoreGen.read(fs, root).getOrElse(
+          fail(s"$what left no ${graft.StoreGen.GenFile} under $store"))
+        assert(before.forall(after > _),
+          s"$what did not advance the store generation")
+      }
+    }
+    val inv = tmp("graft_gen_inv")
+    advances(inv)(
+      "inverted write" -> (() =>
+        InvertedIndex.write(InvertedIndex.build(spark, corpus, k = 1), inv)),
+      "inverted rebuild" -> (() =>
+        InvertedIndex.write(InvertedIndex.build(spark, corpus, k = 1), inv)),
+      "inverted append" -> (() =>
+        InvertedIndex.appendToStore(spark, inv, delta, k = 1)),
+      "inverted delete" -> (() =>
+        InvertedIndex.deleteDocs(spark, inv, Seq(victim).toDF("docid"))),
+      "inverted compact" -> (() =>
+        InvertedIndex.compactDeletes(spark, inv)))
+    val pos = tmp("graft_gen_pos")
+    advances(pos)(
+      "positional write" -> (() =>
+        PositionalIndex.write(PositionalIndex.build(spark, corpus), pos)),
+      "positional rebuild" -> (() =>
+        PositionalIndex.write(PositionalIndex.build(spark, corpus), pos)),
+      "positional append" -> (() =>
+        PositionalIndex.appendToStore(spark, pos, delta)),
+      "positional delete" -> (() =>
+        PositionalIndex.deleteDocs(spark, pos, Seq(victim).toDF("docid"))),
+      "positional compact" -> (() =>
+        PositionalIndex.compactDeletes(spark, pos)))
+  }
+
   test("updating a DELETED doc revives it (the re-add path), for " +
     "both tombstone flavors — INCLUDING a doc with pending " +
     "generations from an earlier update (its superseded mass must " +
