@@ -7,7 +7,8 @@ import org.apache.hadoop.fs.{FileSystem, Path}
   * a staged-marker rename; the shared low-level commit helpers
   * ([[graft.queries.IrSql.swapIn]]/`moveParts`,
   * [[graft.index.StoreSurgery]]'s swap,
-  * [[graft.index.CharKGramIndex]]'s transaction finish) additionally
+  * [[graft.index.CharKGramIndex]]'s transaction finish, and the
+  * [[graft.index.PostingsStore]] layout write) additionally
   * bump `<storeRoot>/_graft_store_gen` — so a server's
   * [[graft.query.DirVersion]] check becomes ONE ≤32-byte read
   * instead of a listing plus a positioned footer read PER PART FILE

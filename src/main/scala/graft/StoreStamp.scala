@@ -1,5 +1,7 @@
 package graft
 
+import org.apache.hadoop.fs.{FileSystem, Path}
+
 /** CONTENT stamp of a parquet table (a `<table>.parquet` file or
   * part-file directory) — the cache key the session-scoped store
   * caches ([[graft.queries.IrSql]] bm25 stats store,
@@ -17,32 +19,36 @@ package graft
 object StoreStamp {
 
   def of(dir: String, table: String): String = {
-    import java.nio.file.{Files, Paths}
-    import scala.jdk.CollectionConverters._
-    val p = Paths.get(dir, s"$table.parquet")
-    if (Files.isDirectory(p)) {
-      val ls = Files.list(p)
-      try ls.iterator().asScala.toSeq.sortBy(_.toString)
-        .filter(_.toString.endsWith(".parquet"))
-        .map(f => s"${f.getFileName}:${Files.size(f)}:" +
-          s"${Files.getLastModifiedTime(f).toMillis}:${tailCrc(f)}")
+    val p = new Path(dir, s"$table.parquet")
+    val st = localFs.getFileStatus(p)
+    if (st.isDirectory)
+      localFs.listStatus(p)
+        .filter(f => f.isFile && f.getPath.getName.endsWith(".parquet"))
+        .sortBy(_.getPath.getName)
+        .map(f => s"${f.getPath.getName}:${f.getLen}:" +
+          s"${f.getModificationTime}:${tailCrc(localFs, f.getPath, f.getLen)}")
         .mkString(",")
-      finally ls.close()
-    } else s"${Files.size(p)}:" +
-      s"${Files.getLastModifiedTime(p).toMillis}:${tailCrc(p)}"
+    else s"${st.getLen}:${st.getModificationTime}:" +
+      s"${tailCrc(localFs, p, st.getLen)}"
   }
 
-  private def tailCrc(p: java.nio.file.Path): Long = {
-    val ch = java.nio.channels.FileChannel.open(
-      p, java.nio.file.StandardOpenOption.READ)
-    try {
-      val n = math.min(64L, ch.size()).toInt
-      val buf = java.nio.ByteBuffer.allocate(n)
-      ch.position(ch.size() - n)
-      while (buf.hasRemaining && ch.read(buf) >= 0) {}
-      val crc = new java.util.zip.CRC32
-      crc.update(buf.array(), 0, buf.position())
-      crc.getValue
-    } finally ch.close()
+  /** The raw (checksum-free) local filesystem: a table rewritten in
+    * place by a tool that leaves its `.crc` sidecars stale must still
+    * stamp, not fail a checksum. */
+  private lazy val localFs: FileSystem =
+    FileSystem.getLocal(new org.apache.hadoop.conf.Configuration())
+      .getRawFileSystem
+
+  /** CRC32 of the last ≤64 bytes of a file (its parquet footer tail) —
+    * also folded by [[graft.query.DirVersion]]. */
+  private[graft] def tailCrc(hfs: FileSystem, p: Path, len: Long): Long = {
+    val n = math.min(64L, len).toInt
+    if (n == 0) return 0L
+    val buf = new Array[Byte](n)
+    val in = hfs.open(p)
+    try in.readFully(len - n, buf, 0, n) finally in.close()
+    val crc = new java.util.zip.CRC32
+    crc.update(buf, 0, n)
+    crc.getValue
   }
 }

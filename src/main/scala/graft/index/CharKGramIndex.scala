@@ -112,7 +112,7 @@ object CharKGramIndex {
 
   /** Every dir a chargram store serves from — the gram table (the
     * store root itself) and its maintenance sidecars (the
-    * [[InvertedIndex.stampDirs]] contract). */
+    * [[PostingsStore.stampDirs]] contract). */
   private[graft] def stampDirs(dir: String): Seq[String] =
     dir +: Seq(VocabDfDir, DeletedDocsDir, AppliedOpsDir)
       .map(n => s"$dir/$n")

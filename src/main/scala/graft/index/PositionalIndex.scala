@@ -2,7 +2,6 @@ package graft.index
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.corpus.TrecCorpus
 import graft.text.TextPipeline
 
 /** POSITIONAL inverted index: postings carry the token offsets of every
@@ -38,13 +37,7 @@ object PositionalIndex {
     * pruning. */
   def build(spark: SparkSession, corpus: DataFrame): PIndex = {
     TextPipeline.register(spark)
-    val dm = TrecCorpus.docnoMappingScalable(spark, corpus)
-    val nDocs = dm.count()
-    val mapParts = math.max(1L, math.min(
-      spark.sessionState.conf.numShufflePartitions.toLong,
-      nDocs / 1000000L + 1)).toInt
-    val docMap = dm.coalesce(mapParts)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val (docMap, nDocs) = PostingsStore.numbered(spark, corpus)
     val joined = InvertedIndex.corpusDocJoin(corpus, docMap, nDocs)
     // a doc's occurrence lists are complete within its own row, so the
     // (term → sorted positions) grouping happens entirely MAP-SIDE in
@@ -88,168 +81,63 @@ object PositionalIndex {
     * exists to do). Contract: delta docids are disjoint from the
     * indexed corpus. */
   def merge(spark: SparkSession, ix: PIndex, delta: DataFrame): PIndex = {
-    val base = {
-      val r = ix.docMap.agg(max(col("docno"))).head()
-      if (r.isNullAt(0)) 0L else r.getLong(0)
-    }
+    val base = PostingsStore.maxDocno(ix.docMap)
     val deltaIx = build(spark, delta)
     import org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
     PIndex(
-      ix.postings.unionByName(
-          deltaIx.postings.withColumn("docno", col("docno") + base))
+      ix.postings.unionByName(PostingsStore.shift(deltaIx.postings, base))
         .persist(MEMORY_AND_DISK),
-      ix.docMap.unionByName(
-          deltaIx.docMap.withColumn("docno", col("docno") + base))
+      ix.docMap.unionByName(PostingsStore.shift(deltaIx.docMap, base))
         .persist(MEMORY_AND_DISK),
       ix.nDocs + deltaIx.nDocs)
   }
 
-  // ---- store-level delta APPEND (the re-crawl / update write path) --
-
-  private val AppendPostingsDir = "_graft_delta_postings"
-  private val AppendDocMapDir = "_graft_delta_doc_map"
-  private val AppendMarker = "_graft_append_inflight"
+  /** The positional store's lifecycle ([[PostingsStore]]): postings
+    * keyed on term, nothing derived (df is a postings-list length). */
+  private[graft] val store =
+    PostingsStore("pos_postings", "term", Nil, (_, _, _) => ())
 
   /** Incremental maintenance, STORE level: append a DELTA corpus
     * directly to a [[write]]-layout store — the delta-proportional
-    * write path the frame-level [[merge]] cannot offer (persisting a
-    * merged frame rewrites the whole store). Only the delta is
-    * tokenized; its docnos continue densely after the store's RAW max
-    * (tombstoned docnos are NEVER reused — a reused docno would
-    * inherit its tombstone and vanish from the live view); its
-    * postings/doc_map part files land beside the existing ones,
-    * range-laid WITHIN the delta (zone-map routing stays file-pruned —
-    * a term lookup touches ≤1 file per append generation, the LSM
-    * read-amplification shape the BM25 store already documents, with
-    * the same remedy: periodic global re-range via a rebuild-style
-    * compaction when generations accumulate); the two zone-map
-    * manifests extend by exactly the added files' ranges
-    * ([[StoreSurgery.extendRanges]] — no store-wide rescan); and
-    * corpus_stats goes to the live count.
+    * write path the frame-level [[merge]] cannot offer
+    * ([[PostingsStore.append]]). Only the delta is tokenized; its
+    * docnos continue densely after the store's RAW max (tombstoned
+    * docnos are never reused); its part files land beside the
+    * existing ones, range-laid WITHIN the delta (a term lookup touches
+    * ≤1 file per append generation — the LSM read-amplification shape
+    * the BM25 store documents, with the same remedy: a rebuild-style
+    * re-range when generations accumulate); the manifests extend by
+    * exactly the added files; corpus_stats goes to the live count. A
+    * compressed store ([[write]]'s `pos_z`) gets its delta rows
+    * encoded the same way.
     *
     * Contract: delta docids are disjoint from the store's LIVE docids
     * (enforced). A RE-INGEST (takedown-then-replace, the re-crawl
     * shape) is [[deleteDocs]] of the old version followed by this
-    * append of the new: the pending tombstone hides the old row at
-    * docno n while the new version serves at a fresh docno — no
-    * reclaim required between the two ([[compactDeletes]] collects
-    * the dead rows whenever maintenance next runs).
-    *
-    * Crash safety (the [[graft.queries.IrSql.mergeBm25Stats]] staged
-    * protocol, with the marker recording the ADDED file names so the
-    * manifest derive replays exactly): stage both delta artifacts
-    * inside the store, COMMIT by writing the marker, rename the parts
-    * in, derive (manifest extension + live doc count — both
-    * idempotent), clear the marker. [[recoverAppend]] at every
-    * maintenance entry rolls an uncommitted attempt back or completes
-    * a committed one. Run behind the serving quiesce; the stamped
-    * servers ([[graft.query.LoadedPhraseServer]]) detect the mutation. */
+    * append of the new: the pending tombstone hides the old row while
+    * the new version serves at a fresh docno — no reclaim required
+    * between the two ([[compactDeletes]] collects the dead rows
+    * whenever maintenance next runs). */
   def appendToStore(spark: SparkSession, dir: String, delta: DataFrame,
                     rowsPerFile: Long = InvertedIndex.WriteRowsPerFile)
-      : Unit = {
-    recoverAppend(spark, dir)
-    recoverPosDelete(spark, dir)
-    import org.apache.hadoop.fs.Path
-    val root = new Path(dir)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val rawMap = spark.read.parquet(s"$dir/doc_map")
-    val liveMap = readTombs(spark, dir)
-      .fold(rawMap)(t =>
-        rawMap.join(broadcast(t), Seq("docno"), "left_anti"))
-    // stage the delta ONCE: the disjointness pass below fully
-    // evaluates it, and build() re-reads it (the InvertedIndex
-    // appendToStore discipline)
-    val d = { import graft.ops.Stage.StageOps; delta.stage() }
-    require(d.join(liveMap, Seq("docid"), "left_semi")
-        .limit(1).count() == 0,
-      "delta docids must be disjoint from the store's LIVE docids — " +
-        "a re-ingest deletes the old version first (deleteDocs)")
-    val base = {
-      val r = rawMap.agg(max(col("docno"))).head()
-      if (r.isNullAt(0)) 0L else r.getLong(0)
-    }
-    val dIx = build(spark, d)
-    try {
-      if (dIx.nDocs == 0) return
+      : Unit =
+    store.append(spark, dir, delta, rowsPerFile) { d =>
       // the store's footer schema decides the postings layout (the
-      // load() branch): a compressed store gets varint-gap delta rows
+      // load() branch)
       val compressed = spark.read.parquet(s"$dir/pos_postings")
         .columns.contains("pos_z")
-      val post0 = dIx.postings.withColumn("docno", col("docno") + base)
-      val post =
-        if (compressed)
-          post0.select(col("term"), col("docno"),
-            posEnc(col("positions")).as("pos_z"), col("tf"))
-        else post0
-      val nPost = math.max(1L,
-        (dIx.postings.count() + rowsPerFile - 1) / rowsPerFile).toInt
-      post.repartitionByRange(nPost, col("term"))
-        .sortWithinPartitions("term")
-        .write.mode("overwrite")
-        .parquet(new Path(root, AppendPostingsDir).toString)
-      val nDoc = math.max(1L,
-        (dIx.nDocs + rowsPerFile - 1) / rowsPerFile).toInt
-      dIx.docMap.withColumn("docno", col("docno") + base)
-        .repartitionByRange(nDoc, col("docno"))
-        .sortWithinPartitions("docno")
-        .write.mode("overwrite")
-        .parquet(new Path(root, AppendDocMapDir).toString)
-      val added = StoreSurgery.stagedAppendNames(fs, root,
-        Seq(AppendPostingsDir -> "pos_postings",
-          AppendDocMapDir -> "doc_map"))
-      StoreSurgery.commitAppendMarker(fs, root, AppendMarker, added)
-      finishAppend(spark, dir, added)
-    } finally {
-      dIx.postings.unpersist(); dIx.docMap.unpersist(); ()
+      val ix = build(spark, d)
+      PostingsStore.Delta(encoded(ix.postings, compressed), ix.docMap,
+        ix.nDocs, () => { ix.postings.unpersist(); ix.docMap.unpersist(); () })
     }
-  }
 
-  /** Move the staged parts in, extend the manifests by the added
-    * files, recompute the live doc count, clear the marker — every
-    * step idempotent from the marker's file list + full store state,
-    * so a crash anywhere replays. */
-  private def finishAppend(spark: SparkSession, dir: String,
-                           added: Seq[String]): Unit = {
-    import org.apache.hadoop.fs.Path
-    val root = new Path(dir)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    graft.queries.IrSql.moveParts(fs, new Path(root, AppendPostingsDir),
-      new Path(root, "pos_postings"))
-    graft.queries.IrSql.moveParts(fs, new Path(root, AppendDocMapDir),
-      new Path(root, "doc_map"))
-    fs.delete(new Path(root, AppendPostingsDir), true)
-    fs.delete(new Path(root, AppendDocMapDir), true)
-    StoreSurgery.extendRanges(spark, dir, "pos_postings",
-      "pos_postings_ranges", "term",
-      added.collect { case n if n.startsWith("pos_postings/") =>
-        n.stripPrefix("pos_postings/") })
-    StoreSurgery.extendRanges(spark, dir, "doc_map",
-      "doc_map_ranges", "docno",
-      added.collect { case n if n.startsWith("doc_map/") =>
-        n.stripPrefix("doc_map/") })
-    val dm = spark.read.parquet(s"$dir/doc_map")
-    val live = readTombs(spark, dir)
-      .fold(dm)(t => dm.join(broadcast(t), Seq("docno"), "left_anti"))
-    graft.queries.IrSql.swapIn(spark, s"$dir/corpus_stats",
-      live.agg(count(lit(1)).as("n_docs")))
-    fs.delete(new Path(root, AppendMarker), false)
-    ()
-  }
-
-  /** Crash recovery for [[appendToStore]] — the shared
-    * [[StoreSurgery.recoverAppend]] branching over this store's
-    * artifacts. Safe when no append was in flight. */
-  private[graft] def recoverAppend(spark: SparkSession,
-                                   dir: String): Unit = {
-    import org.apache.hadoop.fs.Path
-    val root = new Path(dir)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    Seq("pos_postings_ranges", "doc_map_ranges", "corpus_stats")
-      .foreach(graft.queries.IrSql.recoverArtifact(spark, dir, _))
-    StoreSurgery.recoverAppend(fs, root, AppendMarker,
-      Seq(AppendPostingsDir, AppendDocMapDir),
-      added => finishAppend(spark, dir, added))
-  }
+  /** Postings in the on-disk row shape: `compressed` stores position
+    * lists as varint gap bytes (`pos_z`, [[posEnc]]). */
+  private def encoded(postings: DataFrame, compressed: Boolean): DataFrame =
+    if (compressed)
+      postings.select(col("term"), col("docno"),
+        posEnc(col("positions")).as("pos_z"), col("tf"))
+    else postings
 
   /** Varint delta-encode a SORTED ascending position array: first
     * value absolute, then gaps — all non-negative, so each fits 1–2
@@ -298,17 +186,12 @@ object PositionalIndex {
       out.toSeq
     })
 
-  /** Every artifact dir a [[write]]-layout store serves from (the
-    * [[InvertedIndex.stampDirs]] contract). */
-  private[graft] def stampDirs(dir: String): Seq[String] =
-    Seq("pos_postings", "doc_map", "corpus_stats", "pos_postings_ranges",
-      "doc_map_ranges", TombstonesDir)
-      .map(n => s"$dir/$n")
-
-  /** Durable layout, same conventions as [[InvertedIndex.write]]:
-    * postings range-partitioned + sorted on term (a phrase query's
-    * per-term literal filters prune to one file / row group each),
-    * doc_map range-partitioned on docno, scalar corpus stats.
+  /** Durable layout, the [[PostingsStore]] one [[InvertedIndex.write]]
+    * uses: postings range-partitioned + sorted on term (a phrase
+    * query's per-term literal filters prune to one file / row group
+    * each), doc_map range-partitioned on docno, scalar corpus stats,
+    * zone-map manifests a serving node
+    * ([[graft.query.LoadedPhraseServer]]) routes by.
     *
     * `compressed = true` stores position lists as varint gap bytes
     * (`pos_z` BINARY) instead of `positions ARRAY<INT>` — [[load]]
@@ -320,46 +203,9 @@ object PositionalIndex {
     * `positions` column fails loudly, never silently). */
   def write(ix: PIndex, dir: String,
             rowsPerFile: Long = InvertedIndex.WriteRowsPerFile,
-            compressed: Boolean = false): Unit = {
-    val spark = ix.docMap.sparkSession
-    val post0 =
-      if (compressed)
-        ix.postings.select(col("term"), col("docno"),
-          posEnc(col("positions")).as("pos_z"), col("tf"))
-      else ix.postings
-    val nPost = math.max(1L,
-      (ix.postings.count() + rowsPerFile - 1) / rowsPerFile).toInt
-    post0.repartitionByRange(nPost, col("term"))
-      .sortWithinPartitions("term")
-      .write.mode("overwrite").parquet(s"$dir/pos_postings")
-    val nDoc = math.max(1L,
-      (ix.docMap.count() + rowsPerFile - 1) / rowsPerFile).toInt
-    ix.docMap.repartitionByRange(nDoc, col("docno"))
-      .sortWithinPartitions("docno")
-      .write.mode("overwrite").parquet(s"$dir/doc_map")
-    spark.range(1).select(lit(ix.nDocs).as("n_docs"))
-      .write.mode("overwrite").parquet(s"$dir/corpus_stats")
-    // zone-map manifests, the [[InvertedIndex.write]] convention: per-
-    // file key ranges of the two range-partitioned artifacts, so a
-    // serving node ([[graft.query.LoadedPhraseServer]]) routes a
-    // phrase's terms (and the result docnos) to their 1-2 files driver-
-    // side instead of scanning the index per query.
-    spark.read.parquet(s"$dir/pos_postings")
-      .groupBy(input_file_name().as("file"))
-      .agg(min(col("term")).as("lo"), max(col("term")).as("hi"))
-      .coalesce(1)
-      .write.mode("overwrite").parquet(s"$dir/pos_postings_ranges")
-    spark.read.parquet(s"$dir/doc_map")
-      .groupBy(input_file_name().as("file"))
-      .agg(min(col("docno")).as("lo"), max(col("docno")).as("hi"))
-      .coalesce(1)
-      .write.mode("overwrite").parquet(s"$dir/doc_map_ranges")
-    // start (or advance) the O(1) staleness generation (the
-    // InvertedIndex.write rationale: rebuilds at a mutated dir)
-    graft.StoreGen.bump(new org.apache.hadoop.fs.Path(dir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration),
-      new org.apache.hadoop.fs.Path(dir))
-  }
+            compressed: Boolean = false): Unit =
+    store.write(dir, encoded(ix.postings, compressed), ix.docMap, ix.nDocs,
+      rowsPerFile)
 
   /** Load a [[write]]-layout index; scans stay parquet-pruned (no
     * caching here — the caller decides what to pin). A store with
@@ -380,145 +226,24 @@ object PositionalIndex {
         raw.select(col("term"), col("docno"),
           posDec(col("pos_z")).as("positions"), col("tf"))
       else raw
-    readTombs(spark, dir) match {
-      case Some(t) =>
-        PIndex(post.join(broadcast(t), Seq("docno"), "left_anti"),
-          spark.read.parquet(s"$dir/doc_map")
-            .join(broadcast(t), Seq("docno"), "left_anti"), n)
-      case None =>
-        PIndex(post, spark.read.parquet(s"$dir/doc_map"), n)
-    }
+    val live = PostingsStore.live(spark, dir)
+    PIndex(live(post), live(spark.read.parquet(s"$dir/doc_map")), n)
   }
 
-  private val TombstonesDir = "tombstones"
-  private val DeleteStaging = "_graft_tomb_new"
-  private val DeleteMarker = "_graft_delete_inflight"
-
-  /** The store's tombstoned docnos, if any deletions are pending. */
-  private[graft] def readTombs(spark: SparkSession,
-                               dir: String): Option[DataFrame] = {
-    val p = new org.apache.hadoop.fs.Path(s"$dir/$TombstonesDir")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(p) && fs.listStatus(p)
-        .exists(f => f.isFile && f.getPath.getName.endsWith(".parquet")))
-      Some(spark.read.parquet(p.toString).select(col("docno")))
-    else None
-  }
-
-  /** TAKEDOWN-SHAPED DELETION from a written positional index: the
-    * docids' docnos are TOMBSTONED (rows stay on disk until
-    * [[compactDeletes]] reclaims them; [[load]] serves the live view
-    * through an anti-join) and corpus_stats is recomputed to the live
-    * doc count. Crash safety: staged tombstones + marker commit (the
-    * [[graft.queries.IrSql.deleteBm25Docs]] protocol) —
-    * [[recoverPosDelete]] at every maintenance entry completes a
-    * committed delete (corpus_stats recomputed idempotently from the
-    * FULL tombstone set) or rolls an uncommitted one back. Run behind
-    * the serving quiesce; the stamped servers detect the mutation. */
+  /** TAKEDOWN-SHAPED DELETION from a written positional index
+    * ([[PostingsStore.delete]]): the docids' docnos are TOMBSTONED
+    * (rows stay on disk until [[compactDeletes]] reclaims them;
+    * [[load]] serves the live view through an anti-join) and
+    * corpus_stats is recomputed to the live doc count. */
   def deleteDocs(spark: SparkSession, dir: String,
-                 docids: DataFrame): Unit = {
-    recoverAppend(spark, dir)
-    recoverPosDelete(spark, dir)
-    import org.apache.hadoop.fs.Path
-    import graft.ops.Stage.StageOps
-    val root = new Path(dir)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val del0 = spark.read.parquet(s"$dir/doc_map")
-      .join(docids.select(col("docid")).distinct(), Seq("docid"),
-        "left_semi")
-      .select(col("docno"))
-    val del = readTombs(spark, dir)
-      .fold(del0)(t => del0.join(t, Seq("docno"), "left_anti"))
-      .stage()
-    if (del.limit(1).count() == 0) return
-    del.write.mode("overwrite")
-      .parquet(new Path(root, DeleteStaging).toString)
-    fs.create(new Path(root, DeleteMarker), false).close() // COMMIT
-    graft.queries.IrSql.moveParts(fs, new Path(root, DeleteStaging),
-      new Path(root, TombstonesDir))
-    fs.delete(new Path(root, DeleteStaging), true)
-    finishPosDelete(spark, dir)
-  }
+                 docids: DataFrame): Unit =
+    store.delete(spark, dir, docids)
 
-  /** Recompute corpus_stats to the live count from the FULL tombstone
-    * set (idempotent), then clear the marker. */
-  private def finishPosDelete(spark: SparkSession, dir: String): Unit = {
-    import org.apache.hadoop.fs.Path
-    val root = new Path(dir)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    readTombs(spark, dir).foreach { t =>
-      graft.queries.IrSql.swapIn(spark, s"$dir/corpus_stats",
-        spark.read.parquet(s"$dir/doc_map")
-          .join(broadcast(t), Seq("docno"), "left_anti")
-          .agg(count(lit(1)).as("n_docs")))
-    }
-    fs.delete(new Path(root, DeleteMarker), false)
-    ()
-  }
-
-  /** Crash recovery for [[deleteDocs]] (the marker protocol). */
-  private[graft] def recoverPosDelete(spark: SparkSession,
-                                      dir: String): Unit = {
-    import org.apache.hadoop.fs.Path
-    val root = new Path(dir)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    graft.queries.IrSql.recoverArtifact(spark, dir, "corpus_stats")
-    StoreSurgery.recover(spark, s"$dir/pos_postings")
-    StoreSurgery.recover(spark, s"$dir/doc_map")
-    if (!fs.exists(new Path(root, DeleteMarker))) {
-      fs.delete(new Path(root, DeleteStaging), true)
-      ()
-    } else {
-      graft.queries.IrSql.moveParts(fs, new Path(root, DeleteStaging),
-        new Path(root, TombstonesDir))
-      fs.delete(new Path(root, DeleteStaging), true)
-      finishPosDelete(spark, dir)
-    }
-  }
-
-  /** Physically reclaim tombstoned rows: SURGICALLY rewrite only the
-    * part files of the two authoritative artifacts that hold a dead
-    * row ([[StoreSurgery.reclaim]] — staged marker commit, range
-    * layout preserved, untouched files byte-identical), refresh the
-    * two zone-map manifests, then drop the tombstones. The read view
-    * is identical outside the swap window (the anti-join becomes a
-    * no-op as rows leave disk), corpus_stats is already live, and the
-    * cost follows the takedown's file footprint — the prior
-    * full-table repartition measured MORE than a rebuild at 26×. */
-  def compactDeletes(spark: SparkSession, dir: String): Unit = {
-    recoverAppend(spark, dir)
-    recoverPosDelete(spark, dir)
-    import org.apache.hadoop.fs.Path
-    val root = new Path(dir)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // SURGICAL reclaim from the RAW files (not load()'s decoded view,
-    // so a compressed store stays compressed): only the part files
-    // holding a dead row rewrite ([[StoreSurgery]] — the r13
-    // full-table repartition here measured MORE expensive than a
-    // rebuild at 26×; the file footprint of a takedown is what a
-    // reclaim should cost). A crash mid-way replays — tombstones drop
-    // LAST, so re-entry redoes the (now no-op) surgeries and
-    // refreshes the manifests
-    val tombOpt = readTombs(spark, dir)
-    if (tombOpt.isEmpty) return
-    val tomb = tombOpt.get
-    StoreSurgery.reclaim(spark, s"$dir/pos_postings", "docno", tomb,
-      layoutKey = "term")
-    StoreSurgery.reclaim(spark, s"$dir/doc_map", "docno", tomb,
-      layoutKey = "docno")
-    graft.queries.IrSql.swapIn(spark, s"$dir/pos_postings_ranges",
-      spark.read.parquet(s"$dir/pos_postings")
-        .groupBy(input_file_name().as("file"))
-        .agg(min(col("term")).as("lo"), max(col("term")).as("hi"))
-        .coalesce(1))
-    graft.queries.IrSql.swapIn(spark, s"$dir/doc_map_ranges",
-      spark.read.parquet(s"$dir/doc_map")
-        .groupBy(input_file_name().as("file"))
-        .agg(min(col("docno")).as("lo"), max(col("docno")).as("hi"))
-        .coalesce(1))
-    fs.delete(new Path(root, TombstonesDir), true)
-    ()
-  }
+  /** Physically reclaim tombstoned rows ([[PostingsStore.compact]]):
+    * only the part files holding a dead row rewrite, from the RAW
+    * files, so a compressed store stays compressed. */
+  def compactDeletes(spark: SparkSession, dir: String): Unit =
+    store.compact(spark, dir)
 
   /** Exact phrase search: documents containing the query terms at
     * CONSECUTIVE pipeline-token positions, with the phrase occurrence

@@ -29,7 +29,9 @@ import org.apache.spark.sql.functions._
   * [[recover]] (run at every maintenance entry) rolls an uncommitted
   * attempt back or completes a committed one. Run behind the serving
   * quiesce like all store maintenance; the stamped servers detect
-  * the rewrite. */
+  * the rewrite. Callers: [[PostingsStore.compact]] (the inverted and
+  * positional stores) and the BM25 store's compaction
+  * ([[graft.queries.IrSql.replayCompact]]). */
 private[graft] object StoreSurgery {
 
   private val StagedDir = "_graft_rc_new"
@@ -98,10 +100,7 @@ private[graft] object StoreSurgery {
       .sortWithinPartitions(sortCols.map(col): _*)
       .write.mode("overwrite").parquet(staged.toString)
     // COMMIT POINT
-    val out = fs.create(new Path(root, Marker), false)
-    try out.write(touched.mkString("\n")
-      .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally out.close()
+    writeLines(fs, new Path(root, Marker), touched)
     finishSwap(fs, root, touched)
     touched.length
   }
@@ -144,105 +143,27 @@ private[graft] object StoreSurgery {
     val root = new Path(tableDir)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val marker = new Path(root, Marker)
-    if (!fs.exists(marker)) {
-      fs.delete(new Path(root, StagedDir), true)
-      ()
-    } else {
-      val in = fs.open(marker)
-      val touched =
-        try new String(
-          org.apache.hadoop.io.IOUtils.readFullyToByteArray(in),
-          java.nio.charset.StandardCharsets.UTF_8)
-          .split("\n").toSeq.filter(_.nonEmpty)
-        finally in.close()
-      finishSwap(fs, root, touched)
-    }
+    if (fs.exists(marker)) finishSwap(fs, root, readLines(fs, marker))
+    else { fs.delete(new Path(root, StagedDir), true); () }
   }
 
-  // ---- staged-append plumbing shared by the row-store delta appends
-  // ([[InvertedIndex.appendToStore]], [[PositionalIndex
-  // .appendToStore]]): staged part names, the marker commit, and the
-  // rollback-or-replay recovery branching. The derive step (manifest
-  // extension, stats, counts) stays per-store and must be idempotent
-  // from the marker's file list.
-
-  /** Staged part names as target-relative paths (`table/part-…`),
-    * for (stagedDir → targetTable) pairs under `root`. */
-  def stagedAppendNames(fs: org.apache.hadoop.fs.FileSystem,
-                        root: Path,
-                        pairs: Seq[(String, String)]): Seq[String] =
-    pairs.flatMap { case (stagedDir, target) =>
-      val p = new Path(root, stagedDir)
-      if (!fs.exists(p)) Seq.empty
-      else fs.listStatus(p).toSeq
-        .filter(f => f.isFile && f.getPath.getName.endsWith(".parquet"))
-        .map(f => s"$target/${f.getPath.getName}")
-    }
-
-  /** COMMIT POINT: write the marker listing the added file names, so
-    * the derive step replays exactly. */
-  def commitAppendMarker(fs: org.apache.hadoop.fs.FileSystem,
-                         root: Path, marker: String,
-                         added: Seq[String]): Unit = {
-    val out = fs.create(new Path(root, marker), false)
-    try out.write(added.mkString("\n")
+  /** Write a marker file holding one name per line. */
+  def writeLines(fs: org.apache.hadoop.fs.FileSystem, marker: Path,
+                 lines: Seq[String]): Unit = {
+    val out = fs.create(marker, false)
+    try out.write(lines.mkString("\n")
       .getBytes(java.nio.charset.StandardCharsets.UTF_8))
     finally out.close()
   }
 
-  /** Marker ABSENT → staged dirs are an uncommitted attempt, roll
-    * back; marker PRESENT → `finish` from its file list (the caller's
-    * finish moves remaining parts, derives, and clears the marker).
-    * Safe when no append was in flight. */
-  def recoverAppend(fs: org.apache.hadoop.fs.FileSystem, root: Path,
-                    marker: String, stagedDirs: Seq[String],
-                    finish: Seq[String] => Unit): Unit = {
-    val m = new Path(root, marker)
-    if (!fs.exists(m)) {
-      stagedDirs.foreach { d => fs.delete(new Path(root, d), true); () }
-    } else {
-      val in = fs.open(m)
-      val added =
-        try new String(
-          org.apache.hadoop.io.IOUtils.readFullyToByteArray(in),
-          java.nio.charset.StandardCharsets.UTF_8)
-          .split("\n").toSeq.filter(_.nonEmpty)
-        finally in.close()
-      finish(added)
-    }
-  }
-
-  /** Extend a zone-map manifest by exactly the ADDED files' ranges —
-    * the delta-proportional manifest maintenance a store-level append
-    * needs (the full recompute in `write()` rescans the whole table's
-    * key column; an append should pay only for what it added). Rows
-    * for files not in `addedNames` carry over untouched; the added
-    * files are read directly. IDEMPOTENT: rows are keyed by file
-    * basename (part names are job-unique), so a replay REPLACES the
-    * added rows instead of duplicating them — the derive step of a
-    * marker-committed append can re-run from the marker's file list
-    * after a crash. Goes through [[graft.queries.IrSql.swapIn]]
-    * (callers recover the manifest artifact at every entry). */
-  def extendRanges(spark: SparkSession, storeDir: String,
-                   table: String, manifest: String, key: String,
-                   addedNames: Seq[String]): Unit = {
-    if (addedNames.isEmpty) return
-    val fs = new Path(storeDir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val paths = addedNames.map(n => s"$storeDir/$table/$n")
-      .filter(p => fs.exists(new Path(p)))
-    require(paths.size == addedNames.size,
-      s"append derive: ${addedNames.size - paths.size} added part " +
-        s"file(s) missing under $storeDir/$table — the commit moved " +
-        "them in before the marker cleared, so this is store damage, " +
-        "not a crash state")
-    val newRows = spark.read.parquet(paths: _*)
-      .groupBy(input_file_name().as("file"))
-      .agg(min(col(key)).as("lo"), max(col(key)).as("hi"))
-    val carried = spark.read.parquet(s"$storeDir/$manifest")
-      .filter(!element_at(split(col("file"), "/"), -1)
-        .isin(addedNames: _*))
-    graft.queries.IrSql.swapIn(spark, s"$storeDir/$manifest",
-      carried.unionByName(newRows).coalesce(1))
+  /** The names a [[writeLines]] marker holds. */
+  def readLines(fs: org.apache.hadoop.fs.FileSystem,
+                marker: Path): Seq[String] = {
+    val in = fs.open(marker)
+    try new String(
+      org.apache.hadoop.io.IOUtils.readFullyToByteArray(in),
+      java.nio.charset.StandardCharsets.UTF_8)
+      .split("\n").toSeq.filter(_.nonEmpty)
+    finally in.close()
   }
 }

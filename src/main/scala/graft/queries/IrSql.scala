@@ -742,7 +742,7 @@ object IrSql {
 
   /** Every artifact and maintenance-sidecar dir of a
     * [[writeBm25Stats]] store that its serving snapshot reads (the
-    * [[graft.index.InvertedIndex.stampDirs]] contract). */
+    * [[graft.index.PostingsStore.stampDirs]] contract). */
   private[graft] def bm25StampDirs(storeDir: String): Seq[String] =
     Seq("postings", "doclen", "stats", "corpus", TombstonesDir,
       LazyTombstonesDir, TombCorpusDir, DocGenDir, SupCorpusDir,
@@ -1699,12 +1699,8 @@ object IrSql {
       val parts = fs.listStatus(from)
         .filter(f => f.isFile && f.getPath.getName.endsWith(".parquet"))
       parts.foreach { f =>
-        // rename returns false instead of throwing on some
-        // filesystems — a silent false here would strand committed
-        // delta rows in the staging dir, so check it
-        require(fs.rename(f.getPath, new org.apache.hadoop.fs.Path(
-            to, f.getPath.getName)),
-          s"rename ${f.getPath} -> $to failed mid-merge-commit")
+        renameOrThrow(fs, f.getPath,
+          new org.apache.hadoop.fs.Path(to, f.getPath.getName))
       }
       // the store moved: bump the O(1) staleness generation (no-op
       // replays with nothing to move don't — idle recovery passes
@@ -1799,11 +1795,21 @@ object IrSql {
     df.write.mode("overwrite").parquet(neu.toString)
     // a missing target (repairing a wiped artifact) skips step 2 —
     // local-fs rename throws on a missing source instead of no-op'ing
-    if (fs.exists(t)) { fs.rename(t, old); () }
-    fs.rename(neu, t)
+    if (fs.exists(t)) renameOrThrow(fs, t, old)
+    renameOrThrow(fs, neu, t)
     fs.delete(old, true)
     graft.StoreGen.bump(fs, t.getParent)
   }
+
+  /** `fs.rename`, failing loudly: some filesystems return false
+    * instead of throwing, and a silent false mid-swap lets the next
+    * step nest the replacement inside the live artifact, delete the
+    * only good copy, or strand committed rows in a staging dir. */
+  private[graft] def renameOrThrow(fs: org.apache.hadoop.fs.FileSystem,
+                                   from: org.apache.hadoop.fs.Path,
+                                   to: org.apache.hadoop.fs.Path): Unit =
+    if (!fs.rename(from, to))
+      throw new java.io.IOException(s"rename $from -> $to failed")
 
   /** Crash recovery for [[swapIn]] on one artifact name (see its
     * protocol). Safe to call when no swap was in flight. */
@@ -1825,7 +1831,7 @@ object IrSql {
     } else if (fs.exists(old)) {
       if (fs.exists(new Path(neu, "_SUCCESS"))) {
         // crash between steps 2 and 3 with a complete replacement
-        fs.rename(neu, t)
+        renameOrThrow(fs, neu, t)
         fs.delete(old, true)
         // the completed swap is a mutation the O(1) stamp must see
         graft.StoreGen.bump(fs, root)
@@ -1833,8 +1839,7 @@ object IrSql {
       } else {
         // no usable replacement — roll the old artifact back
         fs.delete(neu, true)
-        fs.rename(old, t)
-        ()
+        renameOrThrow(fs, old, t)
       }
     }
   }
@@ -2367,25 +2372,29 @@ object IrSql {
       case (Some(a), Some(b)) => Some(a.unionByName(b))
       case (a, b)             => a.orElse(b)
     }
-    import scala.concurrent.{Await, Future}
     import scala.concurrent.duration._
-    implicit val ec: scala.concurrent.ExecutionContext = stageEc
+    val sc = spark.sparkContext
+    val group = s"graft-bm25-stage-${java.util.UUID.randomUUID()}"
+    def job(body: => Unit): () => Unit = () => {
+      sc.setJobGroup(group, "bm25 update staging")
+      try body finally sc.clearJobGroup()
+    }
     // the two authoritative deltas
-    val fPostings = Future {
+    val fPostings = job {
       dTf.join(broadcast(gens), "doc_id")
         .select(col("term"), col("doc_id"), col("tf"), col("gen"))
         .repartitionByRange(col("term"))
         .sortWithinPartitions(col("term"), col("doc_id"))
         .write.parquet(new Path(stage, "postings").toString)
     }
-    val fDoclen = Future {
+    val fDoclen = job {
       dLen.join(broadcast(gens), "doc_id")
         .select(col("doc_id"), col("dl"), col("gen"))
         .write.parquet(new Path(stage, "doclen").toString)
     }
     // doc_gen: carried map with the batch's rows flipped to the new
     // generation
-    val fDocGen = Future {
+    val fDocGen = job {
       baseGen.join(gens.select(col("doc_id")), Seq("doc_id"),
           "left_anti")
         .unionByName(gens)
@@ -2393,7 +2402,7 @@ object IrSql {
     }
     // stats_upd: the delta terms' frontiers merge the old overlay
     // pairs with the new rows' (tf, dl); untouched overlay rows carry
-    val fOverlay = Future {
+    val fOverlay = job {
       val deltaTfl = dTf.join(dLen, "doc_id")
         .select(col("term"), col("tf"), col("dl"))
       val newOverlay =
@@ -2419,7 +2428,7 @@ object IrSql {
     // independent inputs, fused into ONE job via a cross join of the
     // two one-row frames (r16 shape had one head() each); the two
     // one-row sidecar writes chain off it
-    val fSidecars = Future {
+    val fSidecars = job {
       val dAgg = dLen.agg(
         coalesce(sum(col("dl")), lit(0L)).as("dtt"),
         count(lit(1)).as("dnd"))
@@ -2449,11 +2458,32 @@ object IrSql {
         .coalesce(1).write
         .parquet(new Path(stage, SupCorpusDir).toString)
     }
-    Await.result(
-      Future.sequence(Seq(fPostings, fDoclen, fDocGen, fOverlay,
-        fSidecars)), 1800.seconds)
+    awaitSettled(Seq(fPostings, fDoclen, fDocGen, fOverlay, fSidecars),
+      1800.seconds, () => sc.cancelJobGroup(group))(stageEc)
     fs.create(new Path(root, UpdateMarker), false).close() // COMMIT
     finishBm25UpdateStage(spark, storeDir)
+  }
+
+  /** Run independent thunks concurrently and wait for all of them.
+    * When one fails or `timeout` passes, `cancel` runs (the caller's
+    * job-group cancel) and EVERY thunk is awaited until it has settled
+    * before the first failure is rethrown — so no staging writer is
+    * still running when the caller's recovery or retry touches its
+    * output. */
+  private[graft] def awaitSettled(thunks: Seq[() => Unit],
+                                  timeout: scala.concurrent.duration.Duration,
+                                  cancel: () => Unit)(
+      implicit ec: scala.concurrent.ExecutionContext): Unit = {
+    import scala.concurrent.{Await, Future}
+    val fs = thunks.map(t => Future(t()))
+    try { Await.result(Future.sequence(fs), timeout); () }
+    catch {
+      case e: Throwable =>
+        cancel()
+        fs.foreach(f => Await.ready(f,
+          scala.concurrent.duration.Duration.Inf))
+        throw e
+    }
   }
 
   /** Small daemon pool for overlapping a store mutation's independent

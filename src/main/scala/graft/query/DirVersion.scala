@@ -56,19 +56,7 @@ private[query] object DirVersion {
       fsx.foldLeft(fsx.length.toLong) { (a, f) =>
         (((a * 31 + f.getPath.getName.hashCode) * 31 +
           f.getModificationTime) * 31 + f.getLen) * 31 +
-          tailCrc(hfs, f.getPath, f.getLen)
+          graft.StoreStamp.tailCrc(hfs, f.getPath, f.getLen)
       }
     } catch { case _: java.io.FileNotFoundException => -1L }
-
-  /** CRC32 of the last ≤64 bytes of a file (its parquet footer tail). */
-  private def tailCrc(hfs: FileSystem, p: Path, len: Long): Long = {
-    val n = math.min(64L, len).toInt
-    if (n == 0) return 0L
-    val buf = new Array[Byte](n)
-    val in = hfs.open(p)
-    try in.readFully(len - n, buf, 0, n) finally in.close()
-    val crc = new java.util.zip.CRC32
-    crc.update(buf, 0, n)
-    crc.getValue
-  }
 }

@@ -62,7 +62,7 @@ final class LoadedPhraseServer(spark: SparkSession, dir: String,
   private final class State {
     val pix: PositionalIndex.PIndex = PositionalIndex.load(spark, dir)
     val routed = new Routing.Routed(spark, dir, "pos_postings_ranges",
-      pix.docMap.schema, PositionalIndex.readTombs(spark, dir))
+      pix.docMap.schema, graft.index.PostingsStore.readTombs(spark, dir))
 
     private def scan(files: Seq[String]) =
       routed.scan(pix.postings.schema, files)
@@ -88,7 +88,7 @@ final class LoadedPhraseServer(spark: SparkSession, dir: String,
   }
 
   private val snapshot = new Snapshot[State](
-    Snapshot.store(spark, dir, PositionalIndex.stampDirs(dir)),
+    Snapshot.store(spark, dir, PositionalIndex.store.stampDirs(dir)),
     () => new State, _ => ())
 
   /** Drop the snapshot and re-read the manifests NOW — the explicit

@@ -92,7 +92,7 @@ final class LoadedPointServer(spark: SparkSession, dir: String,
     val ix: graft.index.InvertedIndex.Index =
       graft.index.InvertedIndex.load(spark, dir)
     val routed = new Routing.Routed(spark, dir, "postings_ranges",
-      ix.docMap.schema, graft.index.InvertedIndex.readTombs(spark, dir))
+      ix.docMap.schema, graft.index.PostingsStore.readTombs(spark, dir))
     val scorePlans = new TemplatePool[Seq[String], PointServer.ScoreTmpl](
       files => PointServer.scoreTmpl(
         routed.scan(ix.postings.schema, files), ix.nDocs, topK))
@@ -102,7 +102,7 @@ final class LoadedPointServer(spark: SparkSession, dir: String,
   }
 
   private val snapshot = new Snapshot[State](
-    Snapshot.store(spark, dir, graft.index.InvertedIndex.stampDirs(dir)),
+    Snapshot.store(spark, dir, graft.index.InvertedIndex.store.stampDirs(dir)),
     () => new State, _ => ())
 
   /** Drop the snapshot and re-read the manifests NOW — the explicit

@@ -181,7 +181,7 @@ object PhraseServer {
                 maxTemplateDocs: Long = MaxTemplateDocs): PhraseServer =
     new PhraseServer(
       new Snapshot.Source[PIndex](
-        Snapshot.store(spark, dir, PositionalIndex.stampDirs(dir)),
+        Snapshot.store(spark, dir, PositionalIndex.store.stampDirs(dir)),
         () => {
           val pix = PositionalIndex.load(spark, dir)
           PointServer.cache(pix.postings, pix.docMap)

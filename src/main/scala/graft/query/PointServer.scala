@@ -171,7 +171,7 @@ object PointServer {
   private[query] def cachedStore(spark: SparkSession,
                                  dir: String): Snapshot.Source[Index] =
     new Snapshot.Source(
-      Snapshot.store(spark, dir, InvertedIndex.stampDirs(dir)),
+      Snapshot.store(spark, dir, InvertedIndex.store.stampDirs(dir)),
       () => {
         val ix = InvertedIndex.load(spark, dir)
         cache(ix.postings, ix.docMap)

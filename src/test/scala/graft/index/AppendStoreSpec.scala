@@ -1,5 +1,6 @@
 package graft.index
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.SparkSpec
 
@@ -161,57 +162,96 @@ class AppendStoreSpec extends SparkSpec {
       graft.queries.IrEngine.PhraseQuery)) == rows(want))
   }
 
-  test("append crash states: uncommitted staging rolls back; a " +
-    "committed marker replays to the exact appended store") {
-    val store = tmp("graft_app_crash")
-    PositionalIndex.write(PositionalIndex.build(spark, firstHalf),
-      store)
-    val preRows = rows(spark.read.parquet(s"$store/pos_postings"))
+  /** One store under the append crash walk: its postings table, key
+    * and derived artifacts, and its write / build / append / load
+    * entry points over the small fixture. */
+  private case class Kind(
+      postings: String, key: String, derived: Seq[String],
+      write: (DataFrame, String) => Unit,
+      build: DataFrame => (DataFrame, DataFrame),
+      append: (String, DataFrame) => Unit,
+      load: String => (DataFrame, Long),
+      store: PostingsStore)
+
+  private def positional = Kind("pos_postings", "term", Nil,
+    (c, d) => PositionalIndex.write(PositionalIndex.build(spark, c), d),
+    c => { val ix = PositionalIndex.build(spark, c); (ix.postings, ix.docMap) },
+    (d, c) => PositionalIndex.appendToStore(spark, d, c),
+    d => { val ix = PositionalIndex.load(spark, d); (ix.postings, ix.nDocs) },
+    PositionalIndex.store)
+
+  private def inverted = Kind("postings", "kgram", Seq("term_stats"),
+    (c, d) => InvertedIndex.write(InvertedIndex.build(spark, c, k = 1), d),
+    c => { val ix = InvertedIndex.build(spark, c, k = 1)
+      (ix.postings, ix.docMap) },
+    (d, c) => InvertedIndex.appendToStore(spark, d, c, k = 1),
+    d => { val ix = InvertedIndex.load(spark, d); (ix.postings, ix.nDocs) },
+    InvertedIndex.store)
+
+  private def appendCrashStates(kind: Kind, tag: String): Unit = {
+    val store = tmp(tag)
+    kind.write(firstHalf, store)
+    val preRows = rows(spark.read.parquet(s"$store/${kind.postings}"))
     // A: staged delta, NO marker → rollback, store untouched
     secondHalf.limit(1).write.mode("overwrite")
       .parquet(s"$store/_graft_delta_postings")
-    PositionalIndex.recoverAppend(spark, store)
+    kind.store.recover(spark, store)
     assert(!fs.exists(new org.apache.hadoop.fs.Path(
       s"$store/_graft_delta_postings")), "staging not rolled back")
-    assert(rows(spark.read.parquet(s"$store/pos_postings")) == preRows,
-      "rollback changed the store")
+    assert(rows(spark.read.parquet(s"$store/${kind.postings}")) ==
+      preRows, "rollback changed the store")
     // B: committed marker with full staging → replay == direct append.
     // Fabricate the exact pre-crash state appendToStore commits:
     // shifted delta artifacts staged + marker listing the file names.
     val base = spark.read.parquet(s"$store/doc_map")
       .agg(max(col("docno"))).head().getLong(0)
-    val dIx = PositionalIndex.build(spark, secondHalf)
-    dIx.postings.withColumn("docno", col("docno") + base)
+    val (dPost, dMap) = kind.build(secondHalf)
+    dPost.withColumn("docno", col("docno") + base)
       .coalesce(1).write.mode("overwrite")
       .parquet(s"$store/_graft_delta_postings")
-    dIx.docMap.withColumn("docno", col("docno") + base)
+    dMap.withColumn("docno", col("docno") + base)
       .coalesce(1).write.mode("overwrite")
       .parquet(s"$store/_graft_delta_doc_map")
     def staged(d: String, target: String): Seq[String] =
       fs.listStatus(new org.apache.hadoop.fs.Path(s"$store/$d"))
         .filter(f => f.isFile && f.getPath.getName.endsWith(".parquet"))
         .map(f => s"$target/${f.getPath.getName}").toSeq
-    val added = staged("_graft_delta_postings", "pos_postings") ++
+    val added = staged("_graft_delta_postings", kind.postings) ++
       staged("_graft_delta_doc_map", "doc_map")
     val out = fs.create(new org.apache.hadoop.fs.Path(
       s"$store/_graft_append_inflight"), false)
     try out.write(added.mkString("\n")
       .getBytes(java.nio.charset.StandardCharsets.UTF_8))
     finally out.close()
-    PositionalIndex.recoverAppend(spark, store)
+    kind.store.recover(spark, store)
     assert(!fs.exists(new org.apache.hadoop.fs.Path(
       s"$store/_graft_append_inflight")), "marker not cleared")
-    val direct = tmp("graft_app_crash_direct")
-    PositionalIndex.write(PositionalIndex.build(spark, firstHalf),
-      direct)
-    PositionalIndex.appendToStore(spark, direct, secondHalf)
-    val got = PositionalIndex.load(spark, store)
-    val want = PositionalIndex.load(spark, direct)
-    assert(rows(got.postings) == rows(want.postings),
+    val direct = tmp(s"${tag}_direct")
+    kind.write(firstHalf, direct)
+    kind.append(direct, secondHalf)
+    val (gotPost, gotN) = kind.load(store)
+    val (wantPost, wantN) = kind.load(direct)
+    assert(rows(gotPost) == rows(wantPost),
       "crash replay != direct append")
-    assert(got.nDocs == want.nDocs)
-    manifestMatchesRecompute(store, "pos_postings",
-      "pos_postings_ranges", "term")
+    assert(gotN == wantN)
+    kind.derived.foreach { a =>
+      assert(rows(spark.read.parquet(s"$store/$a")) ==
+        rows(spark.read.parquet(s"$direct/$a")),
+        s"crash replay $a != direct append")
+    }
+    manifestMatchesRecompute(store, kind.postings,
+      s"${kind.postings}_ranges", kind.key)
+  }
+
+  test("append crash states: uncommitted staging rolls back; a " +
+    "committed marker replays to the exact appended store") {
+    appendCrashStates(positional, "graft_app_crash")
+  }
+
+  test("inverted append crash states: uncommitted staging rolls back; " +
+    "a committed marker replays to the direct append, term_stats " +
+    "included") {
+    appendCrashStates(inverted, "graft_app_inv_crash")
   }
 
   test("appending a LIVE docid is refused; appending a deleted one " +

@@ -426,7 +426,7 @@ class DeletionSpec extends SparkSpec {
       .parquet(s"$ixDir/_graft_tomb_new")
     fs.create(new org.apache.hadoop.fs.Path(
       s"$ixDir/_graft_delete_inflight"), false).close()
-    InvertedIndex.recoverDelete(spark, ixDir)
+    InvertedIndex.store.recover(spark, ixDir)
     val afterReplay = lps.search("merge stream")
     assert(!afterReplay.map(_._1).contains(victim2),
       "crash replay did not apply the staged tombstone")
@@ -440,6 +440,34 @@ class DeletionSpec extends SparkSpec {
       "compaction changed the served ranking")
   }
 
+  /** The delete crash walk over one written store: `hits` is a
+    * doc-local answer (docid, tf) whose top doc is the victim, so a
+    * completed delete removes exactly its row. */
+  private def deleteCrashStates(store: String,
+                                hits: () => Seq[(String, Long)],
+                                recover: () => Unit): Unit = {
+    val corpus = graft.queries.IrEngine.corpus(spark, dir)
+    val pre = hits()
+    val victimDocno = spark.read.parquet(s"$store/doc_map")
+      .filter(col("docid") === pre.head._1)
+      .head().getAs[Long]("docno")
+    import spark.implicits._
+    // A: staged, no marker → rollback
+    Seq(victimDocno).toDF("docno").write
+      .parquet(s"$store/_graft_tomb_new")
+    recover()
+    assert(hits() == pre)
+    // B: staged + marker → replay completes (doc gone, stats live)
+    Seq(victimDocno).toDF("docno").write
+      .parquet(s"$store/_graft_tomb_new")
+    fs.create(new org.apache.hadoop.fs.Path(
+      s"$store/_graft_delete_inflight"), false).close()
+    recover()
+    assert(hits() == pre.tail)
+    assert(spark.read.parquet(s"$store/corpus_stats")
+      .head().getAs[Long]("n_docs") == corpus.count() - 1)
+  }
+
   test("positional delete crash states recover (rollback and replay)") {
     val posDir = tmp("graft_del_pos_crash")
     val corpus = graft.queries.IrEngine.corpus(spark, dir)
@@ -448,25 +476,35 @@ class DeletionSpec extends SparkSpec {
     def hits() = PositionalIndex
       .phrase(PositionalIndex.load(spark, posDir), phrase)
       .collect().map(r => (r.getString(0), r.getLong(1))).toSeq
-    val pre = hits()
-    val victimDocno = spark.read.parquet(s"$posDir/doc_map")
-      .filter(col("docid") === pre.head._1)
-      .head().getAs[Long]("docno")
-    import spark.implicits._
-    // A: staged, no marker → rollback
-    Seq(victimDocno).toDF("docno").write
-      .parquet(s"$posDir/_graft_tomb_new")
-    PositionalIndex.recoverPosDelete(spark, posDir)
-    assert(hits() == pre)
-    // B: staged + marker → replay completes (doc gone, stats live)
-    Seq(victimDocno).toDF("docno").write
-      .parquet(s"$posDir/_graft_tomb_new")
-    fs.create(new org.apache.hadoop.fs.Path(
-      s"$posDir/_graft_delete_inflight"), false).close()
-    PositionalIndex.recoverPosDelete(spark, posDir)
-    assert(hits() == pre.tail)
-    assert(spark.read.parquet(s"$posDir/corpus_stats")
-      .head().getAs[Long]("n_docs") == corpus.count() - 1)
+    deleteCrashStates(posDir, () => hits(),
+      () => PositionalIndex.store.recover(spark, posDir))
+  }
+
+  test("inverted delete crash states recover (rollback and replay); " +
+    "the replayed term_stats equal a rebuild without the doc") {
+    val ixDir = tmp("graft_del_inv_crash")
+    val corpus = graft.queries.IrEngine.corpus(spark, dir)
+    InvertedIndex.write(InvertedIndex.build(spark, corpus, k = 1), ixDir)
+    // one kgram's postings list, tf desc: doc-local, so a deleted doc
+    // drops exactly its own row
+    val kgram = spark.read.parquet(s"$ixDir/term_stats")
+      .orderBy(col("df").desc, col("kgram")).head().getString(0)
+    def hits() = {
+      val ix = InvertedIndex.load(spark, ixDir)
+      ix.postings.filter(col("kgram") === kgram).join(ix.docMap, "docno")
+        .orderBy(col("tf").desc, col("docid"))
+        .collect().map(r => (r.getAs[String]("docid"), r.getAs[Long]("tf")))
+        .toSeq
+    }
+    val victim = hits().head._1
+    deleteCrashStates(ixDir, () => hits(),
+      () => InvertedIndex.store.recover(spark, ixDir))
+    val rebuilt = InvertedIndex.build(spark,
+      corpus.filter(col("docid") =!= victim), k = 1)
+    def rowsOf(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(_.toString).sorted.toSeq
+    assert(rowsOf(spark.read.parquet(s"$ixDir/term_stats")) ==
+      rowsOf(rebuilt.termStats), "replayed term_stats != rebuild")
   }
 
   test("surgical reclaim rewrites only the part files holding a dead " +
