@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.graft.Bridge
 
 /** Targeted per-query A/B profiler: time named [[SparkEntry.queries]]
   * entries in isolation (N repeats, median + spread), without the
@@ -59,6 +60,7 @@ object QProf {
       val q = SparkEntry.queries.getOrElse(n,
         sys.error(s"unknown query '$n'"))
       q(spark, sfDir).count() // warmup (plan + caches)
+      Bridge.drainListeners(spark.sparkContext)
       val b0 = shuffleBytes.get()
       val times = (1 to reps).map { _ =>
         System.gc()
@@ -66,6 +68,7 @@ object QProf {
         q(spark, sfDir).count()
         (System.nanoTime() - t0) / 1e9
       }.sorted
+      Bridge.drainListeners(spark.sparkContext)
       val mb = (shuffleBytes.get() - b0) / 1e6 / reps
       val med = times(times.size / 2)
       println(f"[qprof] $n%s median=$med%.3f s " +

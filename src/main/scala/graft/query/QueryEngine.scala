@@ -1,6 +1,6 @@
 package graft.query
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.index.InvertedIndex.Index
 import graft.text.TextPipeline
@@ -9,11 +9,18 @@ import graft.text.TextPipeline
   * interactive client (`IntDocVectorsForwardIndex.java:278-321`,
   * SURVEY.md §3.3) as cached-DataFrame programs.
   *
-  * Plan shape per query: literal IN-filter on postings (partition/
-  * row-group pruned parquet or cached DF — no shuffle of the index),
-  * broadcast join of per-term df, HashAggregate on docno,
-  * TakeOrderedAndProject for top-k. No wide exchange at any corpus
-  * size; the only shuffle is the final tiny per-doc score agg.
+  * Plan shapes per query. Both filter postings with a literal
+  * `kgram` IN-list (partition/row-group pruned parquet or cached DF —
+  * no shuffle of the index) and resolve docids by broadcasting the
+  * ≤topK ranked rows into the doc map.
+  *  - analytic ([[search]], [[wildcardSearch]]): broadcast join of
+  *    per-term df from term_stats, HashAggregate on docno,
+  *    TakeOrderedAndProject for top-k. No wide exchange at any corpus
+  *    size; the only shuffle is the final tiny per-doc score agg.
+  *  - serving ([[serveSearch]], [[wildcardSearchExpanded]]): the
+  *    filtered hits coalesce into one task that takes df as a window
+  *    count over them, scores and takes the top-k — no term_stats
+  *    read, no exchange before the resolve.
   *
   * Scoring modes (SURVEY §2.10 Q1-Q3 decisions):
   *  - intended (default): df = postings-list length, true division,
@@ -311,47 +318,53 @@ object QueryEngine {
     * the expansion — fully DISTRIBUTED: the expansion never touches the
     * driver (the r3 form collected it). The expansion is re-analyzed
     * with the indexing pipeline (char-gram index holds raw surface
-    * forms; postings are stemmed) via the registered `graft_tokenize`,
-    * then joined to postings/stats as vocabulary-bounded broadcasts. */
+    * forms; postings are stemmed) via the registered `graft_tokenize`.
+    * The expansion-bounded stats (vocabulary subset) then restrict the
+    * corpus-sized postings in ONE broadcast probe — a separate
+    * postings⋈expansion join would re-probe the same scan for rows the
+    * stats join already bounds (r4 review). Top-k/resolve as the
+    * non-wildcard path — one place for the tf-idf formula, tiebreak
+    * and rounding. */
   def wildcardSearch(ix: Index, chargrams: DataFrame, pattern: String,
                      topK: Int = 10, k: Int = 3): DataFrame = {
-    val spark = ix.docMap.sparkSession
-    TextPipeline.register(spark)
+    TextPipeline.register(ix.docMap.sparkSession)
     // k must match the chargram index's gram length — mismatched
     // lengths would silently expand to nothing
     val expanded = wildcardTerms(chargrams, pattern, k)
       .select(explode(expr("graft_tokenize(term)")).as("kgram"))
       .distinct()
-    scoreExpanded(ix, expanded, topK)
-  }
-
-  /** [[wildcardSearch]] with the expansion already resolved (a
-    * [[LoadedWildcardServer.lookup]] on a serving node that can't
-    * hold the vocabulary) — same analysis and scoring tail, so
-    * `wildcardSearchExpanded(ix, lookup(p))` == `wildcardSearch(ix,
-    * store, p)` (spec-pinned). */
-  def wildcardSearchExpanded(ix: Index, terms: Seq[String],
-                             topK: Int = 10): DataFrame = {
-    val spark = ix.docMap.sparkSession
-    TextPipeline.register(spark)
-    import spark.implicits._
-    val expanded = terms.toDF("term")
-      .select(explode(expr("graft_tokenize(term)")).as("kgram"))
-      .distinct()
-    scoreExpanded(ix, expanded, topK)
-  }
-
-  /** The shared wildcard scoring tail: the expansion-bounded stats
-    * (vocabulary subset) restrict the corpus-sized postings in ONE
-    * broadcast probe — a separate postings⋈expansion join would
-    * re-probe the same scan for rows the stats join already bounds
-    * (r4 review). Top-k/resolve as the non-wildcard path — one place
-    * for the tf-idf formula, tiebreak and rounding. */
-  private def scoreExpanded(ix: Index, expanded: DataFrame,
-                            topK: Int): DataFrame = {
     val stats = ix.termStats.join(broadcast(expanded), "kgram")
     topAndResolve(ix, ix.postings.join(broadcast(stats), "kgram"), topK,
       log10(lit(ix.nDocs.toDouble) / col("df").cast("double")),
       serve = false)
   }
+
+  /** [[wildcardSearch]] with the expansion already resolved (a
+    * [[LoadedWildcardServer.lookup]] on a serving node that can't
+    * hold the vocabulary), scored as a point query over the analyzed
+    * expansion: [[serveSearch]]'s plan, not [[wildcardSearch]]'s.
+    *
+    * Plan shape: the expansion is analyzed on the driver with the
+    * indexing pipeline (`graft_tokenize` wraps the same
+    * [[TextPipeline.processContent]]), so the postings filter is a
+    * LITERAL `kgram` IN-list. Catalyst pushes it through the live
+    * view's tombstone anti-join into the parquet scan, where the
+    * range-laid postings prune by file and row-group min/max — the
+    * scan reads the expansion's term ranges, not the whole store.
+    * The filtered hits coalesce into ONE task that computes df as a
+    * window count, sums, and takes the top-k; the tiny docid resolve
+    * follows. No term_stats scan, no stats broadcast, no distinct
+    * shuffle.
+    *
+    * Same rows as [[wildcardSearch]] (spec-pinned, tombstoned stores
+    * included): the window df is the live postings-list length of
+    * each expansion term, and term_stats is delete-exact on disk
+    * ([[graft.index.InvertedIndex.deleteDocs]] re-derives the touched
+    * kgrams from the live postings), so the two df sources agree
+    * after a delete as before it. The prepared
+    * [[WildcardServer.search]] scores the same way. */
+  def wildcardSearchExpanded(ix: Index, terms: Seq[String],
+                             topK: Int = 10): DataFrame =
+    rank(ix, terms.flatMap(analyze).distinct, topK, bugCompat = false,
+      serve = true)
 }

@@ -187,6 +187,69 @@ class WildcardServerSpec extends SparkSpec {
       .collect().map(r => (r.getLong(0), r.getString(1),
         r.getDouble(2))).toSeq
     assert(expanded == want, s"expanded=$expanded fresh=$want")
+
+    // a WRITTEN index with pending deletions of docs that hold
+    // expansion terms: the expanded path's live window df must equal
+    // the delete-exact term_stats that wildcardSearch joins, and both
+    // must equal an index rebuilt without the docs (docnos renumber
+    // on a rebuild, so that compare is on (docid, score))
+    val ixDir = tmp("graft_wc_ix")
+    InvertedIndex.write(ix, ixDir)
+    val victims = want.take(2).map(_._2)
+    import spark.implicits._
+    InvertedIndex.deleteDocs(spark, ixDir, victims.toDF("docid"))
+    val loaded = InvertedIndex.load(spark, ixDir)
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => (r.getLong(0), r.getString(1),
+        r.getDouble(2))).toSeq
+    val chargrams = CharKGramIndex.load(spark, store)
+    val rebuiltIx = InvertedIndex.build(spark,
+      corpus.filter(!col("docid").isin(victims: _*)), k = 1)
+    // "st*" expands to many kgrams: a multi-term window df
+    for (pat <- Seq("st*am", "st*")) {
+      val tombWant = rows(QueryEngine.wildcardSearch(loaded, chargrams,
+        pat))
+      val tombGot = rows(QueryEngine.wildcardSearchExpanded(loaded,
+        srv.lookup(pat)))
+      assert(tombGot == tombWant, s"$pat: tombstoned expanded=" +
+        s"$tombGot fresh=$tombWant")
+      assert(tombGot.nonEmpty &&
+        !tombGot.exists(r => victims.contains(r._2)))
+      val rebuilt = rows(QueryEngine.wildcardSearch(rebuiltIx,
+        chargrams, pat)).map(r => (r._2, r._3))
+      assert(tombGot.map(r => (r._2, r._3)) == rebuilt,
+        s"$pat: tombstoned expanded ranking != rebuild-without-docs")
+    }
+
+    // an empty expansion: an empty frame of the output contract
+    val none = QueryEngine.wildcardSearchExpanded(loaded, Seq.empty)
+    assert(none.columns.toSeq == Seq("docno", "docid", "score"))
+    assert(none.collect().isEmpty)
+
+    // plan pin over the loaded index: no term_stats scan, and the
+    // postings scan carries the expansion's kgram literals, so the
+    // range-laid files prune by min/max (an inferred IsNotNull does
+    // not count — it prunes nothing)
+    import org.apache.spark.sql.catalyst.expressions.IsNotNull
+    import org.apache.spark.sql.execution.FileSourceScanExec
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    val scored = QueryEngine.wildcardSearchExpanded(loaded,
+      srv.lookup("st*"))
+    scored.collect() // finalize the adaptive plan
+    val plan = scored.queryExecution.executedPlan
+    val scans = new AdaptiveSparkPlanHelper {}.collect(plan) {
+      case f: FileSourceScanExec => f
+    }
+    def scansOf(name: String) = scans.filter(
+      _.relation.location.rootPaths.exists(_.getName == name))
+    assert(scansOf("term_stats").isEmpty, s"term_stats scanned:\n$plan")
+    val postScans = scansOf("postings")
+    assert(postScans.nonEmpty, s"no postings scan:\n$plan")
+    postScans.foreach { f =>
+      assert(f.dataFilters.exists(e => !e.isInstanceOf[IsNotNull] &&
+          e.references.exists(_.name == "kgram")),
+        s"postings scan carries no kgram literal filter:\n$plan")
+    }
   }
 
   private def fs = org.apache.hadoop.fs.FileSystem.get(
