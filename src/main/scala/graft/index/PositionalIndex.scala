@@ -197,10 +197,10 @@ object PositionalIndex {
     * (`pos_z` BINARY) instead of `positions ARRAY<INT>` — [[load]]
     * branches on the stored schema (the [[graft.Tables]] footer-schema
     * convention) and surfaces the identical PIndex either way. The
-    * compressed layout is the batch/storage form; the routed serving
-    * path ([[graft.query.LoadedPhraseServer]]) reads the plain layout
-    * (its pruned scans want the array column directly — a missing
-    * `positions` column fails loudly, never silently). */
+    * compressed layout is the batch/storage form; the job-free loaded
+    * serving path ([[graft.query.LoadedPhraseServer]]) reads the plain
+    * layout (its driver read decodes the `positions` column directly —
+    * a file without it fails loudly, never answers empty). */
   def write(ix: PIndex, dir: String,
             rowsPerFile: Long = InvertedIndex.WriteRowsPerFile,
             compressed: Boolean = false): Unit =
@@ -451,9 +451,9 @@ object PositionalIndex {
   }
 
   /** The one qualifying-pair-count formulation, shared by [[nearTopK]]
-    * and the serving templates ([[graft.query.PhraseServer]] /
-    * [[graft.query.LoadedPhraseServer]]) so the ranked contract cannot
-    * drift between fresh, cached, and loaded paths. */
+    * and the cached serving template ([[graft.query.PhraseServer]]),
+    * with its driver twin [[nearPairs]] beside it, so the ranked
+    * contract cannot drift between fresh, cached, and loaded paths. */
   private[graft] def nearPairCount(pa: Column, pb: Column, window: Int,
                                    ordered: Boolean): Column = {
     val perX: Column => Column =
@@ -461,6 +461,24 @@ object PositionalIndex {
       else x => size(filter(pb, y => abs(x - y) <= lit(window)))
     aggregate(pa, lit(0L), (acc, x) => acc + perX(x))
   }
+
+  /** [[nearPairCount]] over driver-held position lists, for
+    * [[graft.query.LoadedPhraseServer]]'s job-free path. */
+  private[graft] def nearPairs(pa: Array[Int], pb: Array[Int], window: Int,
+                               ordered: Boolean): Long =
+    pa.iterator.map { x =>
+      pb.count(y => if (ordered) y > x && y - x <= window
+                    else math.abs(x - y) <= window).toLong
+    }.sum
+
+  /** [[phrase]]'s count over driver-held slot position lists: the
+    * left-fold `array_intersect` (distinct, in slot-0 order) of slot i
+    * shifted by −i; one slot is its list's size. */
+  private[graft] def phraseRuns(slots: Seq[Array[Int]]): Long =
+    (1 until slots.size).foldLeft(slots.head.toSeq) { (acc, i) =>
+      val shifted = slots(i).iterator.map(_ - i).toSet
+      acc.distinct.filter(shifted)
+    }.size.toLong
 
   /** ORDERED proximity: `termA` strictly before `termB`, at most
     * `window` pipeline tokens later — the directional variant of

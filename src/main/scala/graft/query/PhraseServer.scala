@@ -53,8 +53,8 @@ import graft.index.PositionalIndex.PIndex
   * filters keep batch-stat pruning and full parallelism — same
   * results, per-query planning instead of a per-query O(index) scan.
   * For a big WRITTEN index, serve through [[LoadedPhraseServer]],
-  * whose driver-side zone-map routing bounds each query's scan to the
-  * 1-2 files holding its terms.
+  * whose driver-side zone-map routing bounds each query's read to the
+  * row groups holding its terms, with no Spark job.
   *
   * STALENESS: a server handed an in-memory [[PIndex]] serves that
   * SNAPSHOT (the struct is immutable; a merge builds a new PIndex).
@@ -221,8 +221,8 @@ object PhraseServer {
   private def in(ref: AtomicReference[java.util.HashSet[UTF8String]]): Column =
     Bridge.column(RefSetContains(Bridge.expression(col("term")), ref))
 
-  /** The exchange-free `n`-word phrase plan over a positional postings
-    * `scan` (cached frame or routed part files): ONE scan filtered to
+  /** The exchange-free `n`-word phrase plan over the cached positional
+    * postings `scan`: ONE scan filtered to
     * the phrase's term set, one conditional slot aggregate per word,
     * the left-fold shifted intersection — see the class doc. */
   private[query] def phraseTmpl(scan: DataFrame, n: Int,

@@ -9,7 +9,7 @@ import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.Bridge
-import org.apache.spark.sql.types.StringType
+import org.apache.spark.sql.types.{LongType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 import graft.index.InvertedIndex
 import graft.index.InvertedIndex.Index
@@ -35,6 +35,26 @@ private[query] case class RefSetContains(
     ref.get.contains(v.asInstanceOf[UTF8String])
 
   override protected def withNewChildInternal(c: Expression): RefSetContains =
+    copy(child = c)
+}
+
+/** [[RefSetContains]]' Long twin, for docno-set templates (the RM3,
+  * BM25 and IVF servers). */
+private[query] case class RefLongSetContains(
+    child: Expression,
+    ref: AtomicReference[java.util.HashSet[java.lang.Long]])
+    extends UnaryExpression with Predicate with CodegenFallback {
+
+  override def checkInputDataTypes(): TypeCheckResult =
+    if (child.dataType == LongType) TypeCheckResult.TypeCheckSuccess
+    else TypeCheckResult.TypeCheckFailure("ref_long_set_contains expects bigint")
+
+  override def prettyName: String = "graft_ref_long_set_contains"
+
+  override def nullSafeEval(v: Any): Any =
+    ref.get.contains(v.asInstanceOf[Long])
+
+  override protected def withNewChildInternal(c: Expression): RefLongSetContains =
     copy(child = c)
 }
 
@@ -203,8 +223,9 @@ object PointServer {
   /** The exchange-free tf-idf score skeleton over `postings`: term-set
     * filter (`terms`) → single task → window df → per-doc
     * Σ weight·(1+ln tf)·log10(N/df) → top-`limitN`. `weight` (absent:
-    * 1) is RM3's per-term blend; shared by the cached and loaded point
-    * templates and all of [[Rm3Server]]'s score passes. */
+    * 1) is RM3's per-term blend; shared by the cached point template
+    * and all of [[Rm3Server]]'s score passes ([[LoadedPointServer]]
+    * computes the same arithmetic on the driver). */
   private[query] def scorePlan(postings: DataFrame, nDocs: Long,
       terms: AtomicReference[java.util.HashSet[UTF8String]],
       limitN: Int, weight: Option[Column] = None): DataFrame = {

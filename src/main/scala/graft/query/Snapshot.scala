@@ -4,12 +4,15 @@ import java.util.concurrent.atomic.AtomicReference
 
 import org.apache.spark.sql.SparkSession
 
-/** The SNAPSHOT LIFECYCLE of a prepared-plan server — the one copy of
+/** The SNAPSHOT LIFECYCLE of a serving node — the one copy of
   * stamp → validate → rebuild → `refresh()` that every stamped server
-  * shares ([[PointServer]], [[LoadedPointServer]], [[PhraseServer]],
-  * [[LoadedPhraseServer]], [[Rm3Server]], [[Bm25Server]],
-  * [[WildcardServer]], [[LoadedWildcardServer]]; the cell-granular
-  * vector servers keep their own [[CellVersion]] stamps).
+  * shares: the prepared-plan servers ([[PointServer]],
+  * [[PhraseServer]], [[Rm3Server]], [[Bm25Server]],
+  * [[WildcardServer]], [[LoadedWildcardServer]]) and the job-free
+  * loaded ones ([[LoadedPointServer]], [[LoadedPhraseServer]]), whose
+  * snapshot is their manifests, footer row groups and tombstones; the
+  * cell-granular vector servers keep their own [[CellVersion]]
+  * stamps.
   *
   *  - [[current]] is a lock-free read of the held snapshot while its
   *    stamp still matches the store's; when the stamp MOVED it

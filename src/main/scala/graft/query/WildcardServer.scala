@@ -200,18 +200,16 @@ final class LoadedWildcardServer(spark: SparkSession, cgDir: String,
 
   private final class State {
     /** Sorted (lo, hi, file) gram ranges — O(files) driver state. */
-    val ranges: Array[(String, String, String)] =
+    val ranges: Array[(UTF8String, UTF8String, String)] = Routing.ranges(
       CharKGramIndex.load(spark, cgDir)
         .select(col("gram"), input_file_name().as("file"))
         .groupBy(col("file"))
-        .agg(min(col("gram")).as("lo"), max(col("gram")).as("hi"))
-        .collect()
-        .map(r => (r.getString(1), r.getString(2), r.getString(0)))
-        .sortBy(_._1)
+        .agg(min(col("gram")).as("lo"), max(col("gram")).as("hi")),
+      Routing.Utf8Key)
 
     /** Gram length from the range endpoints (grams are fixed-width
       * `$`-padded windows); empty store → the default. */
-    val k: Int = ranges.headOption.map(_._1.length)
+    val k: Int = ranges.headOption.map(_._1.toString.length)
       .getOrElse(WildcardServer.DefaultK)
 
     val pool = new TemplatePool[Seq[String], WildcardServer.Tmpl](
@@ -220,7 +218,8 @@ final class LoadedWildcardServer(spark: SparkSession, cgDir: String,
       maxKeys = 32)
 
     def files(p: WildcardServer.Pattern): Seq[String] =
-      p.grams.flatMap(g => Routing.route(ranges, g)).distinct.sorted
+      p.grams.flatMap(g => Routing.route(ranges, UTF8String.fromString(g)))
+        .distinct.sorted
   }
 
   private val snapshot = new Snapshot[State](

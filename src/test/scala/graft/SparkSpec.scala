@@ -11,6 +11,25 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   /** Filesystem path of a test resource. */
   def resourcePath(name: String): String =
     getClass.getResource(name).getPath
+
+  /** The number of Spark jobs submitted while `f` runs. */
+  def jobsDuring(f: => Unit): Int = {
+    val sc = spark.sparkContext
+    org.apache.spark.sql.graft.Bridge.drainListeners(sc)
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val l = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+        jobs.incrementAndGet(); ()
+      }
+    }
+    sc.addSparkListener(l)
+    try {
+      f
+      org.apache.spark.sql.graft.Bridge.drainListeners(sc)
+      jobs.get
+    } finally sc.removeSparkListener(l)
+  }
 }
 
 object SparkSpec {

@@ -4,23 +4,23 @@ import graft.SparkSpec
 import graft.corpus.TrecCorpus
 import graft.index.InvertedIndex
 
-/** Pins [[LoadedPointServer]] to [[QueryEngine.serveSearch]] over the
-  * SAME loaded artifacts — the file-set-keyed plan cache must return
-  * identical rankings for every query in a sequence, including the
-  * multi-file layouts its routing exists for (terms of one query
-  * living in different files) and plan-cache hits (repeated file
-  * sets). */
+/** Pins [[LoadedPointServer]]'s job-free driver path to
+  * [[QueryEngine.serveSearch]] over the SAME loaded artifacts —
+  * identical rankings and bit-identical scores for every query in a
+  * sequence, on single- and multi-file layouts (terms of one query
+  * living in different files), on an appended and tombstoned store
+  * (one term in several files, df summed across them), at a score tie
+  * on the top-k boundary, and for keys whose UTF-8 and UTF-16 orders
+  * disagree. */
 class LoadedPointServerSpec extends SparkSpec {
 
   lazy val corpus = TrecCorpus.read(spark, resourcePath("/graft/sample-trec.xml"))
   lazy val ix = InvertedIndex.build(spark, corpus, k = 1)
 
-  private def withWritten(rowsPerFile: Long)(f: String => Unit): Unit = {
+  private def withTmp(f: String => Unit): Unit = {
     val dir = java.nio.file.Files.createTempDirectory("graft_lps").toString
-    try {
-      InvertedIndex.write(ix, dir, rowsPerFile)
-      f(dir)
-    } finally {
+    try f(dir)
+    finally {
       val wk = java.nio.file.Files.walk(java.nio.file.Paths.get(dir))
       try wk.sorted(java.util.Comparator.reverseOrder())
         .forEach(p => { java.nio.file.Files.deleteIfExists(p); () })
@@ -28,12 +28,27 @@ class LoadedPointServerSpec extends SparkSpec {
     }
   }
 
+  private def withWritten(rowsPerFile: Long)(f: String => Unit): Unit =
+    withTmp { dir =>
+      InvertedIndex.write(ix, dir, rowsPerFile)
+      f(dir)
+    }
+
+  /** serveSearch's rows, scores as their IEEE bits. */
+  private def fresh(lx: InvertedIndex.Index, q: String, topK: Int = 10) =
+    QueryEngine.serveSearch(lx, q, topK).collect()
+      .map(r => (r.getLong(0), r.getString(1),
+        java.lang.Double.doubleToLongBits(r.getDouble(2)))).toSeq
+
+  private def bits(rows: Seq[(Long, String, Double)]) =
+    rows.map { case (d, id, s) => (d, id, java.lang.Double.doubleToLongBits(s)) }
+
   private def pinToServeSearch(dir: String): Unit = {
     val lps = new LoadedPointServer(spark, dir)
     val lx = lps.index
-    // repeats exercise the plan-cache hit path; 2-word queries the
-    // cross-file routing; unknown-term and stopword-only the empty
-    // short-circuits
+    // repeats exercise the snapshot's cached footer row groups; 2-word
+    // queries the cross-file routing; unknown-term and stopword-only
+    // the empty answers
     val queries = Seq("merge", "stream buffer", "pipeline", "merge",
       "data stream", "stream buffer")
     queries.foreach { q =>
@@ -67,15 +82,94 @@ class LoadedPointServerSpec extends SparkSpec {
   }
 
   test("score template is exchange-free (reuse-safety invariant)") {
+    // no reused plan is left to hold an exchange: a warm search runs no
+    // Spark job at all, so no cached physical plan can serve stale data
     withWritten(rowsPerFile = 50L) { dir =>
       val lps = new LoadedPointServer(spark, dir)
       assert(lps.search("data stream").nonEmpty)
-      // the pooled plans must hold no exchange: an exchange node would
-      // serve the first query's data to every later query
-      val hasExchange = lps.templatePlan("data stream").collect {
-        case e: org.apache.spark.sql.execution.exchange.Exchange => e
-      }.nonEmpty
-      assert(!hasExchange, "score template must stay exchange-free")
+      val jobs = jobsDuring {
+        Seq("data stream", "merge", "stream buffer", "zzzqqq", "the")
+          .foreach(q => lps.search(q))
+      }
+      assert(jobs == 0, s"warm loaded searches submitted $jobs Spark jobs")
+    }
+  }
+
+  test("appended, tombstoned multi-file store: bit-identical to " +
+    "serveSearch, ties at the top-k boundary included") {
+    import spark.implicits._
+    withTmp { dir =>
+      // docnos follow docid order within each generation, and the
+      // appended generation's come after the base's
+      InvertedIndex.write(InvertedIndex.build(spark,
+        corpus.filter($"docid" <= "FT911-0010")), dir, rowsPerFile = 50L)
+      InvertedIndex.appendToStore(spark, dir,
+        corpus.filter($"docid" > "FT911-0010"), rowsPerFile = 50L)
+      InvertedIndex.deleteDocs(spark, dir,
+        Seq("FT911-0017", "FT911-0008").toDF("docid"))
+      val ranges = Routing.ranges(
+        spark.read.parquet(s"$dir/postings_ranges"), Routing.Utf8Key)
+      Seq("merge", "stream").foreach { w =>
+        val t = org.apache.spark.unsafe.types.UTF8String
+          .fromString(QueryEngine.analyze(w).head)
+        assert(Routing.route(ranges, t).size >= 2,
+          s"'$w' must live in several files (one per generation)")
+      }
+      val lx = InvertedIndex.load(spark, dir)
+      val lps = new LoadedPointServer(spark, dir)
+      val queries = Seq("merge", "stream buffer", "sorted runs", "merge",
+        "buffer", "spill disk", "streams")
+      queries.foreach { q =>
+        assert(bits(lps.search(q)) == fresh(lx, q), s"query [$q]")
+      }
+      assert(lps.search("merge").nonEmpty)
+      assert(!lps.search("merge dominance").exists(_._2 == "FT911-0017"),
+        "a tombstoned doc must not serve")
+      // a cut through a tie: rank k-1 and rank k score the same, so the
+      // docno tiebreak decides which of them the top-k keeps
+      val ties = for {
+        q <- queries.distinct
+        all = fresh(lx, q, 100)
+        k <- 1 until all.size if all(k - 1)._3 == all(k)._3
+      } yield (q, k)
+      assert(ties.nonEmpty, "fixture must hold a score tie")
+      ties.groupBy(_._2).foreach { case (k, qs) =>
+        val cut = new LoadedPointServer(spark, dir, topK = k)
+        qs.foreach { case (q, _) =>
+          assert(bits(cut.search(q)) == fresh(lx, q, k), s"query [$q] top-$k")
+        }
+      }
+    }
+  }
+
+  test("routing compares terms in UTF-8 order: fullwidth and " +
+    "supplementary-character terms serve like the fresh plans") {
+    import spark.implicits._
+    // one file whose range ends at a supplementary-character term: in
+    // UTF-8 (Spark's min/max) order the fullwidth term lies inside it,
+    // in Java's UTF-16 String order it lies past the end
+    val sup = new String(Character.toChars(0x20000)) + "y"
+    val full = "\uff46oo"
+    val docs = Seq("U1" -> "apple pie", "U2" -> s"$full bar",
+      "U3" -> s"$sup apple").toDF("docid", "content")
+    withTmp { dir =>
+      InvertedIndex.write(InvertedIndex.build(spark, docs), dir)
+      val lx = InvertedIndex.load(spark, dir)
+      val lps = new LoadedPointServer(spark, dir)
+      Seq(full, "apple", sup, s"$full apple").foreach { q =>
+        assert(bits(lps.search(q)) == fresh(lx, q), s"query [$q]")
+      }
+      assert(lps.search(full).map(_._2) == Seq("U2"))
+    }
+    withTmp { dir =>
+      val cg = graft.index.CharKGramIndex.build(spark, docs)
+      graft.index.CharKGramIndex.write(cg, dir)
+      val lws = new LoadedWildcardServer(spark, dir)
+      Seq(s"*$full*", "*ppl*", s"$full*").foreach { p =>
+        assert(lws.lookup(p) == QueryEngine.wildcardTerms(cg, p).collect()
+          .map(_.getString(0)).toSeq, s"pattern [$p]")
+      }
+      assert(lws.lookup(s"*$full*") == Seq(full))
     }
   }
 
