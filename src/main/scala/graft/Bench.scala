@@ -229,8 +229,10 @@ object Bench {
     val twoWord = Seq("agg hash", "spark table", "slow key",
       "row vector", "part filter", "stream table", "row column",
       "custom join", "window fast", "table value", "batch fast")
+    val wildcardPatterns = Seq("st*am", "mer*e", "*ream", "fil*er",
+      "ta*le", "w*dow", "qu*ry", "ba*ch", "sc*n", "jo*n", "ve*tor")
     val (medianUs, medianTemplateUs, medianRm3Us, medianRm3TemplateUs,
-        medianLoadedUs, medianLoadedRoutedUs,
+        medianLoadedUs, medianLoadedRoutedUs, medianWildcardLoadedRoutedUs,
         medianPhraseUs, medianPhraseTemplateUs, medianPhrase3TemplateUs,
         medianNearTemplateUs, medianPhraseLoadedRoutedUs,
         medianNearLoadedRoutedUs, medianAnnProbeUs, medianAnnServedUs,
@@ -266,7 +268,7 @@ object Bench {
         // concurrent bench processes overwrite each other's index
         // mid-serve, and would never be cleaned up
         val ixPath = java.nio.file.Files.createTempDirectory("graft_bench_ix")
-        val (mLoadUs, mRoutedUs) = try {
+        val (mLoadUs, mRoutedUs, mWcRoutedUs) = try {
           val ixDir = ixPath.toString
           graft.index.InvertedIndex.write(ix, ixDir)
           val lx = graft.index.InvertedIndex.load(spark, ixDir)
@@ -280,7 +282,21 @@ object Bench {
           lps.search("warm up")
           val routed = sweep3("warm_search_loaded_routed_us",
             sweepOf(queriesToServe, q => { lps.search(q); () }))
-          (fresh, routed)
+          // the loaded wildcard request: a routed chargram lookup scored
+          // through the loaded point server's index — both job-free
+          val cgDir = s"$ixDir/chargrams"
+          graft.index.CharKGramIndex.write(
+            graft.index.CharKGramIndex.build(spark, corpus, k = 3), cgDir)
+          val lws = new graft.query.LoadedWildcardServer(spark, cgDir)
+          def wildcard(p: String): Unit = {
+            graft.query.QueryEngine.wildcardSearchExpanded(lps.index,
+              lws.lookup(p)).collect()
+            ()
+          }
+          wildcard("st*am")
+          val wcRouted = sweep3("warm_wildcard_loaded_routed_us",
+            sweepOf(wildcardPatterns, wildcard))
+          (fresh, routed, wcRouted)
         } finally {
           val wk = java.nio.file.Files.walk(ixPath)
           try wk.sorted(java.util.Comparator.reverseOrder())
@@ -433,7 +449,7 @@ object Bench {
             .forEach(p => { java.nio.file.Files.deleteIfExists(p); () })
           finally wk.close()
         }
-        (mUs, mTmplUs, mRm3Us, mRm3TmplUs, mLoadUs, mRoutedUs,
+        (mUs, mTmplUs, mRm3Us, mRm3TmplUs, mLoadUs, mRoutedUs, mWcRoutedUs,
           mPhraseUs, mPhraseTmplUs, mPhrase3TmplUs, mNearTmplUs,
           mPhraseRoutedUs, mNearRoutedUs, mAnnProbeUs, mAnnServedUs,
           mAnnTmplUs, mAnnTmplN2Us, mAnnDelTmplUs, mPqServedUs,
@@ -443,8 +459,6 @@ object Bench {
     // warm template — the chargram store's gram-intersection lookup
     // template + the PointServer scoring tail, vs the fresh-planned
     // expansion + search over the same store
-    val wildcardPatterns = Seq("st*am", "mer*e", "*ream", "fil*er",
-      "ta*le", "w*dow", "qu*ry", "ba*ch", "sc*n", "jo*n", "ve*tor")
     val (medianWildcardUs, medianWildcardTmplUs, medianWildcardLoadedUs) = {
       spark.conf.set(aqeKey, "false")
       try {
@@ -468,9 +482,9 @@ object Bench {
           val tmpl = sweep3("warm_wildcard_template_us",
             sweepOf(wildcardPatterns, p => { ws.search(p); () }))
           // the LOADED arm: no cached vocabulary working set — per
-          // query the routed file subset is scanned through a pooled
-          // per-file-set plan (serving nodes that can't hold the
-          // dictionary)
+          // query the routed chargram row groups are read on the
+          // driver (serving nodes that can't hold the dictionary),
+          // then scored through the cached PointServer
           val wsl = new graft.query.LoadedWildcardServer(spark,
             wcPath.toString,
             point = Some(new graft.query.PointServer(ix)))
@@ -629,7 +643,7 @@ object Bench {
     val spreadAll = mergeJson(spread, warmSpread.toSeq)
     val gcAll = mergeJson(gc, warmGc.toSeq)
     val resampledAll = mergeArr(resampled, warmResampled.toSeq)
-    val jsonLine = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"spread":$spreadAll,"gc_sec":$gcAll,"resampled":$resampledAll,"sf":"$sfDir","failed":$nFailed,"index_docs_per_s":${docsPerS.round},"warm_search_us":$medianUs,"warm_search_template_us":$medianTemplateUs,"warm_rm3_us":$medianRm3Us,"warm_rm3_template_us":$medianRm3TemplateUs,"warm_search_loaded_us":$medianLoadedUs,"warm_search_loaded_routed_us":$medianLoadedRoutedUs,"warm_phrase_us":$medianPhraseUs,"warm_phrase_template_us":$medianPhraseTemplateUs,"warm_phrase3_template_us":$medianPhrase3TemplateUs,"warm_near_template_us":$medianNearTemplateUs,"warm_phrase_loaded_routed_us":$medianPhraseLoadedRoutedUs,"warm_near_loaded_routed_us":$medianNearLoadedRoutedUs,"warm_ann_ivf_probe_us":$medianAnnProbeUs,"warm_ann_ivf_served_us":$medianAnnServedUs,"warm_ann_ivf_template_us":$medianAnnTmplUs,"warm_ann_ivf_nprobe2_us":$medianAnnTmplN2Us,"warm_ann_deleted_template_us":$medianAnnDelTmplUs,"warm_ann_ivfpq_served_us":$medianPqServedUs,"warm_ann_ivfpq_template_us":$medianPqTmplUs,"warm_bm25_multi_us":$medianBm25MultiUs,"warm_bm25_pruned_us":$medianBm25PrunedUs,"warm_bm25_served_us":$medianBm25ServedUs,"warm_bm25_template_us":$medianBm25TmplUs,"warm_bm25_batch_us":$medianBm25BatchUs,"warm_wildcard_us":$medianWildcardUs,"warm_wildcard_template_us":$medianWildcardTmplUs,"warm_wildcard_loaded_us":$medianWildcardLoadedUs,"warm_hybrid_template_us":$medianHybridTmplUs,"warm_hybrid_filtered_template_us":$medianHybridFilteredTmplUs,"calib_cpu_ms":$calibCpuMs,"calib_shuffle_ms":$calibShuffleMs,"calib_ref_cpu_ms":$RefCalibCpuMs,"calib_ref_shuffle_ms":$RefCalibShuffleMs,"queries_norm_cpu":$normCpuAll,"queries_norm_shuffle":$normShuffleAll,"ann_conc8_probes_per_s":$annConc8PerS,"funnel_stream_paa_s":${math.rint(graft.queries.IrEngine.lastFunnelStreamWallSec * 100) / 100}}"""
+    val jsonLine = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"spread":$spreadAll,"gc_sec":$gcAll,"resampled":$resampledAll,"sf":"$sfDir","failed":$nFailed,"index_docs_per_s":${docsPerS.round},"warm_search_us":$medianUs,"warm_search_template_us":$medianTemplateUs,"warm_rm3_us":$medianRm3Us,"warm_rm3_template_us":$medianRm3TemplateUs,"warm_search_loaded_us":$medianLoadedUs,"warm_search_loaded_routed_us":$medianLoadedRoutedUs,"warm_wildcard_loaded_routed_us":$medianWildcardLoadedRoutedUs,"warm_phrase_us":$medianPhraseUs,"warm_phrase_template_us":$medianPhraseTemplateUs,"warm_phrase3_template_us":$medianPhrase3TemplateUs,"warm_near_template_us":$medianNearTemplateUs,"warm_phrase_loaded_routed_us":$medianPhraseLoadedRoutedUs,"warm_near_loaded_routed_us":$medianNearLoadedRoutedUs,"warm_ann_ivf_probe_us":$medianAnnProbeUs,"warm_ann_ivf_served_us":$medianAnnServedUs,"warm_ann_ivf_template_us":$medianAnnTmplUs,"warm_ann_ivf_nprobe2_us":$medianAnnTmplN2Us,"warm_ann_deleted_template_us":$medianAnnDelTmplUs,"warm_ann_ivfpq_served_us":$medianPqServedUs,"warm_ann_ivfpq_template_us":$medianPqTmplUs,"warm_bm25_multi_us":$medianBm25MultiUs,"warm_bm25_pruned_us":$medianBm25PrunedUs,"warm_bm25_served_us":$medianBm25ServedUs,"warm_bm25_template_us":$medianBm25TmplUs,"warm_bm25_batch_us":$medianBm25BatchUs,"warm_wildcard_us":$medianWildcardUs,"warm_wildcard_template_us":$medianWildcardTmplUs,"warm_wildcard_loaded_us":$medianWildcardLoadedUs,"warm_hybrid_template_us":$medianHybridTmplUs,"warm_hybrid_filtered_template_us":$medianHybridFilteredTmplUs,"calib_cpu_ms":$calibCpuMs,"calib_shuffle_ms":$calibShuffleMs,"calib_ref_cpu_ms":$RefCalibCpuMs,"calib_ref_shuffle_ms":$RefCalibShuffleMs,"queries_norm_cpu":$normCpuAll,"queries_norm_shuffle":$normShuffleAll,"ann_conc8_probes_per_s":$annConc8PerS,"funnel_stream_paa_s":${math.rint(graft.queries.IrEngine.lastFunnelStreamWallSec * 100) / 100}}"""
     println(jsonLine)
     // the stdout line survives only as a 2000-char tail in the
     // driver's BENCH_r{N}.json (parsed: null every round) — persist

@@ -171,8 +171,8 @@ object Repl {
       case _ => None
     }
     // loaded/pushdown serving mode keeps its no-cached-working-set
-    // discipline for wildcards too: routed per-file-set expansion,
-    // fresh-planned scoring
+    // discipline for wildcards too: routed driver-read expansion,
+    // fresh-planned scoring over the session's index
     val wcLoaded = (cgDir, server) match {
       case (Some(d), None) =>
         Some(new graft.query.LoadedWildcardServer(

@@ -19,9 +19,16 @@ import graft.text.TextPipeline
 object InvertedIndex {
 
   /** All index artifacts; `nDocs` is the corpus count the reference
-    * smuggled through the magic `" "` row. */
+    * smuggled through the magic `" "` row. `scorer`, when set, ranks
+    * already-analyzed terms top-k over the same artifacts on the
+    * driver ([[graft.query.LoadedPointServer.index]] sets it; built
+    * and [[load]]ed indexes leave it `None`), and
+    * [[graft.query.QueryEngine.wildcardSearchExpanded]] scores through
+    * it instead of planning a Spark job. */
   case class Index(postings: DataFrame, termStats: DataFrame,
-                   docMap: DataFrame, nDocs: Long)
+                   docMap: DataFrame, nDocs: Long,
+                   scorer: Option[(Seq[String], Int) =>
+                     Seq[(Long, String, Double)]] = None)
 
   private val buildSeq = new java.util.concurrent.atomic.AtomicLong(0)
 

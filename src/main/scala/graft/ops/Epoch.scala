@@ -44,10 +44,11 @@ import org.apache.hadoop.fs.{FileSystem, Path}
   * no pre-request state to hold and serves current best-effort, so
   * coherence guarantees apply to warmed serving nodes (the case the
   * epoch exists for). A held snapshot that reads part files by name
-  * ([[graft.query.LoadedWildcardServer]]'s routed plans) cannot
-  * outlive a leg that REPLACES those files (the chargram delete's
-  * file surgery) — the same limit as any read beside a commit; the
-  * tombstoning legs leave every held file in place. */
+  * (the loaded servers' routed driver reads) cannot outlive a leg
+  * that REPLACES those files (the chargram delete's file surgery
+  * under [[graft.query.LoadedWildcardServer]]) — the same limit as
+  * any read beside a commit; the tombstoning legs leave every held
+  * file in place. */
 object Epoch {
 
   /** Per-store pointer marker (`_`-prefixed: invisible to parquet

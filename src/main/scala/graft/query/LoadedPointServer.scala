@@ -52,12 +52,40 @@ import graft.index.InvertedIndex
 final class LoadedPointServer(spark: SparkSession, dir: String,
                               topK: Int = 10) {
 
-  /** One immutable snapshot of the on-disk index: loaded frames and
-    * the driver-read routing state. */
+  /** One immutable snapshot of the on-disk index: loaded frames, the
+    * driver-read routing state, and the index handed to callers,
+    * which carries this snapshot's `searchTerms` as its scorer. */
   private final class State {
-    val ix: InvertedIndex.Index = InvertedIndex.load(spark, dir)
+    private val loaded = InvertedIndex.load(spark, dir)
     val routed = new Routing.Routed(spark, dir, InvertedIndex.store, "tf",
-      ix.postings.schema, ix.docMap.schema)
+      loaded.postings.schema, loaded.docMap.schema)
+    val ix: InvertedIndex.Index = loaded.copy(scorer = Some(searchTerms(_, _)))
+
+    /** Top-k (docno, docid, score) rows over already-analyzed terms
+      * (any number), score desc then docno asc — the arithmetic of
+      * [[QueryEngine.serveSearch]]'s plan over the same terms. */
+    def searchTerms(analyzed: Seq[String], k: Int): Seq[(Long, String, Double)] = {
+      val terms = analyzed.map(UTF8String.fromString).distinct
+      val n = ix.nDocs.toDouble
+      val sums = scala.collection.mutable.HashMap.empty[Long, Double]
+      // terms in UTF-8 order: the template's kgram window fed each doc's
+      // sum in that order, and double addition is order-sensitive
+      routed.lists(terms)(_.getLong(2)).toSeq.sortBy(_._1).foreach {
+        case (_, rows) =>
+          val idf = StrictMath.log10(n / rows.size.toDouble)
+          rows.foreach { case (d, tf) =>
+            sums(d) = sums.getOrElse(d, 0.0) + (1.0 + StrictMath.log(tf.toDouble)) * idf
+          }
+      }
+      val top = sums.toSeq
+        .map { case (d, s) =>
+          d -> BigDecimal(s).setScale(4, BigDecimal.RoundingMode.HALF_UP).toDouble }
+        .sortWith { case ((d1, s1), (d2, s2)) => s1 > s2 || (s1 == s2 && d1 < d2) }
+        .take(k)
+      // inner-join semantics: a docno the map cannot resolve is dropped
+      val ids = routed.resolve(top.map(_._1))
+      top.flatMap { case (d, s) => ids.get(d).map(id => (d, id, s)) }
+    }
   }
 
   private val snapshot = new Snapshot[State](
@@ -71,33 +99,14 @@ final class LoadedPointServer(spark: SparkSession, dir: String,
   def refresh(): Unit = snapshot.refresh()
 
   /** The loaded index, for callers that also want analytic plans over
-    * the same artifacts. */
+    * the same artifacts. Its `scorer` is this snapshot's job-free
+    * top-k over analyzed terms, so [[QueryEngine.wildcardSearchExpanded]] over it
+    * runs no Spark job. */
   def index: InvertedIndex.Index = snapshot.current().ix
 
   /** (docno, docid, score) rows, score desc then docno asc — the same
     * output contract as [[QueryEngine.serveSearch]] /
     * [[PointServer.search]]. */
-  def search(query: String): Seq[(Long, String, Double)] = {
-    val st = snapshot.current()
-    val terms = QueryEngine.requireArity(query).map(UTF8String.fromString).distinct
-    val n = st.ix.nDocs.toDouble
-    val sums = scala.collection.mutable.HashMap.empty[Long, Double]
-    // terms in UTF-8 order: the template's kgram window fed each doc's
-    // sum in that order, and double addition is order-sensitive
-    st.routed.lists(terms)(_.getLong(2)).toSeq.sortBy(_._1).foreach {
-      case (_, rows) =>
-        val idf = StrictMath.log10(n / rows.size.toDouble)
-        rows.foreach { case (d, tf) =>
-          sums(d) = sums.getOrElse(d, 0.0) + (1.0 + StrictMath.log(tf.toDouble)) * idf
-        }
-    }
-    val top = sums.toSeq
-      .map { case (d, s) =>
-        d -> BigDecimal(s).setScale(4, BigDecimal.RoundingMode.HALF_UP).toDouble }
-      .sortWith { case ((d1, s1), (d2, s2)) => s1 > s2 || (s1 == s2 && d1 < d2) }
-      .take(topK)
-    // inner-join semantics: a docno the map cannot resolve is dropped
-    val ids = st.routed.resolve(top.map(_._1))
-    top.flatMap { case (d, s) => ids.get(d).map(id => (d, id, s)) }
-  }
+  def search(query: String): Seq[(Long, String, Double)] =
+    snapshot.current().searchTerms(QueryEngine.requireArity(query), topK)
 }

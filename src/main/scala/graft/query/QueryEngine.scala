@@ -1,7 +1,10 @@
 package graft.query
 
-import org.apache.spark.sql.DataFrame
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 import graft.index.InvertedIndex.Index
 import graft.text.TextPipeline
 
@@ -281,6 +284,20 @@ object QueryEngine {
       .map(seg => if (seg.isEmpty) "" else java.util.regex.Pattern.quote(seg))
       .mkString(".*") + "$"
 
+  /** The distinct length-`k` grams of a (lowercased) pattern's
+    * `$`-padded literal segments, cut in CODE POINTS — the windows
+    * [[graft.index.CharKGramIndex.grams]] cuts with Spark's `substr`
+    * (UTF-16 windows would split a supplementary character's
+    * surrogate pair off its neighbours and match nothing). Shared by
+    * [[wildcardTerms]] and both wildcard servers. */
+  private[graft] def wildcardGrams(pat: String, k: Int): Seq[String] =
+    s"$$$pat$$".split("\\*", -1).toSeq
+      .flatMap { seg =>
+        val cps = seg.codePoints().toArray
+        (0 to cps.length - k).map(new String(cps, _, k))
+      }
+      .distinct
+
   def wildcardTerms(chargrams: DataFrame, pattern: String,
                     k: Int = 3): DataFrame = {
     require(pattern.contains("*"), "pattern needs at least one *")
@@ -288,10 +305,7 @@ object QueryEngine {
     // lowercased by the pipeline, so 'St*am' must behave as 'st*am'
     // (the raw pattern used to silently match nothing — r4 review)
     val pat = pattern.toLowerCase(java.util.Locale.ROOT)
-    val padded = s"$$$pat$$"
-    val segGrams = padded.split("\\*", -1).toSeq
-      .flatMap(seg => (0 to seg.length - k).map(i => seg.substring(i, i + k)))
-      .distinct
+    val segGrams = wildcardGrams(pat, k)
     // regex verify with quoted segments: LIKE's `_`/`%` metacharacters
     // in a pattern would silently over-match (vocab terms are
     // alnum-only, so a literal `_` must match nothing)
@@ -342,29 +356,44 @@ object QueryEngine {
   /** [[wildcardSearch]] with the expansion already resolved (a
     * [[LoadedWildcardServer.lookup]] on a serving node that can't
     * hold the vocabulary), scored as a point query over the analyzed
-    * expansion: [[serveSearch]]'s plan, not [[wildcardSearch]]'s.
+    * expansion: [[serveSearch]]'s arithmetic, not [[wildcardSearch]]'s
+    * plan. The expansion is analyzed on the driver with the indexing
+    * pipeline (`graft_tokenize` wraps the same
+    * [[TextPipeline.processContent]]).
     *
-    * Plan shape: the expansion is analyzed on the driver with the
-    * indexing pipeline (`graft_tokenize` wraps the same
-    * [[TextPipeline.processContent]]), so the postings filter is a
-    * LITERAL `kgram` IN-list. Catalyst pushes it through the live
-    * view's tombstone anti-join into the parquet scan, where the
-    * range-laid postings prune by file and row-group min/max — the
-    * scan reads the expansion's term ranges, not the whole store.
-    * The filtered hits coalesce into ONE task that computes df as a
-    * window count, sums, and takes the top-k; the tiny docid resolve
-    * follows. No term_stats scan, no stats broadcast, no distinct
-    * shuffle.
+    * On an index with a `scorer` ([[LoadedPointServer.index]]) the
+    * analyzed terms score on the driver with NO Spark job, and the
+    * top-k comes back as a local relation of (docno, docid, score).
     *
-    * Same rows as [[wildcardSearch]] (spec-pinned, tombstoned stores
-    * included): the window df is the live postings-list length of
-    * each expansion term, and term_stats is delete-exact on disk
-    * ([[graft.index.InvertedIndex.deleteDocs]] re-derives the touched
-    * kgrams from the live postings), so the two df sources agree
-    * after a delete as before it. The prepared
+    * Otherwise, plan shape: the postings filter is a LITERAL `kgram`
+    * IN-list. Catalyst pushes it through the live view's tombstone
+    * anti-join into the parquet scan, where the range-laid postings
+    * prune by file and row-group min/max — the scan reads the
+    * expansion's term ranges, not the whole store. The filtered hits
+    * coalesce into ONE task that computes df as a window count, sums,
+    * and takes the top-k; the tiny docid resolve follows. No
+    * term_stats scan, no stats broadcast, no distinct shuffle.
+    *
+    * Same rows as [[wildcardSearch]] either way (spec-pinned,
+    * tombstoned stores included): the df is the live postings-list
+    * length of each expansion term, and term_stats is delete-exact on
+    * disk ([[graft.index.InvertedIndex.deleteDocs]] re-derives the
+    * touched kgrams from the live postings), so the two df sources
+    * agree after a delete as before it. The prepared
     * [[WildcardServer.search]] scores the same way. */
   def wildcardSearchExpanded(ix: Index, terms: Seq[String],
-                             topK: Int = 10): DataFrame =
-    rank(ix, terms.flatMap(analyze).distinct, topK, bugCompat = false,
-      serve = true)
+                             topK: Int = 10): DataFrame = {
+    val analyzed = terms.flatMap(analyze).distinct
+    ix.scorer match {
+      case Some(score) =>
+        // a Row list with a fixed schema: no per-call encoder derivation
+        val rows = score(analyzed, topK).map { case (d, id, s) => Row(d, id, s) }
+        ix.docMap.sparkSession.createDataFrame(rows.asJava, ServedSchema)
+      case None => rank(ix, analyzed, topK, bugCompat = false, serve = true)
+    }
+  }
+
+  /** The (docno, docid, score) output contract of every ranked path. */
+  private val ServedSchema =
+    StructType.fromDDL("docno BIGINT, docid STRING, score DOUBLE")
 }

@@ -18,10 +18,11 @@ import graft.index.PostingsStore
 /** Driver-side zone-map routing and reads for the loaded-artifact
   * servers ([[LoadedPointServer]], [[LoadedPhraseServer]],
   * [[LoadedWildcardServer]]) — the modern form of the paper client's
-  * term → file/offset dictionary. A write-time (lo, hi, file) range
-  * manifest, read once per snapshot (O(files) driver state), maps a
-  * key to the file(s) covering it, and each file's footer row-group
-  * min/max narrows it to the row groups that can hold the key.
+  * term → file/offset dictionary. A (lo, hi, file) range array, held
+  * once per snapshot (O(files) driver state) — read from a write-time
+  * manifest, or derived from the store by its server — maps a key to
+  * the file(s) covering it, and each file's footer row-group min/max
+  * narrows it to the row groups that can hold the key.
   *
   * Keys compare in SPARK's order — strings as UTF-8 bytes
   * ([[UTF8String]]), the order the manifests' and footers' min/max
@@ -41,8 +42,8 @@ private[query] object Routing {
   val LongKey: Key[Long] = new Key(_.asInstanceOf[Long],
     _.asInstanceOf[java.lang.Long].longValue)
 
-  /** Sorted (lo, hi, file) ranges of a manifest frame (columns
-    * `lo`, `hi`, `file`). */
+  /** Sorted (lo, hi, file) ranges of a range frame (columns `lo`,
+    * `hi`, `file`). */
   def ranges[K: Ordering](manifest: DataFrame,
                           key: Key[K]): Array[(K, K, String)] =
     manifest.select("lo", "hi", "file").collect()
@@ -55,21 +56,24 @@ private[query] object Routing {
     ranges.iterator.filter(r => o.lteq(r._1, key) && o.lteq(key, r._2))
       .map(_._3).toSeq
 
-  /** One range-laid parquet table of a store, `dir/name`, routed by
-    * `dir/name_ranges` on the first column of `schema`, and read on
-    * the DRIVER without a Spark job. Spark's own parquet reader
-    * function, built once, is applied to one [[PartitionedFile]] split
-    * per picked row group, so types and decoding are exactly the
-    * scan's. A file's row groups are read from its footer once and
+  /** The ranges of a store table's write-time zone-map manifest,
+    * `dir/name_ranges`. */
+  def manifest[K: Ordering](spark: SparkSession, dir: String, name: String,
+                            key: Key[K]): Array[(K, K, String)] =
+    ranges(spark.read.parquet(s"$dir/${name}_ranges"), key)
+
+  /** One range-laid parquet table of a store, routed by `ranges` on
+    * the first column of `schema`, and read on the DRIVER without a
+    * Spark job. Spark's own parquet reader function, built once, is
+    * applied to one [[PartitionedFile]] split per picked row group, so
+    * types and decoding are exactly the scan's. A file's row groups are read from its footer once and
     * kept (a snapshot's files never change: a rewrite moves the
     * stamp); a file missing one of `schema`'s columns fails loudly
     * rather than decoding as nulls. */
-  final class Table[K: Ordering](spark: SparkSession, dir: String,
-                                 name: String, schema: StructType,
-                                 key: Key[K]) {
+  final class Table[K: Ordering](spark: SparkSession,
+                                 ranges: Array[(K, K, String)],
+                                 schema: StructType, key: Key[K]) {
     private val conf = spark.sparkContext.hadoopConfiguration
-    private val ranges = Routing.ranges(
-      spark.read.parquet(s"$dir/${name}_ranges"), key)
     private val read = new ParquetFileFormat().buildReaderWithPartitionValues(
       spark, schema, new StructType(), schema, Nil,
       Map(FileFormat.OPTION_RETURNING_BATCH -> "false"), new Configuration(conf))
@@ -100,15 +104,28 @@ private[query] object Routing {
       } finally r.close()
     })
 
+    /** The files whose range covers one of `keys`. */
+    def files(keys: Seq[K]): Seq[String] =
+      keys.flatMap(route(ranges, _)).distinct
+
     /** Run `f` over every row of the routed files' row groups whose
       * min/max covers one of `keys`. Rows are the reader's reused
       * buffers: `f` copies what it keeps. */
     def foreach(keys: Seq[K])(f: InternalRow => Unit): Unit = {
       val o = implicitly[Ordering[K]]
       def covers(b: (K, K)) = keys.exists(k => o.lteq(b._1, k) && o.lteq(k, b._2))
-      keys.flatMap(route(ranges, _)).distinct.foreach { file =>
+      scan(files(keys), _.forall(covers))(f)
+    }
+
+    /** Run `f` over every row of every file. */
+    def foreachAll(f: InternalRow => Unit): Unit =
+      scan(ranges.map(_._3).distinct.toSeq, _ => true)(f)
+
+    private def scan(files: Seq[String], pick: Option[(K, K)] => Boolean)
+                    (f: InternalRow => Unit): Unit =
+      files.foreach { file =>
         groupsOf(file).foreach { case (bounds, split) =>
-          if (bounds.forall(covers)) {
+          if (pick(bounds)) {
             val rows = read(split)
             try rows.foreach(f)
             finally rows match {
@@ -118,7 +135,6 @@ private[query] object Routing {
           }
         }
       }
-    }
   }
 
   /** The driver-read state of ONE loaded postings-store snapshot,
@@ -134,9 +150,10 @@ private[query] object Routing {
 
     private def cols(s: StructType, names: String*) = StructType(names.map(s(_)))
 
-    private val postings = new Table(spark, dir, store.postings,
+    private val postings = new Table(spark,
+      manifest(spark, dir, store.postings, Utf8Key),
       cols(postingsSchema, store.key, "docno", payload), Utf8Key)
-    private val docMap = new Table(spark, dir, "doc_map",
+    private val docMap = new Table(spark, manifest(spark, dir, "doc_map", LongKey),
       cols(docMapSchema, "docno", "docid"), LongKey)
     private val tombs: Set[Long] = PostingsStore.readTombs(spark, dir)
       .fold(Set.empty[Long])(_.collect().map(_.getLong(0)).toSet)
@@ -147,11 +164,12 @@ private[query] object Routing {
       * posting are absent. */
     def lists[V](terms: Seq[UTF8String])(value: InternalRow => V)
         : Map[UTF8String, Seq[(Long, V)]] = {
+      // keyed by the query's own term: the row's bytes are a reused buffer
+      val own = terms.map(t => t -> t).toMap
       val rows = Seq.newBuilder[(UTF8String, (Long, V))]
       postings.foreach(terms) { r =>
         val d = r.getLong(1)
-        // keyed by the query's own term: the row's bytes are a reused buffer
-        for (t <- terms.find(_ == r.getUTF8String(0)) if !tombs(d))
+        for (t <- own.get(r.getUTF8String(0)) if !tombs(d))
           rows += t -> (d -> value(r))
       }
       rows.result().groupMap(_._1)(_._2)

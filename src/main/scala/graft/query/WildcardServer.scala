@@ -2,9 +2,11 @@ package graft.query
 
 import java.util.concurrent.atomic.AtomicReference
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.Bridge
+import org.apache.spark.sql.types.StructType
 import org.apache.spark.unsafe.types.UTF8String
 
 import graft.index.CharKGramIndex
@@ -67,7 +69,7 @@ final class WildcardServer(spark: SparkSession, cgDir: String,
       .distinct().collect().map(_.getString(0)).sorted
 
     val pool = new TemplatePool[Unit, Tmpl](
-      _ => WildcardServer.tmpl(pairs.filter(_)), maxKeys = 1)
+      _ => WildcardServer.tmpl(pairs), maxKeys = 1)
   }
 
   private val snapshot = new Snapshot[State](
@@ -113,15 +115,13 @@ object WildcardServer {
   private[query] val DefaultK = 3
 
   /** A lowercased pattern's anchored verify regex and the distinct
-    * length-`k` grams of its `$`-padded literal segments. */
+    * length-`k` grams of its `$`-padded literal segments
+    * ([[QueryEngine.wildcardGrams]]). */
   private[query] final class Pattern(pattern: String, k: Int) {
     private val pat = pattern.toLowerCase(java.util.Locale.ROOT)
     private val re = java.util.regex.Pattern
       .compile(QueryEngine.wildcardRegex(pat))
-    val grams: Seq[String] = s"$$$pat$$".split("\\*", -1).toSeq
-      .flatMap(seg =>
-        (0 to seg.length - k).map(i => seg.substring(i, i + k)))
-      .distinct
+    val grams: Seq[String] = QueryEngine.wildcardGrams(pat, k)
 
     def matches(term: String): Boolean = re.matcher(term).matches()
   }
@@ -139,12 +139,11 @@ object WildcardServer {
     }
   }
 
-  /** Count matched grams per term: `terms` turns the gram-set
-    * predicate into the candidate `term` rows (a filtered cached pair
-    * scan, or a routed file scan exploded after its filter). */
-  private[query] def tmpl(terms: Column => DataFrame): Tmpl = {
+  /** Count matched grams per term over the (gram, term) `pairs` the
+    * driver-updated gram set keeps. */
+  private def tmpl(pairs: DataFrame): Tmpl = {
     val ref = PointServer.termCell()
-    val df = terms(Bridge.column(
+    val df = pairs.filter(Bridge.column(
         RefSetContains(Bridge.expression(col("gram")), ref)))
       .coalesce(1)
       .groupBy(col("term")).agg(count(lit(1)).as("ng"))
@@ -167,28 +166,28 @@ object WildcardServer {
 }
 
 /** LOADED wildcard serving — [[WildcardServer]] for nodes that can't
-  * hold the vocabulary: nothing vocabulary-sized is cached. Held per
-  * snapshot, O(part files) driver state only:
+  * hold the vocabulary: nothing vocabulary-sized is cached, and a
+  * lookup runs NO Spark job. Held per snapshot, O(part files) driver
+  * state only:
   *  - the store's per-file gram RANGES, derived by ONE narrow
-  *    gram-column scan per store generation (the
-  *    [[LoadedPointServer]] zone-map discipline; derived rather than
+  *    gram-column scan per store generation (derived rather than
   *    manifest-read because the chargram table IS its store root and
   *    file surgery maintains it in place — the same on-the-fly
-  *    routing [[CharKGramIndex.mergeIntoStore]] uses);
-  *  - an LRU of prepared per-file-set plans (driver-updated
-  *    [[RefSetContains]] gram set, exchange-free single-partition
-  *    count — the routed prune happens at the FILE level, where a
-  *    driver-ref predicate can't be pushed into parquet).
+  *    routing [[CharKGramIndex.mergeIntoStore]] uses), held in a
+  *    [[Routing.Table]] with its per-file footer row groups.
   *
   * Per query: route the pattern's segment grams to their covering
-  * part files (driver arithmetic), scan ONLY those files through the
-  * pooled plan, keep candidates holding every gram that pass the
-  * anchored-regex verify — output-identical to
-  * [[QueryEngine.wildcardTerms]] / [[WildcardServer.lookup]]
-  * (spec-pinned; q09's oracle semantics). All-short-segment patterns
-  * (no gram to narrow by) fall back to a full distinct-vocabulary
-  * scan PER CALL — the deliberate price of not holding the
-  * dictionary.
+  * part files (driver arithmetic), read on the driver ONLY those
+  * files' row groups whose gram min/max covers a gram, count the
+  * matched grams per term, and keep the candidates holding every
+  * gram that pass the anchored-regex verify, in UTF-8 order —
+  * output-identical to [[QueryEngine.wildcardTerms]] /
+  * [[WildcardServer.lookup]] (spec-pinned; q09's oracle semantics).
+  * All-short-segment patterns (no gram to narrow by) read every row
+  * group PER CALL — the deliberate price of not holding the
+  * dictionary. The expansion scores job-free too when it goes to
+  * [[QueryEngine.wildcardSearchExpanded]] with a
+  * [[LoadedPointServer.index]].
   *
   * STALENESS: the same [[Snapshot]] holder and
   * [[DirVersion]]/[[graft.StoreGen]] stamp as every loaded server,
@@ -199,27 +198,20 @@ final class LoadedWildcardServer(spark: SparkSession, cgDir: String,
                                  point: Option[PointServer] = None) {
 
   private final class State {
+    private val cg = CharKGramIndex.load(spark, cgDir)
     /** Sorted (lo, hi, file) gram ranges — O(files) driver state. */
-    val ranges: Array[(UTF8String, UTF8String, String)] = Routing.ranges(
-      CharKGramIndex.load(spark, cgDir)
-        .select(col("gram"), input_file_name().as("file"))
+    private val ranges = Routing.ranges(
+      cg.select(col("gram"), input_file_name().as("file"))
         .groupBy(col("file"))
         .agg(min(col("gram")).as("lo"), max(col("gram")).as("hi")),
       Routing.Utf8Key)
+    val grams = new Routing.Table(spark, ranges,
+      StructType(Seq(cg.schema("gram"), cg.schema("terms"))), Routing.Utf8Key)
 
     /** Gram length from the range endpoints (grams are fixed-width
-      * `$`-padded windows); empty store → the default. */
-    val k: Int = ranges.headOption.map(_._1.toString.length)
+      * `$`-padded code-point windows); empty store → the default. */
+    val k: Int = ranges.headOption.map(_._1.numChars())
       .getOrElse(WildcardServer.DefaultK)
-
-    val pool = new TemplatePool[Seq[String], WildcardServer.Tmpl](
-      files => WildcardServer.tmpl(inGrams => spark.read.parquet(files: _*)
-        .filter(inGrams).select(explode(col("terms")).as("term"))),
-      maxKeys = 32)
-
-    def files(p: WildcardServer.Pattern): Seq[String] =
-      p.grams.flatMap(g => Routing.route(ranges, UTF8String.fromString(g)))
-        .distinct.sorted
   }
 
   private val snapshot = new Snapshot[State](
@@ -230,11 +222,12 @@ final class LoadedWildcardServer(spark: SparkSession, cgDir: String,
     * hammer for eventually consistent listings). */
   def refresh(): Unit = snapshot.refresh()
 
-  /** The part files the pattern's lookup would scan (spec hook for
+  /** The part files the pattern's lookup would read (spec hook for
     * the routed-prune claim). */
   private[graft] def routedFiles(pattern: String): Seq[String] = {
     val st = snapshot.current()
-    st.files(new WildcardServer.Pattern(pattern, st.k))
+    st.grams.files(new WildcardServer.Pattern(pattern, st.k).grams
+      .map(UTF8String.fromString))
   }
 
   /** The pattern's matching vocabulary terms, ascending — identical
@@ -244,18 +237,21 @@ final class LoadedWildcardServer(spark: SparkSession, cgDir: String,
     require(pattern.contains("*"), "pattern needs at least one *")
     val st = snapshot.current()
     val p = new WildcardServer.Pattern(pattern, st.k)
-    if (p.grams.isEmpty)
-      // all segments shorter than k: nothing narrows — the un-cached
-      // arm pays a full distinct-vocabulary scan per call
-      CharKGramIndex.load(spark, cgDir)
-        .select(explode(col("terms")).as("term")).distinct()
-        .collect().map(_.getString(0))
-        .filter(p.matches).sorted.toSeq
-    else {
-      val files = st.files(p)
-      if (files.isEmpty) Seq.empty // no file covers any gram
-      else st.pool.withInstance(files)(_.lookup(p))
+    val grams = p.grams.map(UTF8String.fromString)
+    val want = grams.toSet
+    // term → matched grams; terms are copied out of the reused row
+    val ng = scala.collection.mutable.HashMap.empty[UTF8String, Int]
+    def count(r: InternalRow): Unit = if (!r.isNullAt(1)) {
+      val terms = r.getArray(1)
+      (0 until terms.numElements()).foreach { i =>
+        val t = terms.getUTF8String(i).clone()
+        ng(t) = ng.getOrElse(t, 0) + 1
+      }
     }
+    if (grams.isEmpty) st.grams.foreachAll(count) // nothing narrows
+    else st.grams.foreach(grams)(r => if (want(r.getUTF8String(0))) count(r))
+    ng.iterator.collect { case (t, n) if n == grams.size || grams.isEmpty => t }
+      .filter(t => p.matches(t.toString)).toSeq.sorted.map(_.toString)
   }
 
   /** Served wildcard RETRIEVAL over the routed lookup — same scoring

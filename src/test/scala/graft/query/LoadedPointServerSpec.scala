@@ -95,8 +95,9 @@ class LoadedPointServerSpec extends SparkSpec {
     }
   }
 
-  test("appended, tombstoned multi-file store: bit-identical to " +
-    "serveSearch, ties at the top-k boundary included") {
+  /** An appended (base ≤ FT911-0010, delta after, 50 rows a file) and
+    * tombstoned (FT911-0017, FT911-0008) written index. */
+  private def withAppendedTombstoned(f: String => Unit): Unit = {
     import spark.implicits._
     withTmp { dir =>
       // docnos follow docid order within each generation, and the
@@ -107,6 +108,13 @@ class LoadedPointServerSpec extends SparkSpec {
         corpus.filter($"docid" > "FT911-0010"), rowsPerFile = 50L)
       InvertedIndex.deleteDocs(spark, dir,
         Seq("FT911-0017", "FT911-0008").toDF("docid"))
+      f(dir)
+    }
+  }
+
+  test("appended, tombstoned multi-file store: bit-identical to " +
+    "serveSearch, ties at the top-k boundary included") {
+    withAppendedTombstoned { dir =>
       val ranges = Routing.ranges(
         spark.read.parquet(s"$dir/postings_ranges"), Routing.Utf8Key)
       Seq("merge", "stream").foreach { w =>
@@ -138,6 +146,49 @@ class LoadedPointServerSpec extends SparkSpec {
         qs.foreach { case (q, _) =>
           assert(bits(cut.search(q)) == fresh(lx, q, k), s"query [$q] top-$k")
         }
+      }
+    }
+  }
+
+  test("loaded wildcard request on an appended, tombstoned store: " +
+    "bit-identical to the rank(serve) plan over InvertedIndex.load, " +
+    "and a warm request submits no Spark job") {
+    withAppendedTombstoned { dir =>
+      withTmp { cgDir =>
+        // 8 files, so the routed read covers a strict subset
+        val cg = graft.index.CharKGramIndex.build(spark, corpus)
+        graft.index.CharKGramIndex.write(cg, cgDir,
+          rowsPerFile = math.max(1L, cg.count() / 8))
+        val lx = InvertedIndex.load(spark, dir)
+        assert(lx.scorer.isEmpty)
+        val lps = new LoadedPointServer(spark, dir)
+        val lws = new LoadedWildcardServer(spark, cgDir)
+        def rows(df: org.apache.spark.sql.DataFrame) = {
+          assert(df.columns.toSeq == Seq("docno", "docid", "score"))
+          bits(df.collect().map(r => (r.getLong(0), r.getString(1),
+            r.getDouble(2))).toSeq)
+        }
+        // st*: a many-term expansion; a*b: every segment shorter than
+        // k, so the lookup reads every row group
+        val patterns = Seq("st*am", "st*", "a*b", "*zzqnotfound*")
+        patterns.foreach { p =>
+          val terms = lws.lookup(p)
+          assert(terms == QueryEngine.wildcardTerms(cg, p).collect()
+            .map(_.getString(0)).toSeq, s"pattern [$p] lookup")
+          assert(rows(QueryEngine.wildcardSearchExpanded(lps.index, terms)) ==
+            rows(QueryEngine.wildcardSearchExpanded(lx, terms)), s"pattern [$p]")
+        }
+        assert(lws.lookup("st*").size > 1)
+        assert(rows(QueryEngine.wildcardSearchExpanded(lps.index,
+          lws.lookup("st*am"))).nonEmpty)
+        assert(rows(QueryEngine.wildcardSearchExpanded(lps.index,
+          Seq.empty)).isEmpty)
+        val jobs = jobsDuring {
+          patterns.foreach { p =>
+            QueryEngine.wildcardSearchExpanded(lps.index, lws.lookup(p)).collect()
+          }
+        }
+        assert(jobs == 0, s"warm loaded wildcard requests submitted $jobs Spark jobs")
       }
     }
   }

@@ -41,7 +41,7 @@ class ServerEpochSpec extends SparkSpec {
     val lws = new LoadedWildcardServer(spark, cg)
 
     /** Every served answer, except the routed wildcard lookup: its
-      * held plans read gram part files by name, which the chargram
+      * held snapshot reads gram part files by name, which the chargram
       * leg's file surgery replaces (see the [[Epoch]] doc). */
     def answers: Seq[Any] = {
       val (a, b, w) = near

@@ -252,6 +252,27 @@ class WildcardServerSpec extends SparkSpec {
     }
   }
 
+  test("a pattern holding a supplementary character expands like " +
+    "the index cut it: code-point grams on every lookup path") {
+    import spark.implicits._
+    val sup = new String(Character.toChars(0x20000)) + "yz"
+    val docs = Seq("S1" -> s"$sup apple", "S2" -> "apple pie")
+      .toDF("docid", "content")
+    val store = tmp("graft_wc_sup")
+    val cg = CharKGramIndex.build(spark, docs)
+    CharKGramIndex.write(cg, store)
+    val ws = new WildcardServer(spark, store)
+    val lws = new LoadedWildcardServer(spark, store)
+    // whole-segment grams, a trailing `$` gram, and a segment one code
+    // point short of a gram (two UTF-16 units too many for one)
+    for (p <- Seq(s"$sup*", s"*$sup", s"*${sup.take(2)}y*")) {
+      assert(QueryEngine.wildcardTerms(cg, p).collect().map(_.getString(0))
+        .toSeq == Seq(sup), s"wildcardTerms [$p]")
+      assert(ws.lookup(p) == Seq(sup), s"WildcardServer [$p]")
+      assert(lws.lookup(p) == Seq(sup), s"LoadedWildcardServer [$p]")
+    }
+  }
+
   private def fs = org.apache.hadoop.fs.FileSystem.get(
     spark.sparkContext.hadoopConfiguration)
 }
