@@ -532,8 +532,9 @@ object Bench {
           .q10Bm25Pruned(spark, sfDir, bm25Queries(i.toInt)).count(); () }))
       // served form: fresh Catalyst per query against the HELD store
       // (no content-stamp relisting) — isolates planning tax from
-      // store-key bookkeeping; template form: the prepared Bm25Server
-      // (two exchange-free jobs per query, zero Catalyst work)
+      // store-key bookkeeping; template form: Bm25Server, which scores
+      // on the driver over its snapshot's postings dictionary (no
+      // Spark job; the key name predates that)
       val store = graft.queries.IrSql.bm25StatsStore(spark, sfDir)
       val mServed = sweep3("warm_bm25_served_us", sweepOf(idx,
         i => { graft.queries.IrSql
@@ -550,10 +551,11 @@ object Bench {
         _ => { bsrv.searchBatch(graft.queries.IrSql.BatchQueries); () }))
       (mMulti, mPruned, mServed, mTmpl, mBatch)
     }
-    // hybrid retrieval template: BM25 MaxScore arm + ROUTED adaptive
-    // IVF arm (the production default — r13 verdict replaced the
-    // cap-probe full-store scan) + driver-side RRF — three prepared
-    // jobs per query, zero Catalyst work (the q37_hybrid_rrf_auto
+    // hybrid retrieval template: driver-scored BM25 MaxScore arm (no
+    // job) + ROUTED adaptive IVF arm (the production default — r13
+    // verdict replaced the cap-probe full-store scan) + driver-side
+    // RRF — the IVF arm's prepared job(s) only, zero Catalyst work
+    // (the q37_hybrid_rrf_auto
     // serving shape); plus the FILTERED fusion (keep-set refs on both
     // arms, the q37_hybrid_rrf_filtered serving shape)
     val (medianHybridTmplUs, medianHybridFilteredTmplUs) = {

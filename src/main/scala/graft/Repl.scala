@@ -85,7 +85,7 @@ object Repl {
           Some((spark,
             graft.ops.Similarity.cachedIvfStore(spark, dir), dir))
         else None
-      // hybrid fusion shares the ONE Bm25Server (its cached join) and
+      // hybrid fusion shares the ONE Bm25Server (its snapshot) and
       // serves the corpus demo query vector (vec 0, the family
       // convention) as the semantic arm's query
       val hyb = annCtx.map { case (sp, store, d) =>
@@ -268,8 +268,8 @@ object Repl {
               "corpus dir, or persist one alongside the written index)")
         }
       } else if (q.matches("(?i)^bm25(\\s+\\S+)+$")) {
-        // multi-term ranked retrieval through the prepared Bm25Server
-        // (MaxScore bound-pruned, exact unpruned ranking) — the query
+        // multi-term ranked retrieval through Bm25Server (MaxScore
+        // bound-pruned on the driver, exact unpruned ranking) — the query
         // shape the 1-2-word arity cap can't serve
         bm25 match {
           case Some(srv) =>

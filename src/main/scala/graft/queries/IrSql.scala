@@ -827,17 +827,16 @@ object IrSql {
   }
 
   /** The exact BM25 posting score as DRIVER arithmetic — the same
-    * operations in the same order as the [[bm25S]] column expression
-    * (both bottom out in java.lang.Math.log and IEEE doubles), used to
-    * price a stats row's frontier pairs into the per-term impact bound
-    * at query time. A last-ulp divergence between the two paths only
-    * matters at the essential-split boundary, where [[ThetaEps]]
-    * dwarfs it. */
+    * operations in the same order as the [[bm25S]] column expression,
+    * and the same `StrictMath.log` Spark's `log` calls, so the doubles
+    * are bit-identical. It prices a stats row's frontier pairs into
+    * the per-term impact bound at query time and scores every posting
+    * [[graft.query.Bm25Server]] serves. */
   private[graft] def bm25Score(tf: Long, dl: Long, df: Long,
                                tt: Long, nd: Long,
                                k1: Double = Bm25K1,
                                b: Double = Bm25B): Double =
-    math.log((nd - df + 0.5) / (df + 0.5) + 1.0) *
+    StrictMath.log((nd - df + 0.5) / (df + 0.5) + 1.0) *
       (tf * (k1 + 1)) /
       (tf + k1 * ((1 - b) + b * dl / (tt.toDouble / nd)))
 

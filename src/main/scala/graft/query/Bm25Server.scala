@@ -13,7 +13,7 @@ import org.apache.spark.unsafe.types.UTF8String
 import graft.queries.IrSql
 
 /** term → long lookup against a DRIVER-UPDATED map reference — the
-  * per-term df feed of the prepared BM25 scoring template (a literal
+  * per-term df feed of the prepared BM25 batch template (a literal
   * df column would force a fresh plan per query; a join against a df
   * table would put an exchange in the template). The map is captured
   * when a job's tasks are serialized, so each execution sees the
@@ -73,65 +73,65 @@ private[query] case class RefMapQidsLookup(
     copy(child = c)
 }
 
-/** PREPARED MULTI-TERM BM25 serving — the [[PointServer]] discipline
-  * applied to the MaxScore-pruned ranked-retrieval path (the most
-  * common real query shape; the fresh
-  * [[graft.queries.IrSql.q10Bm25Pruned]] plan pays two sequential
+/** MULTI-TERM BM25 serving — the MaxScore-pruned ranked-retrieval
+  * path (the most common real query shape) answered the way the
+  * paper's client answers a query: a dictionary probe and an
+  * in-memory score, with no Spark job (the fresh
+  * [[graft.queries.IrSql.q10Bm25Pruned]] plan pays several sequential
   * driver round-trips of mostly Catalyst tax per query — measured
   * 569 ms warm at sf0.1 in round 11).
   *
-  * Held once per corpus (construction):
-  *  - the store's postings ⨝ doclen, joined ONCE and cached — the
-  *    per-query templates then run exchange-free over the in-memory
-  *    relation (the join is the one operation a reusable plan could
-  *    not legally contain: exchanges cache their first result);
-  *  - the FULL stats dictionary collected to a driver map
-  *    (term → (df, frontier pairs)) — vocab-bounded, the term
-  *    dictionary every real serving node holds in RAM; impact bounds
-  *    are priced from the frontier pairs at lookup time
-  *    ([[graft.queries.IrSql.bm25Score]]), so they are always
-  *    current against the corpus stats;
-  *  - the one-row corpus stats (tt, nd), baked into the templates as
-  *    literals.
+  * Held once per store snapshot (construction):
+  *  - the store's live postings ⨝ doclen, joined ONCE and cached —
+  *    the input of the one prepared plan left, [[searchBatch]]'s
+  *    exchange-free batch template;
+  *  - the same relation collected ONCE to a per-term driver
+  *    dictionary of primitive arrays, term → (doc_id[], tf[], dl[]):
+  *    24 bytes per live posting plus ~170 per term (SizeEstimator:
+  *    0.29 MB for the 500-doc sf0.001/sf0.01 corpora, 11.7k postings
+  *    over 31 terms; 2.99 MB for perfbench `churn`'s 300 docs, 39.5k
+  *    postings over 13.5k terms) — the postings a serving node's
+  *    working set holds anyway;
+  *  - the FULL stats dictionary (term → (df, frontier pairs)) —
+  *    vocab-bounded, the term dictionary every real serving node
+  *    holds in RAM; impact bounds are priced from the frontier pairs
+  *    at lookup time ([[graft.queries.IrSql.bm25Score]]), so they are
+  *    always current against the corpus stats;
+  *  - the live (tt, nd) corpus stats.
   *
-  * Per query, ONE pooled template instance executes the whole
-  * MaxScore protocol with zero Catalyst work:
-  *  1. θ pass: the term-set ref holds just the top-impact term; its
-  *     postings score through the shared arithmetic; top-k collect →
-  *     θ (≤ k rows to the driver);
-  *  2. driver essential split
-  *     ([[graft.queries.IrSql.maxScoreEssential]], ε-margined);
-  *  3. scoring pass: term-set ref = the query's known terms, df map
-  *     ref = their df's, essential-set ref = the split; per-doc
-  *     fixed-point sums and an `any essential term` flag come out of
-  *     ONE single-partition aggregate, and docs with no essential
-  *     term drop POST-aggregate — output-identical to the pruned
-  *     plan's pre-aggregate semi-join (both restrict the same doc
-  *     set; scores of surviving docs are full either way), without
-  *     its exchange.
+  * Per query, the MaxScore protocol runs on the driver over the
+  * dictionary:
+  *  1. θ pass: the top-impact term's exact scores; θ is the k-th best
+  *     (-∞ when the term has fewer than k postings);
+  *  2. essential split ([[graft.queries.IrSql.maxScoreEssential]],
+  *     ε-margined);
+  *  3. scoring: every known term's postings score through
+  *     [[graft.queries.IrSql.bm25Score]] (the operations, order and
+  *     `StrictMath.log` of the fresh plans' column), quantize to the
+  *     fixed-point [[graft.queries.IrSql.Bm25Scale]] under Spark's
+  *     HALF_UP `round` and sum per doc; docs holding no essential term
+  *     drop, scores round to 4 places, order score desc then doc_id.
   *
-  * Results are IDENTICAL to [[graft.queries.IrSql.q10Bm25Pruned]] /
+  * Results are bit-IDENTICAL to [[graft.queries.IrSql.q10Bm25Pruned]] /
   * `q10Bm25Multi` (spec-pinned: served == fresh == multi). Intended
-  * for the CACHED store (a serving node's working set); a
-  * parquet-backed deployment at vocab sizes past driver RAM keeps
+  * for a store whose postings fit the driver (a serving node's
+  * working set); a parquet-backed deployment past driver RAM keeps
   * the fresh path's literal predicates and store lookups
-  * ([[graft.queries.IrSql.q10Bm25Pruned]]), exactly as
-  * [[PointServer]] defers to `serveSearch` for loaded indexes.
-  * Concurrency: each query borrows a pooled instance — the
-  * set-refs-then-collect window is private per caller
-  * ([[TemplatePool]]).
+  * ([[graft.queries.IrSql.q10Bm25Pruned]]). Concurrency: a snapshot is
+  * immutable and each query allocates its own accumulators.
   *
-  * STALENESS: the snapshot (cached join, driver dictionary, (tt, nd)
-  * literals) lives in the shared [[Snapshot]] holder under the
+  * STALENESS: the snapshot (cached join, driver dictionaries, (tt, nd))
+  * lives in the shared [[Snapshot]] holder under the
   * store's VERSION STAMP ([[DirVersion]]: one read of the
   * [[graft.StoreGen]] generation, or the per-file fold of every
   * artifact dir when the marker is absent). Every [[search]]
   * revalidates the stamp (driver-side metadata only) and REBUILDS the
   * snapshot when the store moved under it — so
   * [[graft.queries.IrSql.mergeBm25Stats]] / `compactBm25Store` /
-  * `repairBm25Stats` against a live server are
-  * detected, never silently served stale. [[refresh]] stays the
-  * explicit hammer for layouts where listings can lag (eventually
+  * `repairBm25Stats` / the lazy and exact deletes against a live
+  * server are detected, never silently served stale; each rebuild
+  * reads the store's files ([[PointServer.cache]]). [[refresh]] stays
+  * the explicit hammer for layouts where listings can lag (eventually
   * consistent object stores). As everywhere in the serving layer,
   * run mutations behind a quiesce for cutover-exact semantics: a
   * query IN FLIGHT during the mutation may race the file swap; the
@@ -147,30 +147,34 @@ final class Bm25Server(spark: SparkSession, storeDir: String,
     // cache; zero per-query cost); every maintenance dir rides in
     // the version stamp, so a delete/update under a live server
     // rebuilds this snapshot like any mutation
-    val joined: DataFrame = IrSql.livePostings(spark, storeDir)
-      .join(IrSql.liveDoclen(spark, storeDir), "doc_id")
-      .select(col("term"), col("doc_id"), col("tf"), col("dl"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val joined: DataFrame = PointServer.cache(
+      IrSql.livePostings(spark, storeDir)
+        .join(IrSql.liveDoclen(spark, storeDir), "doc_id")
+        .select(col("term"), col("doc_id"), col("tf"), col("dl"))).head
 
     // EXACT tombstones ([[IrSql.deleteBm25Docs]]) leave stats/corpus
     // delete-exact on disk; LAZY ones ([[IrSql.deleteBm25DocsLazy]])
     // and pending UPDATES ([[IrSql.updateBm25Docs]]) do not — the
     // sidecars correct (tt, nd) here, and the stats dictionary below
-    // live-counts df once per snapshot
+    // takes the live df from the postings dictionary
     private val pending = IrSql.hasPendingBm25State(spark, storeDir)
 
     val (tt, nd) = IrSql.liveCorpusStats(spark, storeDir)
 
-    joined.count() // materialize the cached relation at construction
+    /** term → its live postings, one primitive array per column. */
+    val postings: Map[String, Bm25Server.Postings] =
+      joined.collect().groupBy(_.getString(0)).map { case (t, rs) =>
+        t -> new Bm25Server.Postings(rs.map(_.getLong(1)),
+          rs.map(_.getLong(2)), rs.map(_.getLong(3)))
+      }
 
     /** term → (df, frontier pairs) — the in-RAM dictionary. On a
-      * deferred-state store (lazy deletes / pending updates), df
-      * comes from one vocabulary-bounded agg over the cached LIVE
-      * relation (terms whose live df is 0 drop out, terms a pending
-      * update INTRODUCED enter); frontier pairs are the stored rows
-      * extended by the stats_upd overlay — a frontier over a superset
-      * of the live postings keeps every impact an upper bound, so
-      * MaxScore stays sound. */
+      * deferred-state store (lazy deletes / pending updates), df is
+      * the length of the term's live postings (terms whose live df is
+      * 0 drop out, terms a pending update INTRODUCED enter); frontier
+      * pairs are the stored rows extended by the stats_upd overlay — a
+      * frontier over a superset of the live postings keeps every
+      * impact an upper bound, so MaxScore stays sound. */
     val stats: Map[String, (Long, Seq[(Long, Long)])] = {
       val stored = spark.read.parquet(s"$storeDir/stats").collect().map { r =>
         r.getString(0) -> (r.getLong(1),
@@ -184,14 +188,8 @@ final class Bm25Server(spark: SparkSession, storeDir: String,
         t -> (df0, pairs0 ++ overlay.getOrElse(t, Seq.empty))
       }.toMap
       if (!pending) base
-      else {
-        val liveDf = joined.groupBy(col("term"))
-          .agg(org.apache.spark.sql.functions.count(
-            org.apache.spark.sql.functions.lit(1)).as("df"))
-          .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-        base.flatMap { case (t, (_, pairs)) =>
-          liveDf.get(t).map(ldf => t -> (ldf, pairs))
-        }
+      else base.flatMap { case (t, (_, pairs)) =>
+        postings.get(t).map(p => t -> (p.doc.length.toLong, pairs))
       }
     }
 
@@ -200,25 +198,52 @@ final class Bm25Server(spark: SparkSession, storeDir: String,
       pairs.map(p => IrSql.bm25Score(p._1, p._2, df, tt, nd)).max
     }
 
-    // pool key: FILTERED shape? — the filtered twin adds a
-    // driver-updated keep-set predicate on doc_id to both plans (the
-    // q10Bm25Filtered candidate restriction; stats stay global)
-    val pool = new TemplatePool[Boolean, Tmpl](f => buildTmpl(this, f),
-      maxKeys = 2)
+    private def scores(term: String): (Bm25Server.Postings, Array[Double]) = {
+      val p = postings.getOrElse(term, Bm25Server.NoPostings)
+      val df = stats(term)._1
+      (p, Array.tabulate(p.doc.length)(i =>
+        IrSql.bm25Score(p.tf(i), p.dl(i), df, tt, nd)))
+    }
+
+    /** θ: the k-th best exact score of `term`'s postings, -∞ when it
+      * has fewer than k. */
+    def theta(term: String): Double = {
+      val s = scores(term)._2
+      if (s.length < topK) Double.NegativeInfinity
+      else { java.util.Arrays.sort(s); s(s.length - topK) }
+    }
+
+    /** The top-k (doc_id, score) over `terms`' postings of the docs
+      * `keep` admits that hold an `essential` term. */
+    def top(terms: Seq[String], essential: Set[String],
+            keep: Long => Boolean): Seq[(Long, Double)] = {
+      val sums = new scala.collection.mutable.LongMap[Long]
+      val hits = new scala.collection.mutable.LongMap[Unit]
+      terms.foreach { t =>
+        val (p, s) = scores(t)
+        val ess = essential(t)
+        var i = 0
+        while (i < s.length) {
+          val d = p.doc(i)
+          if (keep(d)) {
+            sums(d) = sums.getOrElse(d, 0L) +
+              Bm25Server.round(s(i) * IrSql.Bm25Scale, 0).toLong
+            if (ess) hits(d) = ()
+          }
+          i += 1
+        }
+      }
+      hits.keys.toSeq
+        .map(d => (d, Bm25Server.round(sums(d).toDouble / IrSql.Bm25Scale, 4)))
+        .sortBy { case (d, sc) => (-sc, d) }
+        .take(topK)
+    }
 
     // the BATCH template builds lazily on the first searchBatch (an
     // interactive-only deployment never pays its plan)
     val batchPool = new TemplatePool[Unit, BatchTmpl](
       _ => buildBatchTmpl(this), maxKeys = 1)
   }
-
-  private final case class Tmpl(
-      thetaTerms: AtomicReference[java.util.HashSet[UTF8String]],
-      scoreTerms: AtomicReference[java.util.HashSet[UTF8String]],
-      essTerms: AtomicReference[java.util.HashSet[UTF8String]],
-      dfMap: AtomicReference[java.util.HashMap[UTF8String, java.lang.Long]],
-      keep: AtomicReference[java.util.HashSet[java.lang.Long]],
-      thetaDf: DataFrame, scoreDf: DataFrame)
 
   private final case class BatchTmpl(
       terms: AtomicReference[java.util.HashSet[UTF8String]],
@@ -238,50 +263,6 @@ final class Bm25Server(spark: SparkSession, storeDir: String,
       (col("tf") * lit(k1 + 1)) /
       (col("tf") + lit(k1) * (lit(1 - b) + lit(b) * col("dl") /
         (lit(st.tt).cast("double") / lit(st.nd))))
-  }
-
-  private def buildTmpl(st: State, filtered: Boolean): Tmpl = {
-    val thetaRef = new AtomicReference(new java.util.HashSet[UTF8String])
-    val termsRef = new AtomicReference(new java.util.HashSet[UTF8String])
-    val essRef = new AtomicReference(new java.util.HashSet[UTF8String])
-    val dfRef = new AtomicReference(
-      new java.util.HashMap[UTF8String, java.lang.Long])
-    val keepRef = new AtomicReference(
-      new java.util.HashSet[java.lang.Long])
-    def inSet(ref: AtomicReference[java.util.HashSet[UTF8String]]) =
-      Bridge.column(RefSetContains(Bridge.expression(col("term")), ref))
-    // the filtered shape restricts CANDIDATES to the keep set right on
-    // the scan (doc-granular, stats stay global — exactly
-    // q10Bm25Filtered's left-semi placement); the keep set is a
-    // driver-updated ref like every other template input, so one plan
-    // serves ANY per-query filter with zero Catalyst work
-    def candidates(src: DataFrame,
-                   termRef: AtomicReference[java.util.HashSet[UTF8String]]) = {
-      val scan = src.filter(inSet(termRef))
-      if (filtered)
-        scan.filter(Bridge.column(RefLongSetContains(
-          Bridge.expression(col("doc_id")), keepRef)))
-      else scan
-    }
-    val thetaDf = candidates(st.joined, thetaRef).coalesce(1)
-      .select(sExpr(st, dfRef).as("s"), col("doc_id"))
-      .orderBy(col("s").desc, col("doc_id"))
-      .limit(topK)
-    val scoreDf = candidates(st.joined, termsRef).coalesce(1)
-      .select(col("doc_id"),
-        round(sExpr(st, dfRef) * IrSql.Bm25Scale).cast("long").as("s9"),
-        when(inSet(essRef), 1L).otherwise(0L).as("e"))
-      .groupBy(col("doc_id"))
-      .agg(sum(col("s9")).as("ss"), max(col("e")).as("me"))
-      .filter(col("me") === 1)
-      .select(col("doc_id"),
-        round(col("ss").cast("double") / IrSql.Bm25Scale, 4).as("score"))
-      .orderBy(col("score").desc, col("doc_id"))
-      .limit(topK)
-    // plan + codegen at build, not on the instance's first query
-    thetaDf.queryExecution.executedPlan
-    scoreDf.queryExecution.executedPlan
-    Tmpl(thetaRef, termsRef, essRef, dfRef, keepRef, thetaDf, scoreDf)
   }
 
   /** The batch-retrieval template — [[graft.queries.IrSql
@@ -321,9 +302,7 @@ final class Bm25Server(spark: SparkSession, storeDir: String,
 
   private val snapshot = new Snapshot[State](
     Snapshot.store(spark, storeDir, IrSql.bm25StampDirs(storeDir)),
-    () => new State, _.joined.unpersist(blocking = false))
-
-  snapshot.current().pool.withInstance(false)(_ => ()) // plan+codegen at ctor
+    () => new State, st => PointServer.uncache(st.joined))
 
   /** Drop the snapshot and rebuild from the store NOW — the explicit
     * hammer for layouts where directory listings can lag a mutation
@@ -332,42 +311,18 @@ final class Bm25Server(spark: SparkSession, storeDir: String,
     * already caught per [[search]] by the version stamp. */
   def refresh(): Unit = snapshot.refresh()
 
-  /** Both reused physical plans, exposed so the spec can assert the
-    * exchange-free invariant (an exchange here is the stale-result
-    * trap the [[PointServer]] doc describes). */
-  private[graft] def templatePlans
-      : Seq[org.apache.spark.sql.execution.SparkPlan] = {
-    snapshot.current().pool.withInstance(false)(t => Seq(
-      t.thetaDf.queryExecution.executedPlan,
-      t.scoreDf.queryExecution.executedPlan))
-  }
-
   /** (doc_id, score) rows, score desc then doc_id asc — identical to
     * [[graft.queries.IrSql.q10Bm25Pruned]] on the same store.
     * Unknown terms are ignored; a query with no known term returns
-    * empty without running a job. */
+    * empty. No Spark job. */
   def search(terms: Seq[String]): Seq[(Long, Double)] = {
     val st = snapshot.current()
     val known = terms.distinct.filter(st.stats.contains)
     if (known.isEmpty) return Seq.empty
     val byImpact = known.map(t => t -> st.impact(t))
       .sortBy { case (t, imp) => (-imp, t) }
-    val dfm = new java.util.HashMap[UTF8String, java.lang.Long]
-    known.foreach(t => dfm.put(UTF8String.fromString(t),
-      java.lang.Long.valueOf(st.stats(t)._1)))
-    st.pool.withInstance(false) { t =>
-      t.dfMap.set(dfm)
-      t.thetaTerms.set(PointServer.utf8Set(Seq(byImpact.head._1)))
-      val thetaRows = t.thetaDf.collect()
-      val theta =
-        if (thetaRows.length < topK) Double.NegativeInfinity
-        else thetaRows.last.getDouble(0)
-      val ess = IrSql.maxScoreEssential(byImpact, theta)
-      t.scoreTerms.set(PointServer.utf8Set(known))
-      t.essTerms.set(PointServer.utf8Set(ess))
-      t.scoreDf.collect()
-        .map(r => (r.getLong(0), r.getDouble(1))).toSeq
-    }
+    val ess = IrSql.maxScoreEssential(byImpact, st.theta(byImpact.head._1))
+    st.top(known, ess.toSet, _ => true)
   }
 
   /** WARM BATCH retrieval — the whole (qid, terms) evaluation suite
@@ -417,11 +372,11 @@ final class Bm25Server(spark: SparkSession, storeDir: String,
   /** [[search]] with the CANDIDATES restricted to `keep` — the served
     * twin of [[graft.queries.IrSql.q10Bm25Filtered]] (term statistics
     * stay collection-global; the filter narrows what may be returned,
-    * not what the collection is). One prepared job: every known term
-    * is scored in full over the kept docs (no MaxScore θ pass — the
-    * filtered entry it must equal scores all candidate postings, and
-    * a filtered arity-bounded query has at most two terms to prune).
-    * `keep` is the caller's per-query filter working set — a
+    * not what the collection is). Every known term is scored in full
+    * over the kept docs (no MaxScore θ pass — the filtered entry it
+    * must equal scores all candidate postings, and a filtered
+    * arity-bounded query has at most two terms to prune). No Spark
+    * job. `keep` is the caller's per-query filter working set — a
     * driver-held id set, the selective-filter serving shape; a
     * corpus-dense predicate belongs on the batch path
     * ([[graft.ops.Similarity.hybridRrfFiltered]]). */
@@ -430,18 +385,20 @@ final class Bm25Server(spark: SparkSession, storeDir: String,
       : Seq[(Long, Double)] = {
     val st = snapshot.current()
     val known = terms.distinct.filter(st.stats.contains)
-    if (known.isEmpty) return Seq.empty
-    val dfm = new java.util.HashMap[UTF8String, java.lang.Long]
-    known.foreach(t => dfm.put(UTF8String.fromString(t),
-      java.lang.Long.valueOf(st.stats(t)._1)))
-    val set = PointServer.utf8Set(known)
-    st.pool.withInstance(true) { t =>
-      t.dfMap.set(dfm)
-      t.keep.set(keep)
-      t.scoreTerms.set(set)
-      t.essTerms.set(set) // all essential: full scoring, no pruning
-      t.scoreDf.collect()
-        .map(r => (r.getLong(0), r.getDouble(1))).toSeq
-    }
+    st.top(known, known.toSet, d => keep.contains(d))
   }
+}
+
+private object Bm25Server {
+
+  /** One term's live postings, column-wise. */
+  final class Postings(val doc: Array[Long], val tf: Array[Long],
+                       val dl: Array[Long])
+
+  val NoPostings = new Postings(Array.empty, Array.empty, Array.empty)
+
+  /** Spark's `round` on a double (HALF_UP over the decimal form). */
+  def round(x: Double, scale: Int): Double =
+    java.math.BigDecimal.valueOf(x)
+      .setScale(scale, java.math.RoundingMode.HALF_UP).doubleValue
 }

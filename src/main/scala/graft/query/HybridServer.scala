@@ -6,11 +6,12 @@ import org.apache.spark.sql.SparkSession
   * deployment serves most often (lexical + vector with reciprocal-
   * rank fusion), fused from the two prepared servers that already
   * exist: [[Bm25Server.search]] (MaxScore-pruned exact BM25 ranking,
-  * two exchange-free template jobs) and [[IvfServer.probeTemplate]]
-  * (cell-routed exact-cosine top-k, one exchange-free template job).
-  * The fusion itself is DRIVER arithmetic over the two k-bounded
-  * lists — three prepared jobs total per query, no new Spark job and
-  * no per-query Catalyst work anywhere.
+  * scored on the driver with no Spark job) and
+  * [[IvfServer.probeTemplate]] (cell-routed exact-cosine top-k, one
+  * exchange-free template job). The fusion itself is DRIVER
+  * arithmetic over the two k-bounded lists — the vector arm's
+  * prepared job is the only Spark work per query, with no per-query
+  * Catalyst work anywhere.
   *
   * RRF arithmetic mirrors the batch entry
   * ([[graft.ops.Similarity.hybridRrf]], q37_hybrid_rrf) operation for
@@ -81,7 +82,8 @@ final class HybridServer(val lexical: Bm25Server, val vector: IvfServer,
     * global), the semantic arm [[IvfServer.probeFilteredAutoTemplate]]
     * (the adaptive filtered ladder through prepared plans), fused by
     * the same RRF arithmetic as [[search]]. `keep` is the per-query
-    * filter working set as a driver-held id set (both arms read it
+    * filter working set as a driver-held id set (the lexical arm
+    * tests it per posting on the driver, the semantic arm reads it
     * through template refs — zero per-query Catalyst work); a filter
     * too dense to hold driver-side belongs on the batch path. */
   def searchFiltered(terms: Seq[String], qv: Seq[Float],

@@ -184,8 +184,8 @@ object PhraseServer {
         Snapshot.store(spark, dir, PositionalIndex.store.stampDirs(dir)),
         () => {
           val pix = PositionalIndex.load(spark, dir)
-          PointServer.cache(pix.postings, pix.docMap)
-          pix
+          val Seq(postings, docMap) = PointServer.cache(pix.postings, pix.docMap)
+          pix.copy(postings = postings, docMap = docMap)
         },
         pix => PointServer.uncache(pix.postings, pix.docMap)),
       topK, maxTemplateDocs)

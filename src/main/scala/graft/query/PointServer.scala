@@ -194,15 +194,33 @@ object PointServer {
       Snapshot.store(spark, dir, InvertedIndex.store.stampDirs(dir)),
       () => {
         val ix = InvertedIndex.load(spark, dir)
-        cache(ix.postings, ix.docMap)
-        ix
+        val Seq(postings, docMap) = cache(ix.postings, ix.docMap)
+        ix.copy(postings = postings, docMap = docMap)
       },
       ix => uncache(ix.postings, ix.docMap))
 
-  private[query] def cache(dfs: DataFrame*): Unit = {
-    dfs.foreach(_.persist(
-      org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-    dfs.foreach(_.count())
+  private val cacheTags = new java.util.concurrent.atomic.AtomicLong
+
+  /** Persist one snapshot's frames and materialize them now; returns
+    * the persisted frames, which the snapshot serves from and
+    * [[uncache]]s when replaced. Each frame is cached under a plan of
+    * its own — a `tag = tag` filter, always true and folded away
+    * before execution. Spark's cache manager matches entries by plan
+    * equality, and a file scan equals every other scan of the same
+    * root path, whatever files it holds now: untagged, a snapshot
+    * rebuilt after a mutation that renames its files in (a staged
+    * tombstone or append, which refreshes no cache entry) would reuse
+    * the replaced snapshot's entry and its old rows, and releasing
+    * the replaced snapshot would then drop the entry the new one
+    * reads. */
+  private[query] def cache(dfs: DataFrame*): Seq[DataFrame] = {
+    val own = dfs.map { df =>
+      val tag = lit(cacheTags.incrementAndGet())
+      df.filter(tag === tag)
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    }
+    own.foreach(_.count())
+    own
   }
 
   private[query] def uncache(dfs: DataFrame*): Unit =

@@ -26,7 +26,8 @@ import org.apache.spark.sql.SparkSession
   *    listings can lag a mutation (eventually consistent object
   *    stores).
   *  - `retire` runs exactly once per replaced snapshot (the cached
-  *    servers unpersist their frames; the loaded ones hold nothing to
+  *    servers unpersist their frames, each build's own cache entries
+  *    ([[PointServer.cache]]); the loaded ones hold nothing to
   *    release). A query that read the old snapshot just before the
   *    swap may still be running on it — run mutations behind the
   *    serving quiesce, as everywhere in the serving layer.

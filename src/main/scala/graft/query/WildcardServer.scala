@@ -52,10 +52,8 @@ final class WildcardServer(spark: SparkSession, cgDir: String,
   import WildcardServer.Tmpl
 
   private final class State {
-    val pairs = CharKGramIndex.load(spark, cgDir)
-      .select(col("gram"), explode(col("terms")).as("term"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    pairs.count() // materialize at (re)build, not first query
+    val pairs = PointServer.cache(CharKGramIndex.load(spark, cgDir)
+      .select(col("gram"), explode(col("terms")).as("term"))).head
 
     /** The store's gram length, from the data (empty store → the
       * default; every lookup is then empty anyway). */
@@ -74,7 +72,7 @@ final class WildcardServer(spark: SparkSession, cgDir: String,
 
   private val snapshot = new Snapshot[State](
     Snapshot.store(spark, cgDir, CharKGramIndex.stampDirs(cgDir)),
-    () => new State, _.pairs.unpersist(blocking = false))
+    () => new State, st => PointServer.uncache(st.pairs))
 
   snapshot.current().pool.withInstance(())(_ => ()) // plan+codegen at ctor
 

@@ -5,10 +5,10 @@ import graft.SparkSpec
 import graft.queries.IrSql
 
 /** Pins [[Bm25Server]] to the fresh pruned plan and the full
-  * multi-term scorer: served == fresh == multi for every query in a
-  * sequence (the exchange-free reuse trap would surface as query 2+
-  * returning query 1's ranking), plus the exchange-free invariant
-  * itself and pooled-template concurrency. */
+  * multi-term scorer: served == fresh == multi, bit for bit, for a
+  * seeded query set; job-free warm search; the batch template's
+  * exchange-free invariant; concurrency; and rebuilds that read the
+  * mutated store under a live server. */
 class Bm25ServerSpec extends SparkSpec {
 
   private val dir = "/root/testdata/sf0.001"
@@ -29,6 +29,58 @@ class Bm25ServerSpec extends SparkSpec {
     IrSql.ExpandedQueryTerms, // repeat: reused template, same answer
     Seq("spark", "query", "group", "column"))
 
+  private def rows(df: org.apache.spark.sql.DataFrame): Seq[(Long, Double)] =
+    df.collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
+
+  private def bits(rs: Seq[(Long, Double)]): Seq[(Long, Long)] =
+    rs.map { case (d, s) => (d, java.lang.Double.doubleToRawLongBits(s)) }
+
+  private def keepSet(ids: Iterable[Long]) = {
+    val s = new java.util.HashSet[java.lang.Long]()
+    ids.foreach(i => s.add(i))
+    s
+  }
+
+  private def keepFrame(ids: Seq[Long]) = {
+    import spark.implicits._
+    ids.toDF("doc_id")
+  }
+
+  /** 44 seeded queries over the store's vocabulary: head terms,
+    * 1-term queries, 2-term queries, long queries, repeated terms,
+    * unknown terms, and 1-term queries whose 10th and 11th hits hold
+    * the same (tf, dl) — a score tie at the top-k cut. */
+  private lazy val seededSet: Seq[Seq[String]] = {
+    val rng = new scala.util.Random(808)
+    val vocab = spark.read.parquet(s"$store/stats").collect()
+      .map(r => (r.getString(0), r.getLong(1)))
+      .sortBy { case (t, df) => (-df, t) }.map(_._1)
+    val head = vocab.take(20)
+    def any() = vocab(rng.nextInt(vocab.length))
+    def hd() = head(rng.nextInt(head.length))
+    val (tt, nd) = IrSql.readCorpusStats(spark, store)
+    val ties = IrSql.livePostings(spark, store)
+      .join(IrSql.liveDoclen(spark, store), "doc_id")
+      .select("term", "tf", "dl").collect()
+      .groupBy(_.getString(0)).toSeq.sortBy(_._1).flatMap { case (t, ps) =>
+        val df = ps.length.toLong
+        val ranked = ps.map(r => (r.getLong(1), r.getLong(2)))
+          .sortBy { case (tf, dl) => -IrSql.bm25Score(tf, dl, df, tt, nd) }
+        if (ranked.length > 10 && ranked(9) == ranked(10)) Some(t) else None
+      }
+    assert(ties.size >= 4, s"only ${ties.size} top-k tie terms")
+    head.take(4).map(Seq(_)) ++
+      Seq.fill(4)(Seq(any())) ++
+      Seq.fill(8)(Seq(hd(), any())) ++
+      Seq.fill(8)(Seq.fill(3 + rng.nextInt(6))(
+        if (rng.nextBoolean()) hd() else any())) ++
+      Seq.fill(4) { val t = any(); Seq(t, hd(), t) } ++
+      Seq.fill(4)(Seq(any(), s"zzq${rng.nextInt(1000)}x", hd())) ++
+      Seq.fill(4)(Seq(hd(), s"zzq${rng.nextInt(1000)}x")) ++
+      rng.shuffle(ties).take(4).map(Seq(_)) ++
+      Seq.fill(4)(Seq(ties(rng.nextInt(ties.size)), hd()))
+  }
+
   test("served == fresh pruned == full multi across a query sequence") {
     querySet.foreach { terms =>
       val multi = IrSql.q10Bm25Multi(spark, dir, terms).collect()
@@ -45,22 +97,11 @@ class Bm25ServerSpec extends SparkSpec {
     "restricted, statistics global), across keep sets") {
     val keepAll = graft.ops.Similarity.filterIds(spark, dir)
       .select(col("vec_id").as("doc_id"))
-    def keepSet(ids: Seq[Long]) = {
-      val s = new java.util.HashSet[java.lang.Long]()
-      ids.foreach(i => s.add(i))
-      s
-    }
     val filterDocs = keepAll.collect().map(_.getLong(0)).toSeq
     // the metadata filter, and a narrow hand-picked set (forces the
     // keep predicate to actually bite on the top of the ranking)
     Seq(filterDocs, filterDocs.sorted.take(40)).foreach { ids =>
-      val keepDf = spark.createDataFrame(
-        java.util.Arrays.asList(ids.map(org.apache.spark.sql.Row(_)): _*),
-        org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("doc_id",
-            org.apache.spark.sql.types.LongType))))
-      val want = IrSql.q10Bm25Filtered(spark, dir, keepDf).collect()
-        .map(r => (r.getLong(0), r.getDouble(1))).toSeq
+      val want = rows(IrSql.q10Bm25Filtered(spark, dir, keepFrame(ids)))
       val got = srv.searchFiltered(IrSql.DefaultQueryTerms, keepSet(ids))
       assert(got == want, s"filtered served=$got fresh=$want")
     }
@@ -101,21 +142,101 @@ class Bm25ServerSpec extends SparkSpec {
   }
 
   test("both templates are exchange-free under the session conf") {
-    // the cached postings⨝doclen relation legitimately holds its
-    // ONE-TIME construction join (with its broadcast exchange) inside
-    // the InMemoryRelation leaf — what must stay exchange-free is the
-    // re-executed template ABOVE the cache, i.e. every plan line
-    // before the first InMemoryRelation in the rendered tree (a bare
-    // tree-collect would not descend through the AQE root)
-    srv.templatePlans.foreach { p =>
-      val s = p.toString
-      val above = s.linesIterator
-        .takeWhile(!_.contains("InMemoryRelation")).mkString("\n")
-      assert(above.contains("InMemoryTableScan"),
-        s"template does not read the cached relation:\n$s")
-      assert(!above.contains("Exchange"),
-        s"exchange leaked into a reused template:\n$above")
+    // the templates this name pinned are gone: warm search and
+    // searchFiltered score on the driver and submit no Spark job,
+    // whatever the query (known, unknown-only, empty)
+    val keep = keepSet(0L until 500L)
+    srv.search(IrSql.ExpandedQueryTerms) // snapshot built
+    val jobs = jobsDuring {
+      querySet.foreach { t => srv.search(t); srv.searchFiltered(t, keep) }
+      Seq(Seq("zzzqqqxx"), Nil).foreach { t =>
+        assert(srv.search(t).isEmpty)
+        assert(srv.searchFiltered(t, keep).isEmpty)
+      }
     }
+    assert(jobs == 0, s"warm search/searchFiltered submitted $jobs jobs")
+  }
+
+  test("seeded query set: search == fresh pruned == full multi and " +
+    "searchFiltered == q10Bm25Filtered, scores compared as IEEE bits") {
+    assert(seededSet.size >= 40)
+    val all = keepSet(0L until 500L)
+    val narrowIds = (0L until 500L).filter(_ % 3 == 0)
+    val narrowDf = keepFrame(narrowIds)
+    val narrow = keepSet(narrowIds)
+    seededSet.foreach { terms =>
+      val multi = bits(rows(IrSql.q10Bm25Multi(spark, dir, terms)))
+      val fresh = bits(rows(IrSql.q10Bm25PrunedAt(spark, store, terms, 10)))
+      assert(fresh == multi, s"$terms: fresh pruned diverged from multi")
+      assert(bits(srv.search(terms)) == multi, s"$terms: search")
+      // every doc kept: the filtered scorer is the unpruned one
+      assert(bits(srv.searchFiltered(terms, all)) == multi,
+        s"$terms: searchFiltered over every doc")
+      if (terms.size <= 2) {
+        val want = bits(rows(
+          IrSql.q10Bm25Filtered(spark, dir, narrowDf, terms)))
+        assert(bits(srv.searchFiltered(terms, narrow)) == want,
+          s"$terms: searchFiltered over every third doc")
+      }
+    }
+  }
+
+  test("a live server reads the store's files at every rebuild: two " +
+    "lazy deletes, an exact delete and a merge each serve like the " +
+    "fresh paths, from one persisted relation") {
+    val root = java.nio.file.Files
+      .createTempDirectory("graft_bm25_srv_live").toString
+    val full = spark.read.parquet(s"$dir/documents.parquet")
+      .select("doc_id", "text")
+    val cut = full.count() * 3 / 4
+    full.filter(col("doc_id") < cut)
+      .write.parquet(s"$root/base/documents.parquet")
+    val st = s"$root/store"
+    IrSql.writeBm25Stats(spark, s"$root/base", st)
+    def held() = spark.sparkContext.getPersistentRDDs.keySet.toSet
+    val before = held()
+    val live = new Bm25Server(spark, st)
+    var mine = held() -- before
+    var corpus = full.filter(col("doc_id") < cut)
+    val keepIds = (0L until 500L).filter(_ % 3 == 0)
+    def check(step: String): Unit = {
+      val pre = held()
+      val served = querySet.map(live.search)
+      val filtered = live.searchFiltered(IrSql.DefaultQueryTerms,
+        keepSet(keepIds))
+      val batch = live.searchBatch(IrSql.BatchQueries)
+      // the rebuilt snapshot's relation; the replaced one released
+      val ours = (held() -- pre) ++ (mine intersect held())
+      assert(ours.size == 1, s"$step: ${ours.size} relations held")
+      mine = ours
+      querySet.zip(served).foreach { case (terms, got) =>
+        assert(got == rows(IrSql.q10Bm25PrunedAt(spark, st, terms, 10)),
+          s"$step $terms: search")
+      }
+      val cdir = s"$root/$step"
+      corpus.write.parquet(s"$cdir/documents.parquet")
+      assert(filtered == rows(IrSql.q10Bm25Filtered(spark, cdir,
+        keepFrame(keepIds))), s"$step: searchFiltered")
+      assert(batch == IrSql.q10Bm25BatchAt(spark, st, IrSql.BatchQueries, 10)
+        .collect().map(r =>
+          (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3))).toSeq,
+        s"$step: searchBatch")
+    }
+    def dropped(rem: Int) =
+      full.filter(col("doc_id") < cut && col("doc_id") % 13 === rem)
+        .select("doc_id")
+    check("open")
+    Seq(5, 6).foreach { rem =>
+      IrSql.deleteBm25DocsLazy(spark, st, dropped(rem))
+      corpus = corpus.filter(col("doc_id") % 13 =!= rem)
+      check(s"lazy$rem")
+    }
+    IrSql.deleteBm25Docs(spark, st, dropped(7))
+    corpus = corpus.filter(col("doc_id") % 13 =!= 7)
+    check("exact")
+    IrSql.mergeBm25Stats(spark, st, full.filter(col("doc_id") >= cut))
+    corpus = corpus.union(full.filter(col("doc_id") >= cut))
+    check("merged")
   }
 
   test("8 concurrent searches each return their own correct ranking " +

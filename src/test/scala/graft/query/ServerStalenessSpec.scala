@@ -162,4 +162,35 @@ class ServerStalenessSpec extends SparkSpec {
       assert(ab == abWant && ab.map(_._1).contains("D"))
     }
   }
+
+  test("PointServer.overStore serves two appends under a live server " +
+    "from the appended files, holding one snapshot's cached frames") {
+    withDir("graft_stale_ps_app") { dir =>
+      InvertedIndex.write(InvertedIndex.build(spark, base, k = 1), dir)
+      val sc = spark.sparkContext
+      def held() = sc.getPersistentRDDs.keySet.toSet
+      val before = held()
+      val ps = PointServer.overStore(spark, dir)
+      var mine = held() -- before // postings + doc_map
+      assert(mine.size == 2)
+      assert(ps.search("zebra").isEmpty)
+      val second = spark.createDataFrame(Seq(
+        ("F", "yak zebra merge"), ("G", "yak alpha"))).toDF("docid", "content")
+      Seq(delta, second).zipWithIndex.foreach { case (d, i) =>
+        InvertedIndex.appendToStore(spark, dir, d, k = 1)
+        val pre = held()
+        val got = Seq("zebra", "yak", "merge alpha").map(ps.search)
+        val post = held()
+        // the rebuilt snapshot's two frames, the replaced ones released
+        val ours = (post -- pre) ++ (mine intersect post)
+        assert(ours.size == 2, s"append ${i + 1}: ${ours.size} frames held")
+        mine = ours
+        // the loaded server reads the store on the driver, no cache
+        val fresh = new LoadedPointServer(spark, dir)
+        assert(got == Seq("zebra", "yak", "merge alpha").map(fresh.search),
+          s"append ${i + 1}")
+        assert(got.head.nonEmpty)
+      }
+    }
+  }
 }
