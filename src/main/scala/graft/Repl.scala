@@ -145,9 +145,9 @@ object Repl {
     * With `usePointServer` (the default — both built and
     * loaded-then-cached indexes, see [[open]]), ranked queries go
     * through a [[graft.query.PointServer]]: a standing REPL is exactly
-    * the prepared-template case — plan + codegen built once at loop
-    * start, every later query is two small jobs (identical output to
-    * serveSearch, spec-pinned). Pass `usePointServer = false` to serve
+    * the standing-server case — the index is collected once at loop
+    * start into a driver dictionary, and every later query runs no
+    * Spark job (identical output to serveSearch, spec-pinned). Pass `usePointServer = false` to serve
     * an UNcached parquet-backed index with literal, pushdown-able term
     * predicates (file/row-group pruning) instead. */
   def loop(ix: InvertedIndex.Index, chargrams: Option[DataFrame],
@@ -161,8 +161,8 @@ object Repl {
            cgDir: Option[String] = None): Unit = {
     val server =
       if (usePointServer) Some(new graft.query.PointServer(ix)) else None
-    // store-backed chargram dir → prepared wildcard serving (lookup
-    // template + the PointServer scoring tail); in-session chargram
+    // store-backed chargram dir → job-free wildcard serving (packed
+    // gram dictionary + the PointServer scoring tail); in-session chargram
     // frames keep the fresh-planned path
     val wcServer = (cgDir, server) match {
       case (Some(d), Some(ps)) =>
@@ -204,9 +204,9 @@ object Repl {
     // per-corpus filter keep set for `hybridf`, collected on first use
     val hybridKeep = scala.collection.mutable.Map
       .empty[String, java.util.HashSet[java.lang.Long]]
-    // quoted phrases (any length up to PhraseServer.MaxSlots) get the
-    // prepared per-length template on cached indexes; the fresh-plan
-    // path stays for loaded/pushdown serving
+    // quoted phrases (any length) answer from PhraseServer's packed
+    // driver dictionary on cached indexes; the fresh-plan path stays
+    // for loaded/pushdown serving
     val phraseServer =
       if (usePointServer)
         positional.map(p => new graft.query.PhraseServer(p))

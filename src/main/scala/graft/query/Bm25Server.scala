@@ -85,13 +85,13 @@ private[query] case class RefMapQidsLookup(
   *  - the store's live postings ⨝ doclen, joined ONCE and cached —
   *    the input of the one prepared plan left, [[searchBatch]]'s
   *    exchange-free batch template;
-  *  - the same relation collected ONCE to a per-term driver
-  *    dictionary of primitive arrays, term → (doc_id[], tf[], dl[]):
-  *    24 bytes per live posting plus ~170 per term (SizeEstimator:
-  *    0.29 MB for the 500-doc sf0.001/sf0.01 corpora, 11.7k postings
-  *    over 31 terms; 2.99 MB for perfbench `churn`'s 300 docs, 39.5k
-  *    postings over 13.5k terms) — the postings a serving node's
-  *    working set holds anyway;
+  *  - the same relation collected ONCE to a packed driver dictionary
+  *    ([[Packed]]): the terms in one byte array, each owning a slice
+  *    of the doc_id[], tf[] and dl[] columns — 16 bytes per live
+  *    posting plus each term's bytes and 8 (SizeEstimator: 0.83 MB
+  *    for perfbench `churn`'s 300 docs, 39.5k postings over 13.5k
+  *    terms, where a term → arrays map held 2.99 MB) — the postings a
+  *    serving node's working set holds anyway;
   *  - the FULL stats dictionary (term → (df, frontier pairs)) —
   *    vocab-bounded, the term dictionary every real serving node
   *    holds in RAM; impact bounds are priced from the frontier pairs
@@ -161,12 +161,15 @@ final class Bm25Server(spark: SparkSession, storeDir: String,
 
     val (tt, nd) = IrSql.liveCorpusStats(spark, storeDir)
 
-    /** term → its live postings, one primitive array per column. */
-    val postings: Map[String, Bm25Server.Postings] =
-      joined.collect().groupBy(_.getString(0)).map { case (t, rs) =>
-        t -> new Bm25Server.Postings(rs.map(_.getLong(1)),
-          rs.map(_.getLong(2)), rs.map(_.getLong(3)))
-      }
+    /** The live postings, packed ([[Packed]]): term → its rows of the
+      * doc_id[], tf[] and dl[] columns. */
+    private val (terms, doc, tf, dl) = {
+      val (keys, rows) = Packed.collect(joined, "doc_id")
+      (keys, rows.map(_.getLong(1)), rows.map(_.getLong(2).toInt),
+        rows.map(_.getLong(3).toInt))
+    }
+
+    private def rowsOf(term: String): Range = terms.rows(UTF8String.fromString(term))
 
     /** term → (df, frontier pairs) — the in-RAM dictionary. On a
       * deferred-state store (lazy deletes / pending updates), df is
@@ -189,7 +192,7 @@ final class Bm25Server(spark: SparkSession, storeDir: String,
       }.toMap
       if (!pending) base
       else base.flatMap { case (t, (_, pairs)) =>
-        postings.get(t).map(p => t -> (p.doc.length.toLong, pairs))
+        Some(rowsOf(t)).filter(_.nonEmpty).map(r => t -> (r.size.toLong, pairs))
       }
     }
 
@@ -198,11 +201,10 @@ final class Bm25Server(spark: SparkSession, storeDir: String,
       pairs.map(p => IrSql.bm25Score(p._1, p._2, df, tt, nd)).max
     }
 
-    private def scores(term: String): (Bm25Server.Postings, Array[Double]) = {
-      val p = postings.getOrElse(term, Bm25Server.NoPostings)
+    private def scores(term: String): (Range, Array[Double]) = {
+      val r = rowsOf(term)
       val df = stats(term)._1
-      (p, Array.tabulate(p.doc.length)(i =>
-        IrSql.bm25Score(p.tf(i), p.dl(i), df, tt, nd)))
+      (r, r.map(i => IrSql.bm25Score(tf(i), dl(i), df, tt, nd)).toArray)
     }
 
     /** θ: the k-th best exact score of `term`'s postings, -∞ when it
@@ -220,11 +222,11 @@ final class Bm25Server(spark: SparkSession, storeDir: String,
       val sums = new scala.collection.mutable.LongMap[Long]
       val hits = new scala.collection.mutable.LongMap[Unit]
       terms.foreach { t =>
-        val (p, s) = scores(t)
+        val (r, s) = scores(t)
         val ess = essential(t)
         var i = 0
         while (i < s.length) {
-          val d = p.doc(i)
+          val d = doc(r.start + i)
           if (keep(d)) {
             sums(d) = sums.getOrElse(d, 0L) +
               Bm25Server.round(s(i) * IrSql.Bm25Scale, 0).toLong
@@ -390,12 +392,6 @@ final class Bm25Server(spark: SparkSession, storeDir: String,
 }
 
 private object Bm25Server {
-
-  /** One term's live postings, column-wise. */
-  final class Postings(val doc: Array[Long], val tf: Array[Long],
-                       val dl: Array[Long])
-
-  val NoPostings = new Postings(Array.empty, Array.empty, Array.empty)
 
   /** Spark's `round` on a double (HALF_UP over the decimal form). */
   def round(x: Double, scale: Int): Double =

@@ -1,7 +1,6 @@
 package graft.query
 
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.unsafe.types.UTF8String
 import graft.index.PositionalIndex
 import graft.text.TextPipeline
 
@@ -16,15 +15,11 @@ import graft.text.TextPipeline
   *    footer min/max picks the row groups that can hold them, and
   *    Spark's own parquet reader decodes those on the driver
   *    ([[Routing.Table]]). Tombstoned docnos drop on the driver set.
-  *  - A phrase counts, per doc holding every term, the left-fold
-  *    shifted intersection of its position lists
-  *    ([[PositionalIndex.phraseRuns]], [[PositionalIndex.phrase]]'s
-  *    formulation: slot i shifted by −i; a single term degenerates to
-  *    its tf; a repeated term counts its self-adjacencies). A near
-  *    query counts qualifying position pairs
-  *    ([[PositionalIndex.nearPairs]], [[PositionalIndex.nearTopK]]'s
-  *    ranked contract). Both keep the top-k by count desc then docno
-  *    asc, and any phrase length serves this way.
+  *  - Phrase and near counts are [[PhraseServer.Scorer]], the driver
+  *    scorer the cached [[PhraseServer]] runs over its packed
+  *    dictionary ([[PositionalIndex.phraseRuns]] /
+  *    [[PositionalIndex.nearPairs]], top-k by count desc then docno
+  *    asc); any phrase length serves this way.
   *  - The ≤ topK docnos resolve through the `doc_map_ranges` manifest
   *    the same way; unresolved docnos drop (inner-join semantics).
   *
@@ -46,26 +41,14 @@ final class LoadedPhraseServer(spark: SparkSession, dir: String,
                                topK: Int = 10) {
 
   /** One immutable snapshot of the on-disk index: loaded frames and
-    * the driver-read routing state. */
+    * the driver-read routing state, scored by the shared
+    * [[PhraseServer.Scorer]]. */
   private final class State {
     val pix: PositionalIndex.PIndex = PositionalIndex.load(spark, dir)
-    val routed = new Routing.Routed(spark, dir, PositionalIndex.store,
+    private val routed = new Routing.Routed(spark, dir, PositionalIndex.store,
       "positions", pix.postings.schema, pix.docMap.schema)
-
-    /** Per term of `terms`, its live docno → positions. */
-    def positions(terms: Seq[String]): Seq[Map[Long, Array[Int]]] = {
-      val utf8 = terms.map(UTF8String.fromString)
-      val lists = routed.lists(utf8.distinct)(_.getArray(2).toIntArray())
-      utf8.map(t => lists.getOrElse(t, Nil).toMap)
-    }
-
-    /** The top-k (docno, count) hits by count desc, docno asc,
-      * resolved to (docid, count) by count desc, docid asc. */
-    def top(hits: Iterator[(Long, Long)]): Seq[(String, Long)] = {
-      val best = hits.filter(_._2 > 0).toSeq
-        .sortBy { case (d, tf) => (-tf, d) }.take(topK)
-      PhraseServer.byDocid(best, routed.resolve(best.map(_._1)))
-    }
+    val scorer = new PhraseServer.Scorer(topK,
+      ts => routed.lists(ts)(_.getArray(2).toIntArray()), routed.resolve)
   }
 
   private val snapshot = new Snapshot[State](
@@ -90,23 +73,12 @@ final class LoadedPhraseServer(spark: SparkSession, dir: String,
            ordered: Boolean = false): Seq[(String, Long)] = {
     val st = snapshot.current()
     val (a, b) = PhraseServer.nearTerms(termA, termB)
-    val ps = st.positions(Seq(a, b))
-    st.top(ps(0).iterator.collect { case (d, xs) if ps(1).contains(d) =>
-      d -> PositionalIndex.nearPairs(xs, ps(1)(d), window, ordered)
-    })
+    st.scorer.near(a, b, window, ordered)
   }
 
   /** Top-k (docid, phrase_tf), tf desc then docid asc — the
     * [[PhraseServer.phrase]] output contract, served from pure parquet
     * artifacts. */
-  def phrase(phraseText: String): Seq[(String, Long)] = {
-    val st = snapshot.current()
-    val slots = st.positions(TextPipeline.processContent(phraseText))
-    if (slots.isEmpty) return Seq.empty
-    st.top(slots.head.iterator.flatMap { case (d, p0) =>
-      val rest = slots.tail.flatMap(_.get(d))
-      if (rest.size < slots.size - 1) None
-      else Some(d -> PositionalIndex.phraseRuns(p0 +: rest))
-    })
-  }
+  def phrase(phraseText: String): Seq[(String, Long)] =
+    snapshot.current().scorer.phrase(TextPipeline.processContent(phraseText))
 }

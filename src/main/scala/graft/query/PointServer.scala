@@ -58,136 +58,84 @@ private[query] case class RefLongSetContains(
     copy(child = c)
 }
 
-/** Reusable point-query serving template — the "prepared statement"
-  * form of [[QueryEngine.serveSearch]] for a standing serving node.
+/** Point-query serving with NO Spark job per query — the paper
+  * client's in-memory dictionary probe and score (SURVEY R5) for a
+  * standing serving node, the form the REPL serves.
   *
-  * [[QueryEngine.serveSearch]] builds a fresh DataFrame per query, so
-  * every lookup pays Catalyst end-to-end (parse/analyze/optimize/
-  * physical planning + codegen lookup — measured ≈40% of warm point
-  * latency) plus a broadcast round-trip for docid resolution. This
-  * class builds TWO plans once and re-executes them for every query,
-  * swapping only driver-side state:
+  * Each snapshot collects its live index ONCE into a packed driver
+  * dictionary ([[Packed]]): the terms in UTF-8 order in one byte
+  * array, each owning a slice of a `docno[]` and a `tf[]` column, and
+  * docno → docid as a sorted `long[]` beside the packed docids. A
+  * query is then [[PointServer.Scorer]]'s driver arithmetic — the
+  * scorer [[LoadedPointServer]] runs over its routed parquet reads —
+  * bit-identical to [[QueryEngine.serveSearch]] (spec-pinned, scores
+  * as IEEE bits, the stopword-only → empty case included).
+  * `bugCompat` scoring stays on serveSearch: a standing serving
+  * endpoint wants the intended semantics.
   *
-  *  - score template: postings → term-set filter (a predicate reading
-  *    an [[AtomicReference]] at job submit) → coalesce(1) → window df
-  *    → per-doc score aggregate → top-k.
-  *
-  * Re-executing a cached physical plan is only safe because the
-  * template is EXCHANGE-FREE: broadcast/shuffle exchange nodes cache
-  * their first result and would serve the first query's data to every
-  * later query. The single-partition scoring plan satisfies all
-  * distribution requirements without an exchange (the same trade
-  * serveSearch documents: a serving node funnels one query's postings
-  * through one task).
-  *
-  * Docid RESOLUTION is NOT a template: it builds a fresh tiny
-  * `isin(literal docnos)` plan per query. Only the score side needs
-  * the zero-Catalyst trick (it scans postings); resolve touches ≤ topK
-  * rows, so fresh planning costs microseconds and the LITERAL
-  * predicate keeps what an opaque reference-reading one forfeits —
-  * cached-batch min/max stat pruning (and parquet row-group pruning on
-  * a loaded index). A templated UDF filter here was O(corpus) per
-  * query: free at 50k docs, the serving path's linear term at 10⁹.
-  * Unresolvable docnos are DROPPED, matching serveSearch's inner-join
-  * semantics (unreachable with a well-formed index). The tiny (≤ topK)
-  * join of the two runs on the driver.
-  *
-  * Each query's term/docno set is captured when its job is submitted
-  * (task closures are serialized per job), so the pattern holds on a
-  * real cluster, not just local mode. Results are identical to
-  * serveSearch (spec-pinned, including the stopword-only → empty
-  * case). `bugCompat` scoring stays on serveSearch — a standing
-  * serving endpoint wants the intended semantics.
-  *
-  * Intended for a CACHED (in-memory) index: the reference-reading
-  * predicates are opaque to parquet pushdown and cached-batch stats,
-  * so over a parquet-backed loaded index this template would scan the
-  * full postings per query — there, [[QueryEngine.serveSearch]]'s
-  * literal filters keep file/row-group pruning (Repl selects
-  * accordingly).
+  * DRIVER MEMORY: the dictionary costs ~12 bytes per live posting plus
+  * each term's bytes and 8, and ~12 bytes plus the docid per doc
+  * (SizeEstimator: 0.88 MB for perfbench `serve`'s 400 docs, 53k
+  * postings over 16.6k terms). The snapshot holds no Spark-cached
+  * frame, so a cluster driver must be sized for the store's postings,
+  * as for [[Bm25Server]]; an index past driver RAM serves through
+  * [[LoadedPointServer]]'s routed reads instead.
   *
   * STALENESS: a server handed an in-memory [[Index]] serves that
   * SNAPSHOT — the struct is immutable, there is no shared store to go
   * stale against (a caller that merges builds a new Index and a new
   * server). The store-backed form ([[PointServer.overStore]]) is
-  * where mutation is real: it loads + caches the written artifacts
-  * and revalidates a [[DirVersion]] stamp per [[search]], rebuilding
-  * the snapshot (and its templates) when the directory moved — so an
-  * [[InvertedIndex.merge]]-then-write under a live server is
+  * where mutation is real: it revalidates a [[DirVersion]] stamp per
+  * [[search]] and re-collects the dictionary when the directory moved
+  * — so an [[InvertedIndex.merge]]-then-write under a live server is
   * detected, never silently served stale (the [[Snapshot]] holder
   * every stamped server shares). [[refresh]] is the explicit hammer
-  * for layouts where listings can lag. */
+  * for layouts where listings can lag.
+  *
+  * Safe for concurrent callers: a snapshot is immutable and each
+  * query allocates its own accumulators. */
 final class PointServer private (
     source: Snapshot.Source[Index], topK: Int) {
 
-  /** Snapshot-serving constructor over a caller-owned (cached) index. */
+  /** Snapshot-serving constructor over a caller-owned index. */
   def this(ix: Index, topK: Int = 10) = this(Snapshot.fixed(ix), topK)
 
-  // CONCURRENCY (round 9): score templates live in a pool — each
-  // search() borrows its own instance for the set-refs-then-collect
-  // window, so concurrent callers can't race on a shared reference
-  // cell (previously a class-wide `synchronized`, one in-flight query
-  // per server). Single shape → single key.
-  private final class State(val ix: Index) {
-    val pool = new TemplatePool[Unit, PointServer.ScoreTmpl](
-      _ => PointServer.scoreTmpl(ix.postings, ix.nDocs, topK),
-      maxKeys = 1)
-  }
+  private val snapshot = new Snapshot[PointServer.Scorer](source.stamp,
+    () => PointServer.packed(source.load()), _ => ())
 
-  private val snapshot = new Snapshot[State](source.stamp,
-    () => new State(source.load()), st => source.release(st.ix))
-
-  snapshot.current().pool.withInstance(())(_ => ()) // plan+codegen at ctor
-
-  /** Drop the snapshot and reload from the store NOW (a rebuild of
-    * the templates only, for the snapshot-serving form). */
+  /** Drop the snapshot and re-collect the dictionary NOW. */
   def refresh(): Unit = snapshot.refresh()
 
-  /** The reused physical plan, exposed so specs can assert the
-    * exchange-free invariant under any session conf (AQE, partition
-    * counts) — an exchange sneaking in here is the stale-result trap
-    * the class doc describes. */
-  private[graft] def templatePlan: org.apache.spark.sql.execution.SparkPlan =
-    snapshot.current().pool.withInstance(())(_.df.queryExecution.executedPlan)
-
   /** (docno, docid, score) rows, score desc then docno asc — the same
-    * output (and arity contract) as [[QueryEngine.serveSearch]].
-    * Safe for concurrent callers: each borrows a pooled template
-    * instance (see [[TemplatePool]]). */
+    * output (and arity contract) as [[QueryEngine.serveSearch]]. */
   def search(query: String): Seq[(Long, String, Double)] =
     searchTerms(QueryEngine.requireArity(query))
 
   /** [[search]] over an already-analyzed term set with NO arity cap —
     * the scoring tail of a WILDCARD expansion
-    * ([[WildcardServer.search]]): the pooled template's ref set takes
-    * any number of terms (the arity rule is the interactive client's
-    * contract, not the plan's). Same output and ordering. */
+    * ([[WildcardServer.search]]; the arity rule is the interactive
+    * client's contract, not the scorer's). Same output and ordering. */
   private[query] def searchTerms(terms: Seq[String])
-      : Seq[(Long, String, Double)] = {
-    val st = snapshot.current()
-    if (terms.isEmpty) return Seq.empty // stopword-only: no job at all
-    val top = st.pool.withInstance(())(_.top(terms))
-    // inner-join semantics: a docno the map cannot resolve is dropped
-    val ids = PointServer.resolveLiteral(st.ix.docMap, top.map(_._1))
-    top.flatMap { case (d, s) => ids.get(d).map(id => (d, id, s)) }
-  }
+      : Seq[(Long, String, Double)] =
+    snapshot.current().searchTerms(terms, topK)
 }
 
 object PointServer {
 
-  /** STORE-BACKED form: load a written [[InvertedIndex.write]] layout,
-    * cache postings + doc_map in memory (the cached-only contract the
-    * class doc requires), and serve with per-search [[DirVersion]]
-    * staleness revalidation — a merge/rewrite of `dir` under the live
-    * server rebuilds the snapshot before the next query runs. */
+  /** STORE-BACKED form over a written [[InvertedIndex.write]] layout,
+    * with per-search [[DirVersion]] staleness revalidation — a
+    * merge/rewrite of `dir` under the live server re-collects the
+    * dictionary before the next query runs. No frame stays cached. */
   def overStore(spark: SparkSession, dir: String,
                 topK: Int = 10): PointServer =
-    new PointServer(cachedStore(spark, dir), topK)
+    new PointServer(new Snapshot.Source[Index](
+      Snapshot.store(spark, dir, InvertedIndex.store.stampDirs(dir)),
+      () => InvertedIndex.load(spark, dir), _ => ()), topK)
 
   /** A written inverted store, loaded and CACHED per stamp (postings
     * and doc_map materialized at (re)build, not on the first query)
     * and released when the snapshot is replaced — the source behind
-    * this server's and [[Rm3Server]]'s store-backed forms. */
+    * [[Rm3Server]]'s store-backed form. */
   private[query] def cachedStore(spark: SparkSession,
                                  dir: String): Snapshot.Source[Index] =
     new Snapshot.Source(
@@ -241,9 +189,9 @@ object PointServer {
   /** The exchange-free tf-idf score skeleton over `postings`: term-set
     * filter (`terms`) → single task → window df → per-doc
     * Σ weight·(1+ln tf)·log10(N/df) → top-`limitN`. `weight` (absent:
-    * 1) is RM3's per-term blend; shared by the cached point template
-    * and all of [[Rm3Server]]'s score passes ([[LoadedPointServer]]
-    * computes the same arithmetic on the driver). */
+    * 1) is RM3's per-term blend; shared by all of [[Rm3Server]]'s
+    * score passes ([[PointServer.Scorer]] computes the same arithmetic
+    * on the driver). */
   private[query] def scorePlan(postings: DataFrame, nDocs: Long,
       terms: AtomicReference[java.util.HashSet[UTF8String]],
       limitN: Int, weight: Option[Column] = None): DataFrame = {
@@ -262,28 +210,54 @@ object PointServer {
       .limit(limitN)
   }
 
-  /** A prepared point score plan and the term cell it reads. */
-  private[query] final case class ScoreTmpl(
-      ref: AtomicReference[java.util.HashSet[UTF8String]], df: DataFrame) {
-    /** (docno, score) top rows for `terms`. */
-    def top(terms: Seq[String]): Seq[(Long, Double)] = {
-      ref.set(utf8Set(terms))
-      df.collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
+  /** The driver tf-idf scorer of both point servers — [[scorePlan]]'s
+    * arithmetic in plain Scala over a postings source: `lists` gives
+    * the query terms' live (docno, tf) rows ([[Packed.Postings]] for
+    * [[PointServer]], [[Routing.Routed]] for [[LoadedPointServer]]),
+    * `resolve` docnos → docids. df = a term's live rows; Σ (1 + ln
+    * tf)·log10(N/df) per doc, added in UTF-8 term order (the plan's
+    * kgram window fed each doc's sum in that order, and double
+    * addition is order-sensitive); rounded to 4 places HALF_UP; top-k
+    * by score desc then docno asc. Spark's `Log`/`Log10` call
+    * `StrictMath`, so the scores are bit-identical. */
+  private[query] final class Scorer(nDocs: Long,
+      lists: Seq[UTF8String] => Map[UTF8String, Seq[(Long, Int)]],
+      resolve: Seq[Long] => Map[Long, String]) {
+
+    /** Top-k (docno, docid, score) rows over already-analyzed terms
+      * (any number); unresolvable docnos drop (inner-join semantics). */
+    def searchTerms(analyzed: Seq[String], k: Int): Seq[(Long, String, Double)] = {
+      val n = nDocs.toDouble
+      val sums = scala.collection.mutable.HashMap.empty[Long, Double]
+      lists(analyzed.map(UTF8String.fromString).distinct).toSeq.sortBy(_._1)
+        .foreach { case (_, rows) =>
+          val idf = StrictMath.log10(n / rows.size.toDouble)
+          rows.foreach { case (d, tf) =>
+            sums(d) = sums.getOrElse(d, 0.0) + (1.0 + StrictMath.log(tf.toDouble)) * idf
+          }
+        }
+      val top = sums.toSeq
+        .map { case (d, s) =>
+          d -> BigDecimal(s).setScale(4, BigDecimal.RoundingMode.HALF_UP).toDouble }
+        .sortWith { case ((d1, s1), (d2, s2)) => s1 > s2 || (s1 == s2 && d1 < d2) }
+        .take(k)
+      val ids = resolve(top.map(_._1))
+      top.flatMap { case (d, s) => ids.get(d).map(id => (d, id, s)) }
     }
   }
 
-  private[query] def scoreTmpl(postings: DataFrame, nDocs: Long,
-                               topK: Int): ScoreTmpl = {
-    val ref = termCell()
-    val df = scorePlan(postings, nDocs, ref, topK)
-    // force planning + codegen at build, not on the instance's first query
-    df.queryExecution.executedPlan
-    ScoreTmpl(ref, df)
+  /** An index collected into its packed dictionary, with its scorer. */
+  private def packed(ix: Index): Scorer = {
+    val (keys, rows) = Packed.collect(ix.postings.select("kgram", "docno", "tf"), "docno")
+    val tf = rows.map(_.getLong(2).toInt)
+    new Scorer(ix.nDocs, new Packed.Postings(keys, rows.map(_.getLong(1)), tf(_)).lists,
+      Packed.docs(ix.docMap).resolve)
   }
 
   /** docno → docid for ≤ topK result docnos through a fresh tiny
-    * literal-`isin` plan (the class-doc resolve rationale: literals
-    * keep stat/row-group pruning; planning ≤ topK rows is noise).
+    * literal-`isin` plan (literals keep stat/row-group pruning, where a
+    * templated reference-reading filter would scan the whole doc_map
+    * per query; planning ≤ topK rows is noise).
     * Unresolvable docnos are absent — inner-join semantics. */
   private[query] def resolveLiteral(docMap: DataFrame,
                                     docnos: Seq[Long]): Map[Long, String] =

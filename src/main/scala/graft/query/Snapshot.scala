@@ -6,13 +6,13 @@ import org.apache.spark.sql.SparkSession
 
 /** The SNAPSHOT LIFECYCLE of a serving node — the one copy of
   * stamp → validate → rebuild → `refresh()` that every stamped server
-  * shares: the prepared-plan servers ([[PointServer]],
-  * [[PhraseServer]], [[Rm3Server]], [[Bm25Server]],
-  * [[WildcardServer]], [[LoadedWildcardServer]]) and the job-free
-  * loaded ones ([[LoadedPointServer]], [[LoadedPhraseServer]]), whose
-  * snapshot is their manifests, footer row groups and tombstones; the
-  * cell-granular vector servers keep their own [[CellVersion]]
-  * stamps.
+  * shares: the cached servers ([[PointServer]], [[PhraseServer]],
+  * [[WildcardServer]], [[Bm25Server]], whose snapshot is a packed
+  * driver dictionary ([[Packed]]), and [[Rm3Server]]'s prepared plans)
+  * and the loaded ones ([[LoadedPointServer]], [[LoadedPhraseServer]],
+  * [[LoadedWildcardServer]]), whose snapshot is their manifests,
+  * footer row groups and tombstones; the cell-granular vector servers
+  * keep their own [[CellVersion]] stamps.
   *
   *  - [[current]] is a lock-free read of the held snapshot while its
   *    stamp still matches the store's; when the stamp MOVED it
@@ -25,9 +25,9 @@ import org.apache.spark.sql.SparkSession
   *  - [[refresh]] rebuilds NOW — the explicit hammer for layouts whose
   *    listings can lag a mutation (eventually consistent object
   *    stores).
-  *  - `retire` runs exactly once per replaced snapshot (the cached
-  *    servers unpersist their frames, each build's own cache entries
-  *    ([[PointServer.cache]]); the loaded ones hold nothing to
+  *  - `retire` runs exactly once per replaced snapshot ([[Rm3Server]]
+  *    and [[Bm25Server]] unpersist their frames, each build's own cache
+  *    entries ([[PointServer.cache]]); the others hold nothing to
   *    release). A query that read the old snapshot just before the
   *    swap may still be running on it — run mutations behind the
   *    serving quiesce, as everywhere in the serving layer.

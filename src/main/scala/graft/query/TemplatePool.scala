@@ -12,8 +12,8 @@ package graft.query
   * borrow (or build — building costs one Catalyst pass, only under
   * contention or on first touch), use privately, return.
   *
-  *  - per key (template shape: phrase length, (window, ordered), file
-  *    set…) at most `perKey` pooled instances; an over-returned
+  *  - per key (template shape: an IVF server's probed cell set and
+  *    k…) at most `perKey` pooled instances; an over-returned
   *    instance is dropped to GC (`offer` on a full queue), so bursts
   *    don't grow the pool permanently;
   *  - at most `maxKeys` keys, LRU-evicted — the bound the previous

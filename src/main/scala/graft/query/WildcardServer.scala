@@ -1,45 +1,40 @@
 package graft.query
 
-import java.util.concurrent.atomic.AtomicReference
-
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graft.Bridge
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.unsafe.types.UTF8String
 
 import graft.index.CharKGramIndex
 
-/** PREPARED WILDCARD serving — the last query family to get a warm
-  * template (point/phrase/near/ANN/BM25/RM3/hybrid/batch all have
-  * one): [[graft.queries.IrSql.q09Wildcard]]'s gram-intersection
-  * lookup re-planned per call costs a full Catalyst pass over the
-  * chargram store — here the store's (gram, term) pairs are cached
-  * ONCE and a single pooled template serves every pattern.
+/** Wildcard serving with NO Spark job per lookup — the chargram
+  * store R4 exists for, held the way the paper client holds its
+  * dictionary: in memory. Each snapshot collects the store's
+  * (gram, term) pairs ONCE into a packed driver dictionary
+  * ([[Packed]]): the grams in UTF-8 order in one byte array, each
+  * owning a slice of an `int[]` of term ids into ONE packed vocabulary
+  * (the distinct terms in UTF-8 order, which also serves the
+  * all-short-segment fallback); the store's gram length k comes from
+  * the data (a mismatched k would silently expand to nothing).
   *
-  * Held per snapshot:
-  *  - the exploded (gram, term) relation, cached (the chargram store
-  *    R4 exists for — at 100 TB this is the vocabulary-sized working
-  *    set a serving node holds, not the corpus);
-  *  - the store's gram length k, derived from the data (a mismatched
-  *    k would silently expand to nothing);
-  *  - lazily, the distinct vocabulary as a driver array — only the
-  *    all-short-segment fallback patterns pay for it (the
-  *    [[Bm25Server]] full-dictionary discipline).
+  * Per lookup: the pattern's `$`-anchored segment grams probe the
+  * dictionary, and [[WildcardServer.matching]] — the gram count
+  * [[LoadedWildcardServer]] runs over its routed row groups — keeps
+  * the terms holding EVERY gram that pass the anchored-regex verify,
+  * in UTF-8 order: output-identical to [[QueryEngine.wildcardTerms]]
+  * (spec-pinned, q09's oracle semantics). [[search]] feeds the
+  * expansion through the held [[PointServer]]'s scorer — served
+  * wildcard RETRIEVAL, equal to [[QueryEngine.wildcardSearch]].
   *
-  * Per query, ONE template execution: the pattern's `$`-anchored
-  * segment grams land in a driver-updated [[RefSetContains]] set, the
-  * cached scan counts matched grams per candidate term
-  * (exchange-free: single coalesced partition), and the driver keeps
-  * candidates holding EVERY gram that also pass the anchored-regex
-  * verify — output-identical to
-  * [[QueryEngine.wildcardTerms]] (spec-pinned, same q09 oracle
-  * semantics). [[search]] feeds the expansion through the existing
-  * [[PointServer]] scoring tail — served wildcard RETRIEVAL, equal to
-  * [[QueryEngine.wildcardSearch]].
+  * DRIVER MEMORY: 4 bytes per (gram, term) pair plus the packed grams
+  * and vocabulary (SizeEstimator: 0.64 MB for perfbench `serve`'s
+  * 109k pairs over 2.5k grams and 16.6k terms). The snapshot holds no Spark-cached frame, so a cluster
+  * driver must be sized for the vocabulary's grams, as for
+  * [[Bm25Server]]; a node that cannot hold them serves through
+  * [[LoadedWildcardServer]].
   *
-  * STALENESS: the chargram store now mutates in place
+  * STALENESS: the chargram store mutates in place
   * ([[CharKGramIndex.mergeIntoStore]]/`deleteDocs`/`updateDocs`), so
   * the snapshot lives in the shared [[Snapshot]] holder under the
   * store's [[DirVersion]] stamp — O(1) via the [[graft.StoreGen]]
@@ -49,60 +44,51 @@ import graft.index.CharKGramIndex
   * semantics, as everywhere in the serving layer. */
 final class WildcardServer(spark: SparkSession, cgDir: String,
                            point: Option[PointServer] = None) {
-  import WildcardServer.Tmpl
 
+  /** One snapshot's packed (gram → term ids) dictionary. */
   private final class State {
-    val pairs = PointServer.cache(CharKGramIndex.load(spark, cgDir)
-      .select(col("gram"), explode(col("terms")).as("term"))).head
+    private val (grams, ids, vocab) = {
+      val (keys, rows) = Packed.collect(CharKGramIndex.load(spark, cgDir)
+        .select(col("gram"), explode(col("terms")).as("term")), "term")
+      val terms = rows.map(r => UTF8String.fromString(r.getString(1)))
+      val vocab = Packed.utf8s(terms.distinct.sorted.toSeq)
+      (keys, terms.map(vocab.find), vocab)
+    }
 
     /** The store's gram length, from the data (empty store → the
       * default; every lookup is then empty anyway). */
-    val k: Int = pairs.select(length(col("gram")))
-      .limit(1).collect().headOption.map(_.getInt(0))
-      .getOrElse(WildcardServer.DefaultK)
+    val k: Int = if (grams.keys.size == 0) WildcardServer.DefaultK
+      else grams.keys(0).numChars()
 
-    /** Driver vocabulary for the all-short-segment fallback — built
-      * on first need only. */
-    lazy val vocab: Array[String] = pairs.select(col("term"))
-      .distinct().collect().map(_.getString(0)).sorted
-
-    val pool = new TemplatePool[Unit, Tmpl](
-      _ => WildcardServer.tmpl(pairs), maxKeys = 1)
+    def lookup(p: WildcardServer.Pattern): Seq[String] =
+      WildcardServer.matching(p) { f =>
+        if (p.grams.isEmpty) (0 until vocab.size).foreach(i => f(vocab(i)))
+        else p.grams.foreach(g =>
+          grams.rows(UTF8String.fromString(g)).foreach(i => f(vocab(ids(i)))))
+      }
   }
 
   private val snapshot = new Snapshot[State](
     Snapshot.store(spark, cgDir, CharKGramIndex.stampDirs(cgDir)),
-    () => new State, st => PointServer.uncache(st.pairs))
+    () => new State, _ => ())
 
-  snapshot.current().pool.withInstance(())(_ => ()) // plan+codegen at ctor
-
-  /** Drop the snapshot and rebuild NOW (the explicit hammer for
+  /** Drop the snapshot and re-collect NOW (the explicit hammer for
     * eventually consistent listings; routine staleness is caught per
     * call by the version stamp). */
   def refresh(): Unit = snapshot.refresh()
-
-  /** The reused physical plan (spec hook: exchange-free). */
-  private[graft] def templatePlan
-      : org.apache.spark.sql.execution.SparkPlan =
-    snapshot.current().pool.withInstance(())(_.df.queryExecution.executedPlan)
 
   /** The pattern's matching vocabulary terms, ascending — identical
     * to [[QueryEngine.wildcardTerms]] over the same store. */
   def lookup(pattern: String): Seq[String] = {
     require(pattern.contains("*"), "pattern needs at least one *")
     val st = snapshot.current()
-    val p = new WildcardServer.Pattern(pattern, st.k)
-    if (p.grams.isEmpty)
-      // all segments shorter than k: no gram narrows — the driver
-      // dictionary verifies alone (zero jobs)
-      st.vocab.filter(p.matches).toSeq
-    else st.pool.withInstance(())(_.lookup(p))
+    st.lookup(new WildcardServer.Pattern(pattern, st.k))
   }
 
   /** Served wildcard RETRIEVAL: expand, re-analyze with the indexing
-    * pipeline, score through the held [[PointServer]]'s pooled
-    * template — (docno, docid, score) rows equal to
-    * [[QueryEngine.wildcardSearch]] on the same index + store. */
+    * pipeline, score through the held [[PointServer]] — (docno,
+    * docid, score) rows equal to [[QueryEngine.wildcardSearch]] on the
+    * same index + store. */
   def search(pattern: String): Seq[(Long, String, Double)] =
     WildcardServer.retrieve(point, lookup(pattern))
 }
@@ -124,34 +110,21 @@ object WildcardServer {
     def matches(term: String): Boolean = re.matcher(term).matches()
   }
 
-  /** A prepared gram-count plan — (term, matched grams) over the
-    * driver-updated gram set, exchange-free — and its gram cell. */
-  private[query] final case class Tmpl(
-      ref: AtomicReference[java.util.HashSet[UTF8String]], df: DataFrame) {
-    /** Candidates holding EVERY gram of `p` that pass its verify. */
-    def lookup(p: Pattern): Seq[String] = {
-      ref.set(PointServer.utf8Set(p.grams))
-      df.collect()
-        .filter(r => r.getLong(1) == p.grams.size && p.matches(r.getString(0)))
-        .map(_.getString(0)).sorted.toSeq
-    }
-  }
-
-  /** Count matched grams per term over the (gram, term) `pairs` the
-    * driver-updated gram set keeps. */
-  private def tmpl(pairs: DataFrame): Tmpl = {
-    val ref = PointServer.termCell()
-    val df = pairs.filter(Bridge.column(
-        RefSetContains(Bridge.expression(col("gram")), ref)))
-      .coalesce(1)
-      .groupBy(col("term")).agg(count(lit(1)).as("ng"))
-    df.queryExecution.executedPlan // plan + codegen at build
-    Tmpl(ref, df)
+  /** The gram count of both wildcard servers: `each(f)` calls `f` once
+    * per (matched gram row, term) pair — every vocabulary term when
+    * `p` has no gram — and the terms holding every gram of `p` that
+    * pass its verify come back in UTF-8 order. */
+  private[query] def matching(p: Pattern)
+      (each: (UTF8String => Unit) => Unit): Seq[String] = {
+    val ng = scala.collection.mutable.HashMap.empty[UTF8String, Int]
+    each(t => ng(t) = ng.getOrElse(t, 0) + 1)
+    ng.iterator.collect { case (t, n) if n == p.grams.size || p.grams.isEmpty => t }
+      .filter(t => p.matches(t.toString)).toSeq.sorted.map(_.toString)
   }
 
   /** The retrieval tail shared by both wildcard servers: re-analyze
     * the expansion with the indexing pipeline and score it through
-    * the held [[PointServer]]'s pooled template. */
+    * the held [[PointServer]]. */
   private[query] def retrieve(point: Option[PointServer],
                               expansion: => Seq[String])
       : Seq[(Long, String, Double)] = {
@@ -176,9 +149,9 @@ object WildcardServer {
   *
   * Per query: route the pattern's segment grams to their covering
   * part files (driver arithmetic), read on the driver ONLY those
-  * files' row groups whose gram min/max covers a gram, count the
-  * matched grams per term, and keep the candidates holding every
-  * gram that pass the anchored-regex verify, in UTF-8 order —
+  * files' row groups whose gram min/max covers a gram, and run
+  * [[WildcardServer.matching]] (the cached server's gram count) over
+  * them —
   * output-identical to [[QueryEngine.wildcardTerms]] /
   * [[WildcardServer.lookup]] (spec-pinned; q09's oracle semantics).
   * All-short-segment patterns (no gram to narrow by) read every row
@@ -237,19 +210,15 @@ final class LoadedWildcardServer(spark: SparkSession, cgDir: String,
     val p = new WildcardServer.Pattern(pattern, st.k)
     val grams = p.grams.map(UTF8String.fromString)
     val want = grams.toSet
-    // term → matched grams; terms are copied out of the reused row
-    val ng = scala.collection.mutable.HashMap.empty[UTF8String, Int]
-    def count(r: InternalRow): Unit = if (!r.isNullAt(1)) {
-      val terms = r.getArray(1)
-      (0 until terms.numElements()).foreach { i =>
-        val t = terms.getUTF8String(i).clone()
-        ng(t) = ng.getOrElse(t, 0) + 1
+    WildcardServer.matching(p) { f =>
+      // terms are copied out of the reused row
+      def each(r: InternalRow): Unit = if (!r.isNullAt(1)) {
+        val terms = r.getArray(1)
+        (0 until terms.numElements()).foreach(i => f(terms.getUTF8String(i).clone()))
       }
+      if (grams.isEmpty) st.grams.foreachAll(each) // nothing narrows
+      else st.grams.foreach(grams)(r => if (want(r.getUTF8String(0))) each(r))
     }
-    if (grams.isEmpty) st.grams.foreachAll(count) // nothing narrows
-    else st.grams.foreach(grams)(r => if (want(r.getUTF8String(0))) count(r))
-    ng.iterator.collect { case (t, n) if n == grams.size || grams.isEmpty => t }
-      .filter(t => p.matches(t.toString)).toSeq.sorted.map(_.toString)
   }
 
   /** Served wildcard RETRIEVAL over the routed lookup — same scoring

@@ -12,9 +12,9 @@ import graft.query.{PointServer, QueryEngine}
   * defaults every other number in the repo comes from): the invariants
   * the plans rely on must SURVIVE it, not merely hold under the tuned
   * local conf. CLUSTERCONF.md records the full-surface oracle run
-  * under the same overrides; this spec pins the two plan shapes that
-  * could silently break — the exchange-free PointServer template and
-  * the size-guarded broadcast joins.
+  * under the same overrides; this spec pins that the cached point and
+  * phrase servers stay job-free and exact under it, and that the
+  * size-guarded broadcast joins keep their shape.
   */
 class ClusterConfSpec extends SparkSpec {
 
@@ -42,25 +42,19 @@ class ClusterConfSpec extends SparkSpec {
         TrecCorpus.read(spark, resourcePath("/graft/sample-trec.xml"))
       val ix = InvertedIndex.build(spark, corpus, k = 1)
       val ps = new PointServer(ix)
-      // the invariant the serving design depends on: NO exchange node
-      // anywhere in the reused plan (an exchange caches its first
-      // result and would serve query 1's data to query 2+). AQE must
-      // not have introduced one — exchange-free plans have no query
-      // stages for it to adapt, so it must leave the plan alone.
-      val exchanges = ps.templatePlan.collect {
-        case e: org.apache.spark.sql.execution.exchange.Exchange => e
+      // the server answers from its driver dictionary: a warm query
+      // submits no Spark job whatever the session conf, so no plan is
+      // left for AQE or the partition count to reshape
+      val queries = Seq("merge", "stream buffer", "pipeline", "data stream")
+      val got = queries.map(ps.search) // warm
+      val jobs = jobsDuring(queries.foreach(ps.search))
+      assert(jobs == 0, s"warm point queries submitted $jobs Spark jobs")
+      // and a query SEQUENCE matches fresh-plan serving
+      queries.zip(got).foreach { case (q, g) =>
+        val want = QueryEngine.serveSearch(ix, q).collect()
+          .map(r => (r.getLong(0), r.getString(1), r.getDouble(2))).toSeq
+        assert(g == want, s"query [$q] diverged")
       }
-      assert(exchanges.isEmpty,
-        s"exchange leaked into the serving template:\n${ps.templatePlan}")
-      // and behaviorally: a query SEQUENCE matches fresh-plan serving
-      // (stale exchange state would surface as query 2+ returning
-      // query 1's ranking)
-      Seq("merge", "stream buffer", "pipeline", "data stream")
-        .foreach { q =>
-          val want = QueryEngine.serveSearch(ix, q).collect()
-            .map(r => (r.getLong(0), r.getString(1), r.getDouble(2))).toSeq
-          assert(ps.search(q) == want, s"query [$q] diverged")
-        }
       InvertedIndex.unpersist(ix)
     }
   }
@@ -72,13 +66,10 @@ class ClusterConfSpec extends SparkSpec {
         TrecCorpus.read(spark, resourcePath("/graft/sample-trec.xml"))
       val pix = graft.index.PositionalIndex.build(spark, corpus)
       val ps = new graft.query.PhraseServer(pix)
-      Seq(2, 3).foreach { n =>
-        val exchanges = ps.templatePlan(n).collect {
-          case e: org.apache.spark.sql.execution.exchange.Exchange => e
-        }
-        assert(exchanges.isEmpty,
-          s"exchange leaked into the $n-slot phrase template:\n${ps.templatePlan(n)}")
-      }
+      val phrases = Seq("merge engine", "sorted streams", "merge engine merges")
+      phrases.foreach(ps.phrase) // warm
+      val jobs = jobsDuring(phrases.foreach(ps.phrase))
+      assert(jobs == 0, s"warm phrase queries submitted $jobs Spark jobs")
       Seq("merge engine", "sorted streams", "merge engine").foreach { q =>
         val want = graft.index.PositionalIndex.phrase(pix, q)
           .limit(10).collect()

@@ -48,8 +48,9 @@ class LoadedPhraseServerSpec extends SparkSpec {
       cached("merge engine merges"))
     assert(server.phrase("merge") == cached("merge"))
     assert(server.phrase("merge engine") == cached("merge engine"))
-    // beyond the cached templates' MaxSlots: the same driver path
-    val long = Seq.fill(PhraseServer.MaxSlots + 1)("merge").mkString(" ")
+    // nine words, longer than the deleted prepared plans' 8 slots: the
+    // same driver path
+    val long = "merge merge merge merge merge merge merge merge merge"
     assert(server.phrase(long) == cached(long))
   }
 

@@ -4,9 +4,9 @@ import graft.SparkSpec
 import graft.corpus.TrecCorpus
 import graft.index.PositionalIndex
 
-/** PhraseServer: prepared-template parity with the fresh-plan phrase
-  * path, stale-state safety across a query sequence, and the
-  * exchange-free plan invariant. */
+/** PhraseServer: driver-dictionary parity with the fresh-plan phrase
+  * path across a query sequence, the index-size guard, concurrent
+  * callers, and no Spark job on a warm query. */
 class PhraseServerSpec extends SparkSpec {
 
   private lazy val corpus =
@@ -49,7 +49,9 @@ class PhraseServerSpec extends SparkSpec {
   }
 
   test("phrases beyond MaxSlots fall back to the fresh plan") {
-    val long = Seq.fill(PhraseServer.MaxSlots + 1)("merge").mkString(" ")
+    // nine words: longer than the deleted prepared plans' 8 slots; the
+    // driver dictionary serves any length
+    val long = "merge merge merge merge merge merge merge merge merge"
     assert(server.phrase(long) == fresh(long))
   }
 
@@ -74,8 +76,8 @@ class PhraseServerSpec extends SparkSpec {
     // templates (the BroadcastDocs discipline); results are identical
     // through the fresh pruned plans
     val guarded = new PhraseServer(pix, maxTemplateDocs = 1L)
-    assert(!guarded.usesTemplates)
-    assert(server.usesTemplates) // default bound far above the corpus
+    assert(!guarded.usesDictionary)
+    assert(server.usesDictionary) // default bound far above the corpus
     assert(guarded.phrase("merge engine") == server.phrase("merge engine"))
     assert(guarded.near("merge", "engine", 3) ==
       server.near("merge", "engine", 3))
@@ -111,22 +113,15 @@ class PhraseServerSpec extends SparkSpec {
   }
 
   test("the reused plans contain no exchange node (lengths 1, 2, 3)") {
-    def walk(p: org.apache.spark.sql.execution.SparkPlan)
-        : Seq[org.apache.spark.sql.execution.SparkPlan] =
-      p +: p.children.flatMap(walk)
-    Seq(1, 2, 3).foreach { n =>
-      val nodes = walk(server.templatePlan(n))
-      assert(nodes.nonEmpty)
-      nodes.foreach { nd =>
-        assert(!nd.getClass.getName.contains("Exchange"),
-          s"exchange in $n-slot template: ${nd.getClass.getName}")
-      }
+    // no plan is reused any more: warm phrases of every length and
+    // near queries answer from the driver dictionary with no Spark job
+    def queries(): Unit = {
+      Seq("merge", "merge engine", "merge engine merges").foreach(server.phrase)
+      Seq((3, false), (1, true)).foreach { case (w, o) =>
+        server.near("merge", "engine", w, o) }
     }
-    Seq((3, false), (1, true)).foreach { case (w, o) =>
-      walk(server.nearTemplatePlan(w, o)).foreach { nd =>
-        assert(!nd.getClass.getName.contains("Exchange"),
-          s"exchange in near($w, $o) template: ${nd.getClass.getName}")
-      }
-    }
+    queries() // warm
+    val jobs = jobsDuring(queries())
+    assert(jobs == 0, s"warm phrase/near queries submitted $jobs Spark jobs")
   }
 }

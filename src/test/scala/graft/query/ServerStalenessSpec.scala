@@ -171,8 +171,8 @@ class ServerStalenessSpec extends SparkSpec {
       def held() = sc.getPersistentRDDs.keySet.toSet
       val before = held()
       val ps = PointServer.overStore(spark, dir)
-      var mine = held() -- before // postings + doc_map
-      assert(mine.size == 2)
+      // the snapshot is a driver dictionary: no persisted RDD
+      assert((held() -- before).isEmpty)
       assert(ps.search("zebra").isEmpty)
       val second = spark.createDataFrame(Seq(
         ("F", "yak zebra merge"), ("G", "yak alpha"))).toDF("docid", "content")
@@ -180,11 +180,10 @@ class ServerStalenessSpec extends SparkSpec {
         InvertedIndex.appendToStore(spark, dir, d, k = 1)
         val pre = held()
         val got = Seq("zebra", "yak", "merge alpha").map(ps.search)
-        val post = held()
-        // the rebuilt snapshot's two frames, the replaced ones released
-        val ours = (post -- pre) ++ (mine intersect post)
-        assert(ours.size == 2, s"append ${i + 1}: ${ours.size} frames held")
-        mine = ours
+        // the live server holds no persisted RDD across both appends:
+        // the rebuilt snapshot is a driver dictionary
+        val mine = held() -- pre
+        assert(mine.isEmpty, s"append ${i + 1}: ${mine.size} RDDs persisted")
         // the loaded server reads the store on the driver, no cache
         val fresh = new LoadedPointServer(spark, dir)
         assert(got == Seq("zebra", "yak", "merge alpha").map(fresh.search),

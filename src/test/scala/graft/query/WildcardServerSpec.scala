@@ -5,10 +5,10 @@ import graft.SparkSpec
 import graft.index.{CharKGramIndex, InvertedIndex}
 import graft.queries.IrSql
 
-/** Round-15 prepared wildcard serving: the warm template equals the
+/** Wildcard serving: the cached server's driver dictionary equals the
   * batch expansion ([[QueryEngine.wildcardTerms]]) pattern for
   * pattern, the retrieval arm equals [[QueryEngine.wildcardSearch]],
-  * the template is exchange-free, and a chargram-store UPDATE under
+  * a warm lookup runs no Spark job, and a chargram-store UPDATE under
   * the live server is detected by the stamp. */
 class WildcardServerSpec extends SparkSpec {
 
@@ -47,13 +47,13 @@ class WildcardServerSpec extends SparkSpec {
   }
 
   test("the lookup template is exchange-free") {
+    // no plan is reused any more: a warm lookup of every pattern shape
+    // answers from the driver dictionary with no Spark job
     val srv = new WildcardServer(spark, freshCgStore())
-    val plan = srv.templatePlan
-    val exchanges = plan.collect {
-      case e: org.apache.spark.sql.execution.exchange.Exchange => e
-    }
-    assert(exchanges.isEmpty,
-      s"wildcard template contains an exchange:\n$plan")
+    val patterns = Seq("st*am", "str*ea*m", "a*b", "*zzqnotfound*")
+    patterns.foreach(srv.lookup) // warm
+    val jobs = jobsDuring(patterns.foreach(srv.lookup))
+    assert(jobs == 0, s"warm wildcard lookups submitted $jobs Spark jobs")
   }
 
   test("a chargram-store UPDATE under the LIVE server is detected by " +
