@@ -11,10 +11,12 @@ import graft.text.TextPipeline
   *
   *  - [[PositionalIndex.write]] persists per-file term-range manifests
   *    (`pos_postings_ranges`); a snapshot reads them once.
-  *  - A query's terms route to their covering files, each file's
-  *    footer min/max picks the row groups that can hold them, and
-  *    Spark's own parquet reader decodes those on the driver
-  *    ([[Routing.Table]]). Tombstoned docnos drop on the driver set.
+  *  - A query's terms route to their covering files, and each file's
+  *    footer min/max picks the row groups that can hold them
+  *    ([[Routing.Table]]). Spark's own parquet reader decodes a picked
+  *    row group on the driver once, into a block held in the
+  *    process's [[Routing.Blocks]] cache; later queries binary-search
+  *    it. Tombstoned docnos drop on the driver set.
   *  - Phrase and near counts are [[PhraseServer.Scorer]], the driver
   *    scorer the cached [[PhraseServer]] runs over its packed
   *    dictionary ([[PositionalIndex.phraseRuns]] /
@@ -28,32 +30,36 @@ import graft.text.TextPipeline
   * one of its files fails loudly instead of answering empty.
   *
   * STALENESS: the snapshot (loaded frames, manifests, footer row
-  * groups, tombstones) lives in the shared [[Snapshot]] holder,
+  * groups, tombstones, and its tables' blocks, dropped when it is
+  * replaced) lives in the shared [[Snapshot]] holder,
   * revalidated per public call against the store's [[DirVersion]]
   * stamp, so a [[PositionalIndex.merge]]-then-write of the same
   * directory under a live server is detected and re-read (the hazard
   * the q36_phrase_merged delta path arms). [[refresh]] stays the
   * explicit hammer for layouts where listings can lag.
   *
-  * Safe for concurrent callers: a query holds no shared mutable state
-  * beyond the snapshot's footer cache (a concurrent map). */
+  * Safe for concurrent callers: a query shares no mutable state
+  * beyond the snapshot's footer cache (a concurrent map) and the
+  * block cache, whose concurrent misses of one row group wait for a
+  * single decode. */
 final class LoadedPhraseServer(spark: SparkSession, dir: String,
-                               topK: Int = 10) {
+                               topK: Int = 10,
+                               blocks: Routing.Blocks = Routing.Blocks.shared) {
 
   /** One immutable snapshot of the on-disk index: loaded frames and
     * the driver-read routing state, scored by the shared
     * [[PhraseServer.Scorer]]. */
   private final class State {
     val pix: PositionalIndex.PIndex = PositionalIndex.load(spark, dir)
-    private val routed = new Routing.Routed(spark, dir, PositionalIndex.store,
-      "positions", pix.postings.schema, pix.docMap.schema)
+    val routed = new Routing.Routed(spark, dir, PositionalIndex.store,
+      "positions", pix.postings.schema, pix.docMap.schema, blocks)
     val scorer = new PhraseServer.Scorer(topK,
       ts => routed.lists(ts)(_.getArray(2).toIntArray()), routed.resolve)
   }
 
   private val snapshot = new Snapshot[State](
     Snapshot.store(spark, dir, PositionalIndex.store.stampDirs(dir)),
-    () => new State, _ => ())
+    () => new State, _.routed.close())
 
   /** Drop the snapshot and re-read the manifests NOW — the explicit
     * hammer for layouts where directory listings can lag a mutation;

@@ -18,8 +18,10 @@ import graft.index.InvertedIndex
   *    them once — O(files) driver state, no corpus scan.
   *  - A query's terms route to their covering files through the
   *    manifest, and each file's footer min/max picks the row groups
-  *    that can hold them ([[Routing.Table]]); Spark's own parquet
-  *    reader decodes just those on the driver. Tombstoned docnos drop
+  *    that can hold them ([[Routing.Table]]). Spark's own parquet
+  *    reader decodes a picked row group on the driver once, into a
+  *    block held in the process's [[Routing.Blocks]] cache; later
+  *    queries binary-search the held block. Tombstoned docnos drop
   *    on the driver set.
   *  - Scoring is [[PointServer.Scorer]], the driver scorer the cached
   *    [[PointServer]] runs over its packed dictionary: df = the
@@ -33,25 +35,29 @@ import graft.index.InvertedIndex
   * on the same loaded store, appended to and tombstoned.
   *
   * STALENESS: the snapshot (loaded frames, manifests, footer row
-  * groups, tombstones) lives in the shared [[Snapshot]] holder,
+  * groups, tombstones, and its tables' blocks, dropped when it is
+  * replaced) lives in the shared [[Snapshot]] holder,
   * revalidated per [[search]] against the store's [[DirVersion]]
   * stamp, so a merge-then-write of the same directory under a live
   * server is detected and re-read. [[refresh]] stays the explicit
   * hammer for layouts where listings can lag (eventually consistent
   * object stores).
   *
-  * Safe for concurrent callers: a query holds no shared mutable
-  * state beyond the snapshot's footer cache (a concurrent map). */
+  * Safe for concurrent callers: a query shares no mutable state
+  * beyond the snapshot's footer cache (a concurrent map) and the
+  * block cache, whose concurrent misses of one row group wait for a
+  * single decode. */
 final class LoadedPointServer(spark: SparkSession, dir: String,
-                              topK: Int = 10) {
+                              topK: Int = 10,
+                              blocks: Routing.Blocks = Routing.Blocks.shared) {
 
   /** One immutable snapshot of the on-disk index: loaded frames, the
     * driver-read routing state, and the index handed to callers,
     * which carries this snapshot's `searchTerms` as its scorer. */
   private final class State {
     private val loaded = InvertedIndex.load(spark, dir)
-    private val routed = new Routing.Routed(spark, dir, InvertedIndex.store, "tf",
-      loaded.postings.schema, loaded.docMap.schema)
+    val routed = new Routing.Routed(spark, dir, InvertedIndex.store, "tf",
+      loaded.postings.schema, loaded.docMap.schema, blocks)
     val scorer = new PointServer.Scorer(loaded.nDocs,
       ts => routed.lists(ts)(_.getLong(2).toInt), routed.resolve)
     val ix: InvertedIndex.Index = loaded.copy(scorer = Some(scorer.searchTerms))
@@ -59,7 +65,7 @@ final class LoadedPointServer(spark: SparkSession, dir: String,
 
   private val snapshot = new Snapshot[State](
     Snapshot.store(spark, dir, InvertedIndex.store.stampDirs(dir)),
-    () => new State, _ => ())
+    () => new State, _.routed.close())
 
   /** Drop the snapshot and re-read the manifests NOW — the explicit
     * hammer for layouts where directory listings can lag a mutation;

@@ -11,7 +11,7 @@ import org.apache.spark.sql.SparkSession
   * driver dictionary ([[Packed]]), and [[Rm3Server]]'s prepared plans)
   * and the loaded ones ([[LoadedPointServer]], [[LoadedPhraseServer]],
   * [[LoadedWildcardServer]]), whose snapshot is their manifests,
-  * footer row groups and tombstones; the cell-granular vector servers
+  * footer row groups, tombstones and held blocks; the cell-granular vector servers
   * keep their own [[CellVersion]] stamps.
   *
   *  - [[current]] is a lock-free read of the held snapshot while its
@@ -27,8 +27,9 @@ import org.apache.spark.sql.SparkSession
   *    stores).
   *  - `retire` runs exactly once per replaced snapshot ([[Rm3Server]]
   *    and [[Bm25Server]] unpersist their frames, each build's own cache
-  *    entries ([[PointServer.cache]]); the others hold nothing to
-  *    release). A query that read the old snapshot just before the
+  *    entries ([[PointServer.cache]]); the loaded servers drop their
+  *    tables' held blocks ([[Routing.Blocks]]); the others hold
+  *    nothing to release). A query that read the old snapshot just before the
   *    swap may still be running on it — run mutations behind the
   *    serving quiesce, as everywhere in the serving layer.
   *

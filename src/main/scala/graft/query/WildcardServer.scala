@@ -137,21 +137,25 @@ object WildcardServer {
 }
 
 /** LOADED wildcard serving — [[WildcardServer]] for nodes that can't
-  * hold the vocabulary: nothing vocabulary-sized is cached, and a
+  * hold the vocabulary: no vocabulary dictionary is built, and a
   * lookup runs NO Spark job. Held per snapshot, O(part files) driver
-  * state only:
+  * state:
   *  - the store's per-file gram RANGES, derived by ONE narrow
   *    gram-column scan per store generation (derived rather than
   *    manifest-read because the chargram table IS its store root and
   *    file surgery maintains it in place — the same on-the-fly
   *    routing [[CharKGramIndex.mergeIntoStore]] uses), held in a
   *    [[Routing.Table]] with its per-file footer row groups.
+  * The row groups lookups touch are decoded once and held in the
+  * process's [[Routing.Blocks]] cache under its byte budget (a row
+  * group over the whole budget streams per read instead); the
+  * replaced snapshot's blocks are dropped.
   *
   * Per query: route the pattern's segment grams to their covering
   * part files (driver arithmetic), read on the driver ONLY those
   * files' row groups whose gram min/max covers a gram, and run
   * [[WildcardServer.matching]] (the cached server's gram count) over
-  * them —
+  * their rows of those grams —
   * output-identical to [[QueryEngine.wildcardTerms]] /
   * [[WildcardServer.lookup]] (spec-pinned; q09's oracle semantics).
   * All-short-segment patterns (no gram to narrow by) read every row
@@ -166,7 +170,8 @@ object WildcardServer {
   * `mergeIntoStore`/`deleteDocs`/`updateDocs` under a live server
   * re-derives the ranges and re-routes on the very next lookup. */
 final class LoadedWildcardServer(spark: SparkSession, cgDir: String,
-                                 point: Option[PointServer] = None) {
+                                 point: Option[PointServer] = None,
+                                 blocks: Routing.Blocks = Routing.Blocks.shared) {
 
   private final class State {
     private val cg = CharKGramIndex.load(spark, cgDir)
@@ -177,7 +182,8 @@ final class LoadedWildcardServer(spark: SparkSession, cgDir: String,
         .agg(min(col("gram")).as("lo"), max(col("gram")).as("hi")),
       Routing.Utf8Key)
     val grams = new Routing.Table(spark, ranges,
-      StructType(Seq(cg.schema("gram"), cg.schema("terms"))), Routing.Utf8Key)
+      StructType(Seq(cg.schema("gram"), cg.schema("terms"))), Routing.Utf8Key,
+      blocks)
 
     /** Gram length from the range endpoints (grams are fixed-width
       * `$`-padded code-point windows); empty store → the default. */
@@ -187,7 +193,7 @@ final class LoadedWildcardServer(spark: SparkSession, cgDir: String,
 
   private val snapshot = new Snapshot[State](
     Snapshot.store(spark, cgDir, CharKGramIndex.stampDirs(cgDir)),
-    () => new State, _ => ())
+    () => new State, st => blocks.drop(st.grams))
 
   /** Drop the snapshot and re-derive the ranges NOW (the explicit
     * hammer for eventually consistent listings). */
@@ -209,7 +215,6 @@ final class LoadedWildcardServer(spark: SparkSession, cgDir: String,
     val st = snapshot.current()
     val p = new WildcardServer.Pattern(pattern, st.k)
     val grams = p.grams.map(UTF8String.fromString)
-    val want = grams.toSet
     WildcardServer.matching(p) { f =>
       // terms are copied out of the reused row
       def each(r: InternalRow): Unit = if (!r.isNullAt(1)) {
@@ -217,7 +222,7 @@ final class LoadedWildcardServer(spark: SparkSession, cgDir: String,
         (0 until terms.numElements()).foreach(i => f(terms.getUTF8String(i).clone()))
       }
       if (grams.isEmpty) st.grams.foreachAll(each) // nothing narrows
-      else st.grams.foreach(grams)(r => if (want(r.getUTF8String(0))) each(r))
+      else st.grams.foreach(grams)(each)
     }
   }
 

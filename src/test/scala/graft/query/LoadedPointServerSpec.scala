@@ -2,7 +2,7 @@ package graft.query
 
 import graft.SparkSpec
 import graft.corpus.TrecCorpus
-import graft.index.InvertedIndex
+import graft.index.{CharKGramIndex, InvertedIndex, PositionalIndex}
 
 /** Pins [[LoadedPointServer]]'s job-free driver path to
   * [[QueryEngine.serveSearch]] over the SAME loaded artifacts —
@@ -11,11 +11,16 @@ import graft.index.InvertedIndex
   * living in different files), on an appended and tombstoned store
   * (one term in several files, df summed across them), at a score tie
   * on the top-k boundary, and for keys whose UTF-8 and UTF-16 orders
-  * disagree. */
+  * disagree. The block cache behind the driver reads
+  * ([[Routing.Blocks]]) keeps every loaded answer equal to the fresh
+  * plans cold, warm, under eviction and read-through, drops a replaced
+  * snapshot's blocks, and decodes a row group once under concurrent
+  * misses. */
 class LoadedPointServerSpec extends SparkSpec {
 
   lazy val corpus = TrecCorpus.read(spark, resourcePath("/graft/sample-trec.xml"))
   lazy val ix = InvertedIndex.build(spark, corpus, k = 1)
+  lazy val cg = CharKGramIndex.build(spark, corpus)
 
   private def withTmp(f: String => Unit): Unit = {
     val dir = java.nio.file.Files.createTempDirectory("graft_lps").toString
@@ -42,6 +47,20 @@ class LoadedPointServerSpec extends SparkSpec {
 
   private def bits(rows: Seq[(Long, String, Double)]) =
     rows.map { case (d, id, s) => (d, id, java.lang.Double.doubleToLongBits(s)) }
+
+  /** A (docno, docid, score) frame's rows, scores as their IEEE bits. */
+  private def rows(df: org.apache.spark.sql.DataFrame) = {
+    assert(df.columns.toSeq == Seq("docno", "docid", "score"))
+    bits(df.collect().map(r => (r.getLong(0), r.getString(1),
+      r.getDouble(2))).toSeq)
+  }
+
+  /** The sample's chargram store in 8 files, so a routed read covers a
+    * strict subset. */
+  private def withChargrams(f: String => Unit): Unit = withTmp { cgDir =>
+    CharKGramIndex.write(cg, cgDir, rowsPerFile = math.max(1L, cg.count() / 8))
+    f(cgDir)
+  }
 
   private def pinToServeSearch(dir: String): Unit = {
     val lps = new LoadedPointServer(spark, dir)
@@ -154,20 +173,11 @@ class LoadedPointServerSpec extends SparkSpec {
     "bit-identical to the rank(serve) plan over InvertedIndex.load, " +
     "and a warm request submits no Spark job") {
     withAppendedTombstoned { dir =>
-      withTmp { cgDir =>
-        // 8 files, so the routed read covers a strict subset
-        val cg = graft.index.CharKGramIndex.build(spark, corpus)
-        graft.index.CharKGramIndex.write(cg, cgDir,
-          rowsPerFile = math.max(1L, cg.count() / 8))
+      withChargrams { cgDir =>
         val lx = InvertedIndex.load(spark, dir)
         assert(lx.scorer.isEmpty)
         val lps = new LoadedPointServer(spark, dir)
         val lws = new LoadedWildcardServer(spark, cgDir)
-        def rows(df: org.apache.spark.sql.DataFrame) = {
-          assert(df.columns.toSeq == Seq("docno", "docid", "score"))
-          bits(df.collect().map(r => (r.getLong(0), r.getString(1),
-            r.getDouble(2))).toSeq)
-        }
         // st*: a many-term expansion; a*b: every segment shorter than
         // k, so the lookup reads every row group
         val patterns = Seq("st*am", "st*", "a*b", "*zzqnotfound*")
@@ -241,6 +251,150 @@ class LoadedPointServerSpec extends SparkSpec {
           assert(got(q) == want(q), s"concurrent loaded search [$q] diverged")
         }
       }
+    }
+  }
+
+  /** [[withAppendedTombstoned]]'s store, a positional store with the
+    * same generations and tombstones, and [[withChargrams]]' store. */
+  private def withStores(f: (String, String, String) => Unit): Unit = {
+    import spark.implicits._
+    withAppendedTombstoned { dir =>
+      withTmp { posDir =>
+        PositionalIndex.write(PositionalIndex.build(spark,
+          corpus.filter($"docid" <= "FT911-0010")), posDir, rowsPerFile = 50)
+        PositionalIndex.appendToStore(spark, posDir,
+          corpus.filter($"docid" > "FT911-0010"), rowsPerFile = 50)
+        PositionalIndex.deleteDocs(spark, posDir,
+          Seq("FT911-0017", "FT911-0008").toDF("docid"))
+        withChargrams(cgDir => f(dir, posDir, cgDir))
+      }
+    }
+  }
+
+  private val points = Seq("merge", "stream buffer", "sorted runs",
+    "spill disk", "zzzqqq")
+  private val phrases = Seq("sorted runs", "merge", "external merge sort",
+    "disk spill")
+  private val nears = Seq(("merge", "sort", 3, false), ("sorted", "runs", 1, true))
+  // a*b: every segment shorter than k, so the lookup reads every row group
+  private val patterns = Seq("st*am", "st*", "a*b")
+
+  test("block cache: loaded search, phrase, near and wildcard requests " +
+    "equal the fresh plans cold, warm, after LRU eviction and read " +
+    "through; held bytes stay within the budget") {
+    withStores { (dir, posDir, cgDir) =>
+      val lx = InvertedIndex.load(spark, dir)
+      val pl = PositionalIndex.load(spark, posDir)
+      val want: Seq[Any] = points.map(q => fresh(lx, q)) ++
+        phrases.map(p => PositionalIndex.phrase(pl, p).limit(10).collect()
+          .map(r => (r.getString(0), r.getLong(1))).toSeq) ++
+        nears.map { case (a, b, w, o) =>
+          PositionalIndex.nearTopK(pl, a, b, w, o, 10).collect()
+            .map(r => (r.getString(0), r.getLong(1))).toSeq
+        } ++
+        patterns.map(p => rows(QueryEngine.wildcardSearchExpanded(lx,
+          QueryEngine.wildcardTerms(cg, p).collect().map(_.getString(0)).toSeq)))
+      assert(want.count(_ != Seq.empty) > want.size / 2)
+
+      def servers(b: Routing.Blocks) = (new LoadedPointServer(spark, dir, blocks = b),
+        new LoadedPhraseServer(spark, posDir, blocks = b),
+        new LoadedWildcardServer(spark, cgDir, blocks = b))
+      def check(state: String, b: Routing.Blocks,
+                s: (LoadedPointServer, LoadedPhraseServer, LoadedWildcardServer)): Unit = {
+        val (lps, lph, lws) = s
+        def one(a: Any): Any = {
+          assert(b.held <= b.budget, s"$state: ${b.held} B held, budget ${b.budget} B")
+          a
+        }
+        val got = points.map(q => one(bits(lps.search(q)))) ++
+          phrases.map(p => one(lph.phrase(p))) ++
+          nears.map { case (a, bb, w, o) => one(lph.near(a, bb, w, o)) } ++
+          patterns.map(p => one(rows(QueryEngine.wildcardSearchExpanded(
+            lps.index, lws.lookup(p)))))
+        got.zip(want).zipWithIndex.foreach { case ((g, w), i) =>
+          assert(g == w, s"$state: request $i")
+        }
+      }
+
+      val ample = new Routing.Blocks(1L << 30)
+      val s = servers(ample)
+      check("cold", ample, s)
+      val decoded = ample.decoded
+      assert(decoded > 0 && ample.held > 0)
+      val jobs = jobsDuring(check("warm", ample, s))
+      assert(jobs == 0, s"warm requests submitted $jobs Spark jobs")
+      assert(ample.decoded == decoded, "a warm request decoded a row group again")
+
+      // a quarter of the working set: blocks are evicted and decoded again
+      val tiny = new Routing.Blocks(ample.held / 4)
+      val t = servers(tiny)
+      check("tiny budget, cold", tiny, t)
+      val once = tiny.decoded
+      check("tiny budget, evicted", tiny, t)
+      assert(tiny.decoded > once, "nothing was evicted under the tiny budget")
+      assert(tiny.held > 0)
+
+      // smaller than any row group: every read streams, nothing is held
+      val none = new Routing.Blocks(1L)
+      check("read-through", none, servers(none))
+      assert(none.held == 0 && none.decoded == 0)
+    }
+  }
+
+  test("block cache: after a delete and an append under a live server " +
+    "search equals the fresh plan, and the replaced snapshot's blocks " +
+    "leave the cache") {
+    import spark.implicits._
+    withAppendedTombstoned { dir =>
+      val b = new Routing.Blocks(1L << 30)
+      val lps = new LoadedPointServer(spark, dir, blocks = b)
+      val qs = Seq("merge", "stream buffer", "sorted runs")
+      def pinned(step: String): Unit = {
+        val lx = InvertedIndex.load(spark, dir)
+        qs.foreach(q => assert(bits(lps.search(q)) == fresh(lx, q), s"$step: [$q]"))
+        // the blocks a new server over this store holds, and no more
+        val nb = new Routing.Blocks(1L << 30)
+        val n = new LoadedPointServer(spark, dir, blocks = nb)
+        qs.foreach(n.search)
+        assert(b.held == nb.held, s"$step: ${b.held} B held, a new server's ${nb.held} B")
+      }
+      pinned("before")
+      val top = lps.search("merge").head._2
+      InvertedIndex.deleteDocs(spark, dir, Seq(top).toDF("docid"))
+      pinned("after a delete")
+      assert(!lps.search("merge").exists(_._2 == top))
+      InvertedIndex.appendToStore(spark, dir, Seq(
+        "NEW-0001" -> "merge merge stream buffer",
+        "NEW-0002" -> "sorted runs merge").toDF("docid", "content"),
+        rowsPerFile = 50L)
+      pinned("after an append")
+      assert(lps.search("merge").exists(_._2 == "NEW-0001"))
+    }
+  }
+
+  test("block cache: 8 threads sending the same cold queries get the " +
+    "single-threaded answers, and each row group is decoded once") {
+    withAppendedTombstoned { dir =>
+      val qs = Seq("merge", "stream buffer", "sorted runs", "spill disk",
+        "buffer", "streams")
+      val one = new Routing.Blocks(1L << 30)
+      val single = new LoadedPointServer(spark, dir, blocks = one)
+      val want = qs.map(single.search)
+      val shared = new Routing.Blocks(1L << 30)
+      val server = new LoadedPointServer(spark, dir, blocks = shared)
+      val pool = java.util.concurrent.Executors.newFixedThreadPool(8)
+      try {
+        val start = new java.util.concurrent.CountDownLatch(1)
+        val answers = (1 to 8).map(_ => pool.submit(
+          new java.util.concurrent.Callable[Seq[Seq[(Long, String, Double)]]] {
+            def call() = { start.await(); qs.map(server.search) }
+          }))
+        start.countDown()
+        answers.foreach(a =>
+          assert(a.get(120, java.util.concurrent.TimeUnit.SECONDS) == want))
+      } finally pool.shutdown()
+      assert(shared.decoded == one.decoded,
+        s"${shared.decoded} decodes under 8 threads, ${one.decoded} in one")
     }
   }
 }
